@@ -36,6 +36,12 @@ object GraftSession {
       // Spark 4 rejects without this (session-level setup, not a loader
       // side effect — see Tables.events for the conversion)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // generated-code cache: at Spark's default of 100 classes, one
+      // one-row CO2 day (load, harmonize, analytics: about 145 distinct
+      // generated classes, measured on a 52-year history) evicts its own
+      // classes and recompiles all of them every day. At 1000, the
+      // steady-state day compiles only what per-run plan shapes make new.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** Get-or-create and register the SQL-callable function surface. */
   def get(master: String = s"local[$cpus]"): SparkSession = {

@@ -87,6 +87,7 @@ object Timeit {
       // static pre-execution dump cannot show (guide §7.2)
       if (sys.env.get("SPARK_GRAFT_FINAL_PLAN").contains("1")) {
         try {
+          spark.sparkContext.setJobDescription(s"finalplan:$name")
           val df = fn(spark, sfDir)
           df.queryExecution.executedPlan.execute().count()
           java.nio.file.Files.writeString(

@@ -69,7 +69,8 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
     df.withColumn(ACTION, lit(action))
       .withColumn(IS_UPDATE, lit(isUpdate))
       .withColumn(ROW_ID, concat(half("graft_rowid_h1"), half("graft_rowid_h2")))
-      .withColumn(BATCH_ID, lit(batchId))
+      // a reference, not a literal: each batch reuses the compiled write
+      .withColumn(BATCH_ID, graft.plans.expressions.runValue(batchId))
   }
 
   /** Producer side: record a batch of changes. Returns the batch id. */

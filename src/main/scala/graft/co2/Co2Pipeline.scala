@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.changefeed.ChangeFeed
 import graft.functions.Co2Functions
 import graft.operators.{MergeInto, OrderedLag}
+import graft.plans.expressions.runTimestamp
 import graft.storage.VersionedTable
 
 /** The full incremental pipeline — raw → harmonized → analytics — with the
@@ -103,7 +104,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       .filter(col(ChangeFeed.ACTION) === "INSERT")
       .drop(ChangeFeed.metaColumns: _*)
 
-    val batchTs = current_timestamp() // evaluated once per merge batch below
+    val batchTs = runTimestamp() // one instant per merge batch
     val source = pending
       .withColumn("DATE",
         to_date(concat_ws("-",
@@ -152,7 +153,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       .collect().head
     val minCo2 = mmRow.getDouble(0)
     val maxCo2 = mmRow.getDouble(1)
-    val batchTs = current_timestamp()
+    val batchTs = runTimestamp()
 
     // daily: lag over date order (partitioned+stitched, exact global result)
     val daily = OrderedLag.byDate(
@@ -200,8 +201,12 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       MergeInto(spark, weeklyStats, weekly, Seq("WEEK_START"),
         checkDuplicateKeys = false)
     })
-    val dr = Await.result(dF, Duration.Inf)
-    val wr = Await.result(wF, Duration.Inf)
+    // await BOTH before surfacing a failure, so no merge commit is still
+    // in flight once this method has thrown
+    val dT = Await.ready(dF, Duration.Inf).value.get
+    val wT = Await.ready(wF, Duration.Inf).value.get
+    for (d <- dT.failed; w <- wT.failed) d.addSuppressed(w)
+    val (dr, wr) = (dT.get, wT.get)
 
     s"Analytics: daily ${dr.updated}u/${dr.inserted}i, weekly ${wr.updated}u/${wr.inserted}i"
   }
@@ -254,10 +259,6 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
   // -------------------------------------------------------------- sql -----
 
-  /** Register every layer as temp views (dots → underscores) plus the
-    * stream view with metadata columns, so `spark.sql` covers the
-    * reference's raw-SQL entry point (EP3).
-    */
   /** Register the warehouse as a real `spark.catalog` catalog: every layer
     * becomes addressable as `<name>.<SCHEMA>.<TABLE>` with SHOW TABLES /
     * DESCRIBE / SELECT / INSERT working as SQL text against the versioned
@@ -287,6 +288,10 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     VersionedTable(spark, s"$warehouseRoot/_TASKS", collectStats = false)
       .overwrite(tasks(schedule))
 
+  /** Register every layer as temp views (dots → underscores) plus the
+    * stream view with metadata columns, so `spark.sql` covers the
+    * reference's raw-SQL entry point (EP3).
+    */
   def registerViews(): Unit = {
     if (raw.exists) raw.read.createOrReplaceTempView("RAW_CO2_CO2_DATA")
     if (harmonized.exists) harmonized.read.createOrReplaceTempView("HARMONIZED_CO2_HARMONIZED_CO2")

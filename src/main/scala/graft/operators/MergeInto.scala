@@ -145,16 +145,17 @@ object MergeInto {
     val tgt = partitionBy match {
       case Some(p) =>
         // the LIMIT bounds the driver transfer even when the cap is blown:
-        // we fetch at most cap+1 values, never the full distinct set
-        val touched = src0.select(col(p)).distinct()
-          .limit(maxTouchedPartitions + 1).collect().map(_.get(0))
+        // we fetch at most cap+1 values, never the full distinct set. The
+        // string form names the value's partition dir.
+        val touchedRows = src0.select(col(p), col(p).cast("string")).distinct()
+          .limit(maxTouchedPartitions + 1).collect()
+        val touched = touchedRows.map(_.get(0))
         require(touched.length <= maxTouchedPartitions,
           s"merge source spans more than maxTouchedPartitions=" +
             s"$maxTouchedPartitions distinct '$p' values; a partition-" +
             "scoped merge collects one value per touched partition to the " +
             "driver, so either raise maxTouchedPartitions explicitly or " +
             "drop partitionBy to merge against the full target")
-        val full = target.read
         val touchedFilter =
           if (touched.exists(_ == null))
             col(p).isin(touched.filter(_ != null): _*) || col(p).isNull
@@ -163,7 +164,7 @@ object MergeInto {
           // partition-contract check: a source key living in an UNTOUCHED
           // target partition would be duplicated by this merge — scan the
           // untouched slice's key columns (column-pruned) and fail loudly.
-          val untouched = full.filter(!coalesce(touchedFilter, lit(false)))
+          val untouched = target.read.filter(!coalesce(touchedFilter, lit(false)))
             .select(keys.map(c => col(c).as(s"t_$c")): _*)
           val cond = keys.map(k => col(s"t_$k") <=> col(k)).reduce(_ && _)
           val bad = untouched.join(src0.select(keys.map(col): _*), cond, "left_semi")
@@ -175,7 +176,10 @@ object MergeInto {
                 "the partition column is not functionally determined by the " +
                 "merge keys; merging would duplicate these keys")
         }
-        full.filter(touchedFilter)
+        if (validatePartitionKeys || touched.exists(_ == null))
+          target.read.filter(touchedFilter)
+        else // only the touched partitions' files are opened
+          target.readPartitions(p, touchedRows.map(_.getString(1)).toSeq)
       case None => target.read
     }
     require(tgt.columns.sorted.sameElements(src0.columns.sorted),

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -495,6 +496,24 @@ object expressions {
     override def prettyName: String = "lang_id"
   }
 
+  /** A per-run constant (a batch id, a batch timestamp) that reaches the
+    * generated code as a reference object, not as an inlined Java literal,
+    * so the next run's plan generates the same code and reuses the
+    * compiled class. Not foldable, or constant folding would make it a
+    * literal again. Keep real literals where a predicate must push down to
+    * Parquet.
+    */
+  case class RunValue(value: Long, dataType: DataType) extends LeafExpression {
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("runValue", value, "java.lang.Long")
+      ev.copy(code = code"final long ${ev.value} = $ref.longValue();",
+        isNull = FalseLiteral)
+    }
+  }
+
   // ----- Column wrappers ---------------------------------------------------
 
   private def col(e: Expression): Column = ColumnBridge.column(e)
@@ -537,4 +556,12 @@ object expressions {
   def bloomMightContain(c: Column,
       bf: org.apache.spark.util.sketch.BloomFilter): Column =
     col(BloomMightContain(ex(c), bf))
+  /** `v` as a BIGINT (or, with `dt`, any long-backed type) [[RunValue]]. */
+  def runValue(v: Long, dt: DataType = LongType): Column = col(RunValue(v, dt))
+  /** This instant as a TIMESTAMP [[RunValue]] (`current_timestamp()` fixed
+    * at call time).
+    */
+  def runTimestamp(): Column = runValue(
+    org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(
+      java.time.Instant.now()), TimestampType)
 }

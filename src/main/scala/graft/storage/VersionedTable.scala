@@ -1,7 +1,12 @@
 package graft.storage
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, not, struct, when}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -16,7 +21,7 @@ import java.nio.charset.StandardCharsets
   * Layout:
   * {{{
   *   root/
-  *     _commits/00000001.json       // {"version":1,"partcol":"year","parts":[{"dir":...,"vals":[...]}],"offsets":{...}}
+  *     _commits/00000001.json       // {"version":1,"partcol":"year","parts":[{"dir":...,"vals":[...],"files":[...]}],"offsets":{...}}
   *     v_00000001_3fa9c1d2/ ...     // data dir; name is UNIQUE per attempt
   * }}}
   *
@@ -37,6 +42,10 @@ import java.nio.charset.StandardCharsets
   *    part directories are never opened. Shadowed values are pruned at read
   *    time: parts written partitioned carry hive-style `_pt=<value>` dirs,
   *    so the anti-filter is partition PRUNING, not a scan filter.
+  *  - Each part's commit entry lists its data files (path, length, mtime),
+  *    so a read plans its scan from the commit alone: no directory listing,
+  *    no Spark listing job. Parts committed before file lists existed are
+  *    read by listing their dirs, as before.
   */
 final class VersionedTable(spark: SparkSession, val root: String,
                            collectStats: Boolean = true,
@@ -48,10 +57,12 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * values in every earlier part. `stats` = zone-map (min, max) per
     * column, harvested from the part's parquet footers at commit time
     * (empty for pre-zone-map commits and stat-less columns — absent stats
-    * simply mean "never skip this part").
+    * simply mean "never skip this part"). `files` = the part's data files
+    * as written (None for parts committed before file lists were recorded).
     */
   case class Part(dir: String, vals: Seq[String],
-                  stats: Map[String, (String, String)] = Map.empty)
+                  stats: Map[String, (String, String)] = Map.empty,
+                  files: Option[Seq[VersionedTable.DataFile]] = None)
 
   case class State(version: Long, partitionCol: Option[String],
                    parts: Seq[Part], offsets: Map[String, Long],
@@ -80,7 +91,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       .filter(_.getName.endsWith(".json"))
     if (files.isEmpty) return None
     val latest = files.maxBy(p => p.getName.stripSuffix(".json").toLong)
-    Some(parseState(readString(latest)))
+    Some(readCommitFile(latest))
   }
 
   def read: DataFrame = state match {
@@ -145,7 +156,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   def stateAt(version: Long): Option[State] = {
     val p = new Path(commitsDir, f"$version%08d.json")
-    if (fs.exists(p)) Some(parseState(readString(p))) else None
+    if (fs.exists(p)) Some(readCommitFile(p)) else None
   }
 
   /** Time-travel read (`VERSION AS OF`): table contents exactly as commit
@@ -310,11 +321,77 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   private def parquetRead(s: State, paths: Seq[String]): DataFrame =
     s.schemaDdl match {
-      case Some(d) =>
-        val relaxed = StructType(StructType.fromDDL(d).map(_.copy(nullable = true)))
-        spark.read.schema(relaxed).parquet(paths: _*)
+      case Some(d) => spark.read.schema(relaxed(d)).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
+
+  private def relaxed(ddl: String): StructType =
+    StructType(StructType.fromDDL(ddl).map(_.copy(nullable = true)))
+
+  /** One scan over slices of parts, each a part with its live `_pt` values
+    * (None = the whole part). Parts whose commit lists their files share a
+    * single relation built from those lists: its file index finds every
+    * directory in a pre-filled status cache, so building the DataFrame
+    * lists nothing and starts no Spark job, however many partition dirs
+    * it spans. Parts committed without a list are read by listing.
+    */
+  private def slicesRead(s: State,
+                         slices: Seq[(Part, Option[Seq[String]])]): DataFrame = {
+    val (listed, unlisted) =
+      slices.partition(_._1.files.isDefined && s.schemaDdl.isDefined)
+    val legacy = unlisted.map { case (p, live) =>
+      val dir = partPath(p.dir)
+      parquetRead(s, live.fold(Seq(dir))(_.map(v => s"$dir/$PT=$v")))
+    }
+    (Option.when(listed.nonEmpty)(listedRead(s, listed)).toSeq ++ legacy)
+      .reduce(_ unionByName _)
+  }
+
+  private def listedRead(s: State,
+                         slices: Seq[(Part, Option[Seq[String]])]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // in slice order, and name order within a part, like a listing read
+    val leafDirs: Seq[(Path, Array[FileStatus])] = slices.flatMap { case (p, live) =>
+      val raw = new Path(partPath(p.dir))
+      val pfs = raw.getFileSystem(conf)
+      val dir = pfs.makeQualified(raw)
+      val blockSize = pfs.getDefaultBlockSize(dir)
+      p.files.get.toArray
+        .map(f => new FileStatus(f.length, false, 1, blockSize, f.mtime,
+          new Path(dir, f.path)))
+        .groupBy(_.getPath.getParent)
+        .filter { case (d, _) =>
+          live.forall(_.contains(d.getName.stripPrefix(s"$PT=")))
+        }
+        .toSeq.sortBy(_._1.getName)
+    }
+    val byDir = leafDirs.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byDir.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, leafDirs.map(_._1), Map.empty,
+      None, cache, Some(PartitionSpec.emptySpec))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      PartitionSpec.emptySpec.partitionColumns, relaxed(s.schemaDdl.get), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The data files of a freshly written part dir, relative to it (`_pt=`
+    * subdirs included). Names Spark's file index skips — `_`/`.` prefixes:
+    * markers, checksums, bloom sidecars — are left out, as a listing read
+    * would leave them out.
+    */
+  private def dataFiles(dir: Path): Seq[VersionedTable.DataFile] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) Nil
+      else if (st.isDirectory)
+        dataFiles(st.getPath).map(f => f.copy(path = s"$name/${f.path}"))
+      else Seq(VersionedTable.DataFile(name, st.getLen, st.getModificationTime))
+    }.sortBy(_.path)
 
   /** Zone-map harvest for a freshly written part: driver-side parquet
     * footer reads only (the write already produced the stats); failures
@@ -433,40 +510,44 @@ final class VersionedTable(spark: SparkSession, val root: String,
 
   private def readState(s: State): DataFrame = readState(s, _ => true)
 
-  private def readState(s: State, keep: Part => Boolean): DataFrame = {
+  /** Live rows of the kept parts; `wanted` narrows partitioned parts to
+    * the `_pt` dir values it accepts (raw, hive-escaped).
+    */
+  private def readState(s: State, keep: Part => Boolean,
+                        wanted: String => Boolean = _ => true): DataFrame = {
     val kept = s.parts.filter(keep)
     if (kept.isEmpty)
       // every part zone-map-pruned: an empty relation with the schema
       return emptyRelation(s)
     val anyPartitioned = s.parts.exists(_.vals.nonEmpty)
     if (!anyPartitioned)
-      return parquetRead(s, kept.map(p => partPath(p.dir)))
+      return slicesRead(s, kept.map(_ -> None))
     val pcol = s.partitionCol.getOrElse(
       throw new IllegalStateException(s"partitioned parts but no partcol at $root"))
     // Later parts shadow earlier ones. Partitioned parts are pruned by PATH
-    // (only live `_pt=<v>` subdirs are even listed — the data files inside
-    // carry the full original schema, so no partition-column inference is
+    // (only live `_pt=<v>` subdirs are read — the data files inside carry
+    // the full original schema, so no partition-column inference is
     // involved); legacy unpartitioned parts fall back to an exact
     // anti-filter on the real column.
-    val slices = s.parts.zipWithIndex.map { case (p, i) =>
+    val slices = Seq.newBuilder[(Part, Option[Seq[String]])]
+    val filtered = Seq.newBuilder[DataFrame]
+    s.parts.zipWithIndex.foreach { case (p, i) =>
       // shadowing MUST consider every later part, including zone-pruned
       // ones — a pruned later part still overwrote these partition values
       val shadowed = s.parts.drop(i + 1).flatMap(_.vals).toSet
-      if (!keep(p)) null
+      if (!keep(p)) ()
       else if (p.vals.nonEmpty) {
-        val live = p.vals.filterNot(shadowed)
-        if (live.isEmpty) null
-        else parquetRead(s, live.map(v => s"${partPath(p.dir)}/$PT=$v"))
-      } else if (shadowed.isEmpty) {
-        parquetRead(s, Seq(partPath(p.dir)))
-      } else {
-        val vals = shadowed.toSeq.map(hiveUnescape)
-        parquetRead(s, Seq(partPath(p.dir)))
-          .filter(not(ptKey(col(pcol)).isin(vals: _*)))
-      }
-    }.filter(_ != null)
-    if (slices.isEmpty) emptyRelation(s)
-    else slices.reduce(_ unionByName _)
+        val live = p.vals.filterNot(shadowed).filter(wanted)
+        if (live.nonEmpty) slices += p -> Some(live)
+      } else if (shadowed.isEmpty) slices += p -> None
+      else filtered += slicesRead(s, Seq(p -> None)).filter(not(ptKey(col(pcol))
+        .isin(shadowed.toSeq.map(ExternalCatalogUtils.unescapePathName): _*)))
+    }
+    val listed = slices.result()
+    val all = Option.when(listed.nonEmpty)(slicesRead(s, listed)).toSeq ++
+      filtered.result()
+    if (all.isEmpty) emptyRelation(s)
+    else all.reduce(_ unionByName _)
   }
 
   /** Zero-row relation carrying the table schema (all parts pruned). */
@@ -497,6 +578,21 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val s = stateAt(version).getOrElse(
       throw new IllegalStateException(s"no version $version at $root"))
     readWhereState(s, cond)
+  }
+
+  /** Live rows of the partitions whose `partitionCol` value, cast to
+    * string, is in `values` (non-NULL). When every part is committed
+    * partition-scoped on that column, only those partitions' files are
+    * read; otherwise this is a filtered full read.
+    */
+  def readPartitions(partitionCol: String, values: Seq[String]): DataFrame = {
+    val s = state.getOrElse(
+      throw new IllegalStateException(s"table at $root has no committed data"))
+    if (s.partitionCol.contains(partitionCol) && s.parts.forall(_.vals.nonEmpty)) {
+      // the dir name Spark's partitioned write gives each value
+      val dirs = values.map(ExternalCatalogUtils.getPartitionValueString).toSet
+      readState(s, _ => true, dirs)
+    } else readCommitted(s).filter(ptKey(col(partitionCol)).isin(values: _*))
   }
 
   private def readWhereState(s: State, cond: Column): DataFrame = {
@@ -558,14 +654,13 @@ final class VersionedTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Offsets keys land in the regex-parsed commit JSON: structural bytes
-    * would corrupt the offsets blob and silently break exactly-once
-    * replay detection, so reject them at the door.
+  /** Offsets keys are plain names, with no quote, backslash or brace: the
+    * contract every existing commit log was written under.
     */
   private def requireValidOffsetKey(k: String): Unit =
     require(k.nonEmpty && !k.exists(c => c == '"' || c == '\\' || c == '}'),
       s"offsets key '$k' contains one of \" \\ } — " +
-        "those corrupt the regex-parsed commit log")
+        "offsets keys must be plain names")
 
   /** Runs a metadata-only commit body, retrying on a lost OCC claim; each
     * attempt re-reads state, so offsets merge over whatever the winner
@@ -803,7 +898,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
       if (!fs.rename(new Path(s"$stage/$rd"), new Path(s"$root/$dirName")))
         throw new java.io.IOException(
           s"rename of clustered range $rd to $dirName failed at $root")
-      Part(dirName, Seq.empty, partStats(s"$root/$dirName"))
+      Part(dirName, Seq.empty, partStats(s"$root/$dirName"),
+        Some(dataFiles(new Path(s"$root/$dirName"))))
     }.toSeq
     fs.delete(new Path(stage), true)
     // preserve a recorded partition column (reachable with zero valued
@@ -867,7 +963,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val version = s.version + 1
     val attempt = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val dirName = f"v_$version%08d_$attempt"
-    transform(parquetRead(s, touched.map(p => partPath(p.dir))))
+    transform(slicesRead(s, touched.map(_ -> None)))
       .write.mode("overwrite").parquet(s"$root/$dirName")
     // a transform can delete every row of the touched parts — an empty
     // write still produces a zero-row parquet file, so check the footers'
@@ -876,7 +972,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val rows = ZoneMaps.totalRows(spark.sparkContext.hadoopConfiguration,
       fs, new Path(s"$root/$dirName"))
     val newParts =
-      if (rows != 0L) Seq(Part(dirName, Seq.empty, partStats(s"$root/$dirName")))
+      if (rows != 0L) Seq(Part(dirName, Seq.empty, partStats(s"$root/$dirName"),
+        Some(dataFiles(new Path(s"$root/$dirName")))))
       else { fs.delete(new Path(s"$root/$dirName"), true); Seq.empty }
     try writeCommit(version,
       State(version, s.partitionCol, untouched ++ newParts, s.offsets,
@@ -983,7 +1080,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       if (newParts.isEmpty)
         readCommitted(s2).limit(0).withColumn(ACTION, lit("INSERT"))
       else
-        parquetRead(s2, newParts.map(p => partPath(p.dir)))
+        slicesRead(s2, newParts.map(_ -> None))
           .withColumn(ACTION, lit("INSERT"))
     } else {
       // align the old snapshot to the NEW schema before diffing — an
@@ -1018,7 +1115,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       throw new IllegalStateException(s"no table at $root"))
     val tgt = new VersionedTable(spark, targetRoot)
     require(!tgt.exists, s"clone target $targetRoot already exists")
-    val absParts = s.parts.map(p => tgt.Part(partPath(p.dir), p.vals, p.stats))
+    val absParts = s.parts.map(p => tgt.Part(partPath(p.dir), p.vals, p.stats, p.files))
     tgt.writeCommit(1L,
       tgt.State(1L, s.partitionCol, absParts, s.offsets, s.schemaDdl))
     tgt
@@ -1102,17 +1199,18 @@ final class VersionedTable(spark: SparkSession, val root: String,
       // the values this part contains = the hive dirs it produced (an FS
       // listing, no extra Spark job). Stored RAW (hive-escaped) so read
       // can reconstruct the subdir paths verbatim.
-      val vals = fs.listStatus(new Path(dataDir)).map(_.getPath.getName)
+      val files = dataFiles(new Path(dataDir))
+      val vals = files.map(_.path.takeWhile(_ != '/'))
         .filter(_.startsWith(s"$PT="))
         .map(_.stripPrefix(s"$PT="))
-        .toSeq.sorted
+        .distinct.sorted
       if (vals.isEmpty) {
         // dynamic partitionBy of an EMPTY batch writes no data files at
         // all — referencing the dir would make every later read fail, so
         // commit version + offsets with the parts unchanged instead
         fs.delete(new Path(dataDir), true)
         None
-      } else Some(Part(partName, vals, partStats(dataDir)))
+      } else Some(Part(partName, vals, partStats(dataDir), Some(files)))
     }
 
     val newPart = mode match {
@@ -1120,7 +1218,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
       case Commit.Rewrite(Some(pcol)) => writePartitioned(pcol)
       case _ =>
         df.write.mode("overwrite").parquet(dataDir)
-        Some(Part(partName, Seq.empty, partStats(dataDir)))
+        Some(Part(partName, Seq.empty, partStats(dataDir),
+          Some(dataFiles(new Path(dataDir)))))
     }
 
     def stateFor(prev: Option[State], version: Long): State = {
@@ -1209,19 +1308,6 @@ final class VersionedTable(spark: SparkSession, val root: String,
     throw new IllegalStateException("unreachable")
   }
 
-  private def hiveUnescape(s: String): String = {
-    // partitionBy hive-escapes special chars as %XX in directory names
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
   private def writeCommit(version: Long, s: State): Unit = {
     fs.mkdirs(commitsDir)
     val path = new Path(commitsDir, f"$version%08d.json")
@@ -1256,64 +1342,72 @@ final class VersionedTable(spark: SparkSession, val root: String,
     finally in.close()
   }
 
-  // Tiny hand-rolled JSON for the fixed-shape state record (no extra deps).
+  private def readCommitFile(p: Path): State = {
+    val text = readString(p)
+    try parseState(text)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(s"malformed commit record $p", e)
+    }
+  }
+
+  // The commit record is JSON through Jackson's tree model (jackson-databind
+  // ships with Spark); records the earlier hand-rolled codec wrote, which
+  // carry no file lists, parse unchanged.
   private def renderState(s: State): String = {
-    def q(x: String) = "\"" + x + "\""
-    val parts = s.parts.map { p =>
-      val st =
-        if (p.stats.isEmpty) ""
-        else p.stats.toSeq.sortBy(_._1).map { case (n, (mn, mx)) =>
-          s"${q(n)}:[${q(mn)},${q(mx)}]"
-        }.mkString(""","stats":{""", ",", "}")
-      s"""{"dir":${q(p.dir)},"vals":${p.vals.map(q).mkString("[", ",", "]")}$st}"""
-    }.mkString("[", ",", "]")
-    val offs = s.offsets.toSeq.sortBy(_._1)
-      .map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
-    val pc = s.partitionCol.map(c => s""""partcol":${q(c)},""").getOrElse("")
-    val sc = s.schemaDdl.map { d =>
-      s""","schema":${q(d.replace("\\", "\\\\").replace("\"", "\\\""))}"""
-    }.getOrElse("")
-    s"""{"version":${s.version},$pc"parts":$parts,"offsets":$offs$sc}"""
+    val o = VersionedTable.json.createObjectNode().put("version", s.version)
+    s.partitionCol.foreach(c => o.put("partcol", c))
+    val parts = o.putArray("parts")
+    s.parts.foreach { p =>
+      val po = parts.addObject().put("dir", p.dir)
+      val vals = po.putArray("vals")
+      p.vals.foreach(v => vals.add(v))
+      if (p.stats.nonEmpty) {
+        val st = po.putObject("stats")
+        p.stats.toSeq.sortBy(_._1).foreach { case (n, (mn, mx)) =>
+          st.putArray(n).add(mn).add(mx)
+        }
+      }
+      p.files.foreach { files =>
+        val fa = po.putArray("files")
+        files.foreach(f => fa.addArray().add(f.path).add(f.length).add(f.mtime))
+      }
+    }
+    val offs = o.putObject("offsets")
+    s.offsets.toSeq.sortBy(_._1).foreach { case (k, v) => offs.put(k, v) }
+    s.schemaDdl.foreach(d => o.put("schema", d))
+    VersionedTable.json.writeValueAsString(o)
   }
 
   private def parseState(json: String): State = {
-    val version = """"version":(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
-    val pcol = """"partcol":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-    val partsBlob = """"parts":\[(.*)\],"offsets"""".r
-      .findFirstMatchIn(json).get.group(1)
-    val parts =
-      if (partsBlob.trim.isEmpty) Seq.empty
-      else if (!partsBlob.contains("{")) // legacy round-1 plain-string form
-        partsBlob.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq.map(Part(_, Seq.empty))
-      else
-        """\{"dir":"([^"]+)","vals":\[([^\]]*)\](?:,"stats":\{([^}]*)\})?\}""".r
-          .findAllMatchIn(partsBlob)
-          .map { m =>
-            // hive-escaping guarantees no raw quotes inside vals, so quoted
-            // tokens are unambiguous (commas inside values are fine)
-            val vals = """"([^"]*)"""".r.findAllMatchIn(m.group(2))
-              .map(_.group(1)).toSeq
-            val stats = Option(m.group(3)).map { blob =>
-              // stat values are percent-encoded: quote/backslash-free
-              """"([^"]*)":\["([^"]*)","([^"]*)"\]""".r.findAllMatchIn(blob)
-                .map(sm => sm.group(1) -> (sm.group(2), sm.group(3))).toMap
-            }.getOrElse(Map.empty[String, (String, String)])
-            Part(m.group(1), vals, stats)
-          }.toSeq
-    // keys may themselves contain ':' (e.g. "stream:q1") — match the
-    // quoted key and numeric value structurally, never split on ':'
-    val offsets = """"([^"]*)":(-?\d+)""".r
-      .findAllMatchIn(
-        """"offsets":\{([^}]*)\}""".r.findFirstMatchIn(json).get.group(1))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    val schemaDdl = """"schema":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    State(version, pcol, parts, offsets, schemaDdl)
+    import scala.jdk.CollectionConverters._
+    def elems(n: com.fasterxml.jackson.databind.JsonNode) =
+      n.elements.asScala.toSeq
+    val o = VersionedTable.json.readTree(json)
+    val parts = elems(o.get("parts")).map { p =>
+      if (p.isTextual) Part(p.asText, Seq.empty) // legacy round-1 plain-string form
+      else Part(p.get("dir").asText, elems(p.get("vals")).map(_.asText),
+        Option(p.get("stats")).map(_.properties.asScala.map { e =>
+          e.getKey -> (e.getValue.get(0).asText, e.getValue.get(1).asText)
+        }.toMap).getOrElse(Map.empty),
+        Option(p.get("files")).map(elems(_).map(f =>
+          VersionedTable.DataFile(f.get(0).asText, f.get(1).asLong, f.get(2).asLong))))
+    }
+    val offsets = o.get("offsets").properties.asScala
+      .map(e => e.getKey -> e.getValue.asLong).toMap
+    State(o.get("version").asLong, Option(o.get("partcol")).map(_.asText),
+      parts, offsets, Option(o.get("schema")).map(_.asText))
   }
 }
 
 object VersionedTable {
+  /** One data file of a part: `path` relative to the part dir. */
+  case class DataFile(path: String, length: Long, mtime: Long)
+
+  // earlier writers left control characters in schema DDL unescaped
+  private val json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
+
   /** One [[VersionedTable.history]] entry. `committedAtMs` is the commit
     * file's creation instant (epoch millis).
     */

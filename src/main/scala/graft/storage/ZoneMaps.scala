@@ -100,11 +100,11 @@ object ZoneMaps {
         }
       }
       dead.foreach(acc.remove)
-      // stat VALUES are percent-encoded, but column NAMES land raw in the
-      // regex-parsed commit JSON (renderState) — a name carrying '}' or '"'
-      // would truncate or mis-attribute the part's stats blob. Same policy
-      // as requireValidOffsetKey: skip such columns (stats are an
-      // optimization; skipping is always safe).
+      // stat VALUES are percent-encoded and column NAMES are kept plain:
+      // names carrying JSON-structural or control bytes (which once broke
+      // the regex-parsed commit log) get no stats. Same policy as
+      // requireValidOffsetKey; stats are an optimization, so skipping is
+      // always safe.
       acc.filterInPlace((n, _) =>
         n.nonEmpty && !n.exists(c =>
           c == '"' || c == '\\' || c == '{' || c == '}' ||

@@ -121,6 +121,40 @@ class Co2PipelineSpec extends AnyFunSuite {
       .head.getLong(0) == 0) // fully consumed
   }
 
+  test("steady-state one-row days compile almost no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = Files.createTempDirectory("co2_codegen_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2015, 1, 1)
+    val history = LocalDate.of(2020, 1, 1)
+    writeFeed(feed, start, history)
+    p.runPipeline(feed.toString)
+    // January 1-5: no feed gaps, so each run loads exactly one new row
+    val compiles = (1 to 5).map { d =>
+      writeFeed(feed, start, history.plusDays(d))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(p.runPipeline(feed.toString).head._2 == "loaded 1 rows")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(compiles.drop(2).forall(_ <= 15),
+      s"generated-code compiles per day: ${compiles.mkString(", ")}")
+  }
+
+  test("analytics awaits the weekly merge before rethrowing a daily failure") {
+    val dir = Files.createTempDirectory("co2_analytics_fail_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    writeFeed(feed, LocalDate.of(2020, 1, 1), LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    // a daily table of another shape: the daily merge fails at once
+    p.dailyStats.overwrite(Seq(1).toDF("X"))
+    val weeklyBefore = p.weeklyStats.state.get.version
+    intercept[IllegalArgumentException](p.analytics())
+    // the weekly merge had committed by the time analytics threw
+    assert(p.weeklyStats.state.get.version == weeklyBefore + 1)
+  }
+
   test("parseText tolerates 6th column, comments, malformed numerics") {
     val f = Files.createTempFile("noaa_", ".txt")
     Files.writeString(f,

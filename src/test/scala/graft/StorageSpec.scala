@@ -685,4 +685,137 @@ class StorageSpec extends AnyFunSuite {
       .orderBy("DATE").select("DATE", "PREV").collect().toSeq
     assert(got == want)
   }
+
+  // ---- reads built from the commit's file list ---------------------------
+
+  /** Spark jobs started while `body` runs, counted with a listener. Events
+    * reach listeners in order, so once a later marker job has been seen,
+    * every job `body` started has been seen too.
+    */
+  private def jobsStartedBy(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "jobs-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.contains(group + "-marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-marker"), "marker job never reached the listener")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** 40 YEAR partitions (above Spark's 32-path parallel-listing threshold),
+    * two of them shadowed by a later partition-scoped commit.
+    */
+  private def manyPartitions(root: String): VersionedTable = {
+    val t = VersionedTable(spark, root)
+    t.overwritePartitions((1970 until 2010).map(y => (y, y * 10L)).toDF("YEAR", "V"), "YEAR")
+    t.overwritePartitions(Seq((1980, -1L), (2005, -2L)).toDF("YEAR", "V"), "YEAR")
+    t
+  }
+
+  test("read of a >32-partition table starts no Spark job before an action") {
+    val t = manyPartitions(tmp() + "/many")
+    assert(t.state.get.parts.forall(_.files.isDefined))
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { df = t.read } == 0)
+    assert(jobsStartedBy(t.readVersion(1)) == 0)
+    assert(jobsStartedBy(t.readPartitions("YEAR", Seq("1980", "1999"))) == 0)
+    assert(df.count() == 40)
+  }
+
+  test("file-list read returns what spark.read.parquet over the live dirs returns") {
+    val root = tmp() + "/many_rows"
+    val t = manyPartitions(root)
+    val Seq(p1, p2) = t.state.get.parts
+    val liveDirs = p1.vals.filterNot(p2.vals.toSet).map(v => s"$root/${p1.dir}/_pt=$v") ++
+      p2.vals.map(v => s"$root/${p2.dir}/_pt=$v")
+    assert(liveDirs.size == 40)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("YEAR", "V").orderBy("YEAR").collect().toSeq
+    val want = rows(spark.read.parquet(liveDirs: _*))
+    assert(rows(t.read) == want)
+    assert(want.collect { case r if r.getInt(0) == 1980 => r.getLong(1) } == Seq(-1L))
+    // a partition-scoped read is the same rows narrowed to its values
+    assert(rows(t.readPartitions("YEAR", Seq("1980", "1999"))) ==
+      want.filter(r => Set(1980, 1999)(r.getInt(0))))
+  }
+
+  test("a commit record without file lists still reads, time-travels and takes commits") {
+    val root = tmp() + "/legacy"
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def put(path: String, text: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(path), false)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    // an append-committed table, laid out and recorded as the writer
+    // before file lists did it (stats and offsets included)
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$root/v_00000001_0a1b2c3d")
+    put(s"$root/_commits/00000001.json",
+      """{"version":1,"parts":[{"dir":"v_00000001_0a1b2c3d","vals":[],""" +
+        """"stats":{"k":["L:1","L:2"]}}],"offsets":{"stream:q1":3},""" +
+        """"schema":"k BIGINT NOT NULL,v STRING"}""")
+    val t = VersionedTable(spark, root)
+    val p0 = t.state.get.parts.head
+    assert(p0.files.isEmpty && p0.stats == Map("k" -> ("L:1", "L:2")))
+    assert(t.offsets == Map("stream:q1" -> 3L))
+    assert(t.read.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+    assert(t.append(Seq((3L, "c")).toDF("k", "v")) == 2L)
+    assert(t.state.get.parts.map(_.files.isDefined) == Seq(false, true))
+    assert(t.read.as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(t.readVersion(1).count() == 2)
+    assert(t.readWhere(col("k") === 3L).count() == 1)
+    assert(t.offsets == Map("stream:q1" -> 3L))
+
+    // a partition-committed table in the same format
+    val proot = tmp() + "/legacy_pt"
+    Seq((2019, 1L), (2020, 2L)).toDF("YEAR", "V")
+      .withColumn("_pt", col("YEAR").cast("string"))
+      .write.partitionBy("_pt").parquet(s"$proot/v_00000001_0a1b2c3d")
+    put(s"$proot/_commits/00000001.json",
+      """{"version":1,"partcol":"YEAR","parts":[{"dir":"v_00000001_0a1b2c3d",""" +
+        """"vals":["2019","2020"]}],"offsets":{},"schema":"YEAR INT NOT NULL,V BIGINT NOT NULL"}""")
+    val pt = VersionedTable(spark, proot)
+    val r = MergeInto(spark, pt, Seq((2020, 20L), (2021, 21L)).toDF("YEAR", "V"),
+      Seq("YEAR"), partitionBy = Some("YEAR"))
+    assert((r.updated, r.inserted, r.version) == (1L, 1L, 2L))
+    assert(pt.read.as[(Int, Long)].collect().toSet == Set((2019, 1L), (2020, 20L), (2021, 21L)))
+    assert(pt.readVersion(1).as[(Int, Long)].collect().toSet == Set((2019, 1L), (2020, 2L)))
+  }
+
+  test("parts written by cloneTo, compact, compactClustered and rewriteWhere carry file lists") {
+    val root = tmp()
+    def listed(t: VersionedTable): Boolean = t.state.get.parts.forall { p =>
+      val dir = if (p.dir.startsWith("/")) p.dir else s"${t.root}/${p.dir}"
+      p.files.exists(fs => fs.nonEmpty && fs.forall(f =>
+        new java.io.File(s"$dir/${f.path}").length() == f.length))
+    }
+    val t = VersionedTable(spark, s"$root/t")
+    t.overwrite((1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v"))
+    t.append((101 to 200).map(i => (i.toLong, s"v$i")).toDF("k", "v"))
+    val clone = t.cloneTo(s"$root/clone")
+    assert(listed(clone))
+    clone.compact()
+    assert(listed(clone) && clone.read.count() == 200)
+    t.compactClustered(Seq("k"), 4)
+    assert(t.state.get.parts.size == 4 && listed(t))
+    t.rewriteWhere(col("k") <= 10L)(_.filter(col("k") > 5L))
+    assert(listed(t) && t.read.count() == 195)
+    val pt = manyPartitions(s"$root/pt")
+    pt.compact()
+    assert(listed(pt) && pt.read.count() == 40)
+  }
 }
