@@ -8,16 +8,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.procedures
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{coalesce, col, count, desc, floor, lit, not}
+import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.changefeed.ChangeFeed
@@ -47,7 +46,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog {
 
   private var catalogName: String = _
-  private var root: String = _
+  private[sql] var root: String = _
 
   /** RBAC for this root — enforcement is active only when a session sets
     * `spark.graft.role` to a non-admin role (see [[GraftSecurity]]).
@@ -74,7 +73,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * and equality/IN SELECTs prune through them — the SQL opt-in is
     * `ALTER TABLE t SET TBLPROPERTIES ('graft.bloom.cols'='h,k')`.
     */
-  private def table(ident: Identifier) = {
+  private[sql] def table(ident: Identifier) = {
     val blooms = readProps(ident).get(GraftCatalog.BLOOM_COLS_PROP)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
@@ -199,8 +198,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case ac: TableChange.AddColumn =>
         require(ac.fieldNames.length == 1,
           "nested ADD COLUMN is not supported")
-        org.apache.spark.sql.types.StructField(
-          ac.fieldNames()(0), ac.dataType(), nullable = true)
+        StructField(ac.fieldNames()(0), ac.dataType(), nullable = true)
     }
     if (newFields.nonEmpty) table(ident).addColumns(newFields)
     val updated = changes.foldLeft(readProps(ident)) { (props, change) =>
@@ -281,563 +279,83 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   // --------------------------------------------------------- procedures --
-  // Table-maintenance verbs that have no ANSI DML shape, exposed through
-  // the DSv2 procedure surface (Spark 4 `CALL`):
+  // Verbs with no ANSI DML shape — table maintenance, streams, tasks, roles
+  // and the operator library — exposed through the DSv2 procedure surface
+  // (Spark 4 `CALL`), one [[Procedures]] registry entry each:
   //   CALL <cat>.system.compact(table => 'NS.T')        → new version
   //   CALL <cat>.system.vacuum('NS.T', retain_last => 2) → reclaim stats
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.isEmpty || namespace.sameElements(Array("system")))
-      Array("compact", "cluster", "zorder", "vacuum", "clone", "history",
-          "zonemaps", "create_stream", "describe_stream", "show_streams",
-          "show_tasks", "task_history", "create_task", "alter_task",
-          "drop_task", "execute_task", "run_due", "create_role", "drop_role",
-          "grant_privilege", "revoke_privilege", "show_grants", "show_roles",
-          "dedup_exact", "minhash_dedup", "substring_dedup", "ann_topk",
-          "decontaminate", "pmi_topk", "quality_filter", "bm25_topk",
-          "hybrid_topk", "drift_psi", "quantile_buckets", "scd2_apply",
-          "connected_components", "weighted_sample", "kmv_overlap",
-          "interleave", "proximity_topk", "pagerank", "triangle_counts",
-          "kcore", "audio_features", "data_card",
-          "incremental_card", "jdbc_ingest",
-          "link_predict", "chi2", "gini", "ks_test", "rank_eval",
-          "mutual_info", "wasserstein", "auc", "calibration",
-          "markov_stationary", "label_propagate",
-          "welch_t", "moments", "bootstrap_ci", "ridge", "coverage",
-          "pareto", "frequent_triples", "k_anonymity", "isotonic_fit",
-          "kaplan_meier", "weighted_quantile", "theil_sen",
-          "kendall_tau", "fleiss_kappa", "reconcile",
-          "profile")
-        .map(Identifier.of(Array("system"), _))
+      Procedures.names.map(Identifier.of(Array("system"), _)).toArray
     else Array.empty
 
-  override def loadProcedure(ident: Identifier): procedures.UnboundProcedure =
-    ident.name.toLowerCase match {
-      case "compact" => new CompactProcedure
-      case "cluster" => new ClusterProcedure
-      case "zorder"  => new ZorderProcedure
-      case "vacuum"  => new VacuumProcedure
-      case "clone"   => new CloneProcedure
-      case "history" => new HistoryProcedure
-      case "zonemaps" => new ZoneMapsProcedure
-      case "create_stream" => new CreateStreamProcedure
-      case "describe_stream" => new DescribeStreamProcedure
-      case "show_streams" => new ShowStreamsProcedure
-      case "show_tasks" => new ShowTasksProcedure
-      case "task_history" => new TaskHistoryProcedure
-      case "create_task" => new CreateTaskProcedure
-      case "alter_task" => new AlterTaskProcedure
-      case "drop_task" => new DropTaskProcedure
-      case "execute_task" => new ExecuteTaskProcedure
-      case "run_due" => new RunDueProcedure
-      case "create_role" => new CreateRoleProcedure
-      case "drop_role" => new DropRoleProcedure
-      case "grant_privilege" => new GrantPrivilegeProcedure
-      case "revoke_privilege" => new RevokePrivilegeProcedure
-      case "show_grants" => new ShowGrantsProcedure
-      case "show_roles" => new ShowRolesProcedure
-      case "dedup_exact" => new DedupExactProcedure
-      case "minhash_dedup" => new MinhashDedupProcedure
-      case "substring_dedup" => new SubstringDedupProcedure
-      case "ann_topk" => new AnnTopKProcedure
-      case "decontaminate" => new DecontaminateProcedure
-      case "pmi_topk" => new PmiTopKProcedure
-      case "quality_filter" => new QualityFilterProcedure
-      case "bm25_topk" => new Bm25TopKProcedure
-      case "hybrid_topk" => new HybridTopKProcedure
-      case "drift_psi" => new DriftPsiProcedure
-      case "quantile_buckets" => new QuantileBucketsProcedure
-      case "scd2_apply" => new Scd2ApplyProcedure
-      case "connected_components" => new ConnectedComponentsProcedure
-      case "weighted_sample" => new WeightedSampleProcedure
-      case "kmv_overlap" => new KmvOverlapProcedure
-      case "interleave" => new InterleaveProcedure
-      case "proximity_topk" => new ProximityTopKProcedure
-      case "pagerank" => new PageRankProcedure
-      case "triangle_counts" => new TriangleCountsProcedure
-      case "kcore" => new KCoreProcedure
-      case "audio_features" => new AudioFeaturesProcedure
-      case "data_card" => new DataCardProcedure
-      case "incremental_card" => new IncrementalCardProcedure
-      case "jdbc_ingest" => new JdbcIngestProcedure
-      case "link_predict" => new LinkPredictProcedure
-      case "chi2" => new Chi2Procedure
-      case "gini" => new GiniProcedure
-      case "ks_test" => new KsTestProcedure
-      case "rank_eval" => new RankEvalProcedure
-      case "mutual_info" => new MutualInfoProcedure
-      case "wasserstein" => new WassersteinProcedure
-      case "welch_t" => new WelchTProcedure
-      case "moments" => new MomentsProcedure
-      case "bootstrap_ci" => new BootstrapCiProcedure
-      case "ridge" => new RidgeProcedure
-      case "coverage" => new CoverageProcedure
-      case "pareto" => new ParetoProcedure
-      case "frequent_triples" => new FrequentTriplesProcedure
-      case "k_anonymity" => new KAnonymityProcedure
-      case "isotonic_fit" => new IsotonicFitProcedure
-      case "kaplan_meier" => new KaplanMeierProcedure
-      case "weighted_quantile" => new WeightedQuantileProcedure
-      case "theil_sen" => new TheilSenProcedure
-      case "kendall_tau" => new KendallTauProcedure
-      case "fleiss_kappa" => new FleissKappaProcedure
-      case "reconcile" => new ReconcileProcedure
-      case "auc" => new AucProcedure
-      case "calibration" => new CalibrationProcedure
-      case "markov_stationary" => new MarkovStationaryProcedure
-      case "label_propagate" => new LabelPropagateProcedure
-      case "profile" => new ProfileProcedure
-      case other => throw new IllegalArgumentException(
-        s"catalog $catalogName has no procedure '$other' " +
-          "(compact, cluster, zorder, vacuum, clone, history, zonemaps, " +
-          "create_stream, describe_stream, show_streams, show_tasks, " +
-          "task_history, create_task, alter_task, drop_task, execute_task, " +
-          "create_role, drop_role, grant_privilege, revoke_privilege, " +
-          "show_grants, show_roles, dedup_exact, minhash_dedup, " +
-          "substring_dedup, ann_topk, decontaminate, pmi_topk, " +
-          "quality_filter, bm25_topk, hybrid_topk, drift_psi, " +
-          "quantile_buckets, scd2_apply, connected_components, " +
-          "weighted_sample, kmv_overlap, interleave, proximity_topk, " +
-          "pagerank, data_card, profile)")
-    }
+  override def loadProcedure(ident: Identifier): procedures.UnboundProcedure = {
+    val name = ident.name.toLowerCase
+    Procedures.lookup(name).map(new RegisteredProcedure(_, this)).getOrElse(
+      throw new IllegalArgumentException(s"catalog $catalogName has no " +
+        s"procedure '$name' (${Procedures.names.mkString(", ")})"))
+  }
 
-  /** Parse a procedure's `NS.TABLE` argument; `mustExist` gates the
-    * existence check (target tables of CTAS-shaped procedures must NOT
-    * exist yet).
+  /** `NS.NAME` (or deeper) as an identifier; `what` names the argument in
+    * the error.
     */
-  private def resolveIdent(qualified: String, what: String,
-                           mustExist: Boolean = true): Identifier = {
+  private def qualifiedIdent(qualified: String, what: String): Identifier = {
     val parts = qualified.split("\\.").filter(_.nonEmpty)
-    require(parts.length >= 2,
-      s"procedure $what argument must be namespace-qualified, got '$qualified'")
-    val id = Identifier.of(parts.init, parts.last)
-    if (mustExist && !tableExists(id))
-      throw new NoSuchTableException(Seq(catalogName) ++ parts.toSeq)
-    id
+    require(parts.length >= 2, s"$what must be namespace-qualified, got '$qualified'")
+    Identifier.of(parts.init, parts.last)
   }
 
-  private def resolveVt(qualified: String): VersionedTable =
-    table(resolveIdent(qualified, "table"))
-
-  private def rowsScan(schema: StructType, out: Array[InternalRow]): java.util.Iterator[Scan] =
-    java.util.List.of[Scan](new LocalScan {
-      override def readSchema(): StructType = schema
-      override def rows(): Array[InternalRow] = out
-    }).iterator()
-
-  private def singleRowScan(schema: StructType, row: InternalRow): java.util.Iterator[Scan] =
-    rowsScan(schema, Array(row))
-
-  private abstract class MaintenanceProcedure
-      extends procedures.UnboundProcedure with procedures.BoundProcedure {
-    override def bind(inputType: StructType): procedures.BoundProcedure = this
-    override def isDeterministic: Boolean = false
-  }
-
-  private final class CompactProcedure extends MaintenanceProcedure {
-    override def name(): String = "compact"
-    override def description(): String =
-      "rewrite a graft table's live rows into one part (OPTIMIZE)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("table", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val version = resolveVt(input.getUTF8String(0).toString).compact()
-      singleRowScan(
-        StructType(Seq(org.apache.spark.sql.types.StructField("version",
-          org.apache.spark.sql.types.LongType, nullable = false))),
-        InternalRow(version))
-    }
-  }
-
-  private final class ClusterProcedure extends MaintenanceProcedure {
-    override def name(): String = "cluster"
-    override def description(): String =
-      "rewrite live rows into n_parts range-clustered parts on cluster_by " +
-        "(Snowflake clustering keys / OPTIMIZE ZORDER analogue) - makes " +
-        "zone maps tight for range predicates on those columns"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("table", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("cluster_by", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("n_parts", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("16").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val cols = input.getUTF8String(1).toString.split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq
-      val version = resolveVt(input.getUTF8String(0).toString)
-        .compactClustered(cols, input.getInt(2))
-      singleRowScan(
-        StructType(Seq(org.apache.spark.sql.types.StructField("version",
-          org.apache.spark.sql.types.LongType, nullable = false))),
-        InternalRow(version))
-    }
-  }
-
-  private final class ZorderProcedure extends MaintenanceProcedure {
-    override def name(): String = "zorder"
-    override def description(): String =
-      "rewrite live rows into n_parts Morton-curve-ordered parts on 2-3 " +
-        "zorder_by columns (OPTIMIZE ZORDER BY) - zone maps bound a " +
-        "rectangle in EVERY listed dimension, so multi-dimension box " +
-        "predicates prune multiplicatively"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("table", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("zorder_by", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("n_parts", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("16").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val cols = input.getUTF8String(1).toString.split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq
-      val version = resolveVt(input.getUTF8String(0).toString)
-        .compactZorder(cols, input.getInt(2))
-      singleRowScan(
-        StructType(Seq(org.apache.spark.sql.types.StructField("version",
-          org.apache.spark.sql.types.LongType, nullable = false))),
-        InternalRow(version))
-    }
-  }
-
-  private final class VacuumProcedure extends MaintenanceProcedure {
-    override def name(): String = "vacuum"
-    override def description(): String =
-      "reclaim data dirs unreachable from the newest retain_last commits"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("table", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("retain_last", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("2").build(),
-        procedures.ProcedureParameter
-          .in("max_age_ms", org.apache.spark.sql.types.LongType)
-          .defaultValue("-1").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val vt = resolveVt(input.getUTF8String(0).toString)
-      // time-based retention wins when given (Delta RETAIN n HOURS parity)
-      val deleted =
-        if (input.getLong(2) >= 0L) vt.vacuumOlderThan(input.getLong(2))
-        else vt.vacuum(retainLast = input.getInt(1))
-      singleRowScan(
-        StructType(Seq(org.apache.spark.sql.types.StructField("deleted_dirs",
-          org.apache.spark.sql.types.IntegerType, nullable = false))),
-        InternalRow(deleted.size))
-    }
-  }
-
-  private final class CloneProcedure extends MaintenanceProcedure {
-    override def name(): String = "clone"
-    override def description(): String =
-      "zero-copy clone: CALL <cat>.system.clone('NS.SRC', 'NS.DST') — " +
-        "O(1) metadata commit, Snowflake CREATE TABLE ... CLONE semantics"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("source", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("target", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val src = resolveVt(input.getUTF8String(0).toString)
-      val tgtName = input.getUTF8String(1).toString
-      val parts = tgtName.split("\\.").filter(_.nonEmpty)
-      require(parts.length >= 2,
-        s"clone target must be namespace-qualified, got '$tgtName'")
-      val tgtId = Identifier.of(parts.init, parts.last)
-      if (tableExists(tgtId))
-        throw new TableAlreadyExistsException(
-          Seq(catalogName) ++ parts.toSeq)
-      fs.mkdirs(new Path(dirFor(tgtId)).getParent)
-      val cloned = src.cloneTo(dirFor(tgtId))
-      singleRowScan(
-        StructType(Seq(org.apache.spark.sql.types.StructField("version",
-          org.apache.spark.sql.types.LongType, nullable = false))),
-        InternalRow(cloned.state.get.version))
-    }
-  }
-
-  private final class HistoryProcedure extends MaintenanceProcedure {
-    override def name(): String = "history"
-    override def description(): String =
-      "commit history of a graft table (DESCRIBE HISTORY parity), metadata-only"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("table", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      val h = resolveVt(input.getUTF8String(0).toString).history
-      rowsScan(
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("committed_at", TimestampType, nullable = false),
-          StructField("operation", StringType, nullable = false),
-          StructField("n_parts", IntegerType, nullable = false))),
-        h.map(c => InternalRow(c.version, c.committedAtMs * 1000L,
-          org.apache.spark.unsafe.types.UTF8String.fromString(c.operation),
-          c.nParts)).toArray)
-    }
-  }
-
-  private final class ZoneMapsProcedure extends MaintenanceProcedure {
-    override def name(): String = "zonemaps"
-    override def description(): String =
-      "per-part (column, min, max) zone-map stats of a graft table - the " +
-        "skipping metadata readWhere and pruned DELETE/UPDATE consult; " +
-        "metadata-only"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("table", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val vt = resolveVt(input.getUTF8String(0).toString)
-      val rows = vt.state.toSeq.flatMap(_.parts).flatMap { p =>
-        p.stats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-          InternalRow(UTF8String.fromString(p.dir), UTF8String.fromString(c),
-            UTF8String.fromString(graft.storage.ZoneMaps.display(mn)),
-            UTF8String.fromString(graft.storage.ZoneMaps.display(mx)))
-        }
-      }
-      rowsScan(
-        StructType(Seq(
-          StructField("part", StringType, nullable = false),
-          StructField("column", StringType, nullable = false),
-          StructField("min", StringType, nullable = false),
-          StructField("max", StringType, nullable = false))),
-        rows.toArray)
-    }
-  }
-
-  /** `CREATE STREAM <s> ON TABLE <t>` parity as a procedure: types the
-    * stream directory so SHOW TABLES lists it and SELECT reads the net
-    * unconsumed window. `consumer` names the table whose committed offset
-    * (under key = the stream's qualified name) defines "consumed" — the
-    * engine's offsets live with the consuming transaction (MergeInto),
-    * exactly like Snowflake advancing a stream inside the consuming DML.
-    * The change log itself materializes on first publish.
+  /** Resolves a procedure's `NS.TABLE` argument `param` for `use`: the
+    * table must (or must not) exist, and the caller must hold the grants
+    * `use` names on it.
     */
-  private final class CreateStreamProcedure extends MaintenanceProcedure {
-    override def name(): String = "create_stream"
-    override def description(): String =
-      "define a STREAM object over a change-log dir (CREATE STREAM parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("stream", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("source", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("consumer", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("mode", org.apache.spark.sql.types.StringType)
-          .defaultValue("'DEFAULT'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val stream = input.getUTF8String(0).toString
-      val source = input.getUTF8String(1).toString
-      val consumer = input.getUTF8String(2).toString
-      require(stream.split("\\.").count(_.nonEmpty) >= 2,
-        s"stream name must be namespace-qualified, got '$stream'")
-      GraftCatalog.defineStream(spark, root,
-        dir = stream.split("\\.").filter(_.nonEmpty).mkString("/"),
-        offsetKey = stream, sourceTable = source,
-        consumerDir = consumer.split("\\.").filter(_.nonEmpty).mkString("/"),
-        mode = input.getUTF8String(3).toString)
-      singleRowScan(
-        StructType(Seq(
-          StructField("stream", StringType, nullable = false),
-          StructField("status", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString(stream),
-          UTF8String.fromString("created")))
+  private[sql] def tableArg(qualified: String, param: String,
+                            use: TableUse): (Identifier, VersionedTable) = {
+    val id = qualifiedIdent(qualified, s"procedure $param argument")
+    val exists = tableExists(id)
+    def fullName = Seq(catalogName) ++ id.namespace.toSeq :+ id.name
+    use.mustExist match {
+      case Some(true) =>
+        if (!exists) throw new NoSuchTableException(fullName)
+      case mustExist =>
+        if (!namespaceExists(id.namespace))
+          throw new NoSuchNamespaceException(id.namespace.toSeq)
+        if (exists && mustExist.contains(false))
+          throw new TableAlreadyExistsException(fullName)
     }
+    use.privileges(exists).foreach(
+      security.requirePriv(spark, _, id.namespace.toSeq, id.name))
+    (id, table(id))
   }
 
-  private final class DescribeStreamProcedure extends MaintenanceProcedure {
-    override def name(): String = "describe_stream"
-    override def description(): String =
-      "DESCRIBE STREAM parity: name, mode, tracked table, consumer, " +
-        "committed offset, and SYSTEM$STREAM_HAS_DATA - metadata-only"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("stream", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val qualified = input.getUTF8String(0).toString
-      val parts = qualified.split("\\.").filter(_.nonEmpty)
-      require(parts.length >= 2,
-        s"stream argument must be namespace-qualified, got '$qualified'")
-      val id = Identifier.of(parts.init, parts.last)
-      val props = readProps(id)
-      require(props.get(GraftCatalog.STREAM_PROP).contains("true"),
-        s"'$qualified' is not a stream (no ${GraftCatalog.STREAM_PROP} property)")
-      val offsetKey = props.getOrElse(GraftCatalog.STREAM_KEY_PROP, qualified)
-      val feed = ChangeFeed(spark, offsetKey, dirFor(id))
-      val consumed = streamConsumedOffset(props, offsetKey)
-      val hasData = feed.log.exists && feed.hasData(consumed)
-      def s(v: String) = UTF8String.fromString(v)
-      singleRowScan(
-        StructType(Seq(
-          StructField("name", StringType, nullable = false),
-          StructField("mode", StringType, nullable = false),
-          StructField("table_name", StringType, nullable = true),
-          StructField("consumer", StringType, nullable = true),
-          StructField("consumed_offset", LongType, nullable = false),
-          StructField("has_data", BooleanType, nullable = false))),
-        InternalRow(s(qualified), s(props.getOrElse("mode", "DEFAULT")),
-          props.get(GraftCatalog.STREAM_SOURCE_PROP).map(s).orNull,
-          props.get(GraftCatalog.STREAM_CONSUMER_PROP).map(s).orNull,
-          consumed, hasData))
-    }
+  /** A STREAM object's properties, committed offset and
+    * `SYSTEM$STREAM_HAS_DATA` — an O(1) offset comparison, no scan.
+    */
+  private[sql] def streamStatus(qualified: String): (Map[String, String], Long, Boolean) = {
+    val id = qualifiedIdent(qualified, "stream")
+    val props = readProps(id)
+    require(props.get(GraftCatalog.STREAM_PROP).contains("true"),
+      s"'$qualified' is not a stream (no ${GraftCatalog.STREAM_PROP} property)")
+    val offsetKey = props.getOrElse(GraftCatalog.STREAM_KEY_PROP, qualified)
+    val feed = ChangeFeed(spark, offsetKey, dirFor(id))
+    val consumed = streamConsumedOffset(props, offsetKey)
+    (props, consumed, feed.log.exists && feed.hasData(consumed))
   }
 
-  /** SHOW STREAMS parity: every stream-typed directory in the warehouse
+  /** Every STREAM object in the warehouse: qualified name → properties
     * (one metadata file read per table dir — DDL-scale, not data-scale).
     */
-  private final class ShowStreamsProcedure extends MaintenanceProcedure {
-    override def name(): String = "show_streams"
-    override def description(): String =
-      "list the STREAM objects in this warehouse (SHOW STREAMS parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] = Array.empty
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      def s(v: String) = UTF8String.fromString(v)
-      val rows = listNamespaces().flatMap { ns =>
-        val nsPath = new Path((Seq(root) ++ ns.toSeq).mkString("/"))
-        fs.listStatus(nsPath).filter(_.isDirectory).toSeq.flatMap { d =>
-          val id = Identifier.of(ns, d.getPath.getName)
-          val props = readProps(id)
-          if (!props.get(GraftCatalog.STREAM_PROP).contains("true")) None
-          else Some(InternalRow(
-            s((ns.toSeq :+ id.name).mkString(".")),
-            s(props.getOrElse("mode", "DEFAULT")),
-            props.get(GraftCatalog.STREAM_SOURCE_PROP).map(s).orNull))
-        }
-      }.sortBy(_.getUTF8String(0).toString)
-      rowsScan(
-        StructType(Seq(
-          StructField("name", StringType, nullable = false),
-          StructField("mode", StringType, nullable = false),
-          StructField("table_name", StringType, nullable = true))),
-        rows)
+  private[sql] def streams: Seq[(String, Map[String, String])] =
+    listNamespaces().toSeq.flatMap { ns =>
+      val nsPath = new Path((Seq(root) ++ ns.toSeq).mkString("/"))
+      fs.listStatus(nsPath).filter(_.isDirectory).toSeq.flatMap { d =>
+        val props = readProps(Identifier.of(ns, d.getPath.getName))
+        if (props.get(GraftCatalog.STREAM_PROP).contains("true"))
+          Some((ns.toSeq :+ d.getPath.getName).mkString(".") -> props)
+        else None
+      }
     }
-  }
-
-  /** SHOW TASKS parity (orchestrate_tasks.sql.j2:81): lists the task DAG a
-    * pipeline persisted into the warehouse `_TASKS` table
-    * (Co2Pipeline.defineTasks). Bounded: tasks are DDL-scale metadata.
-    */
-  private final class ShowTasksProcedure extends MaintenanceProcedure {
-    override def name(): String = "show_tasks"
-    override def description(): String =
-      "list the task DAG registered in this warehouse (SHOW TASKS parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] = Array.empty
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      // columns 4-6 (r8): scheduler state — suspended flag, last fire
-      // from _TASK_RUNS, and the computed next occurrence (strictly after
-      // the last fire, at/after now; interval = last_fire + n, null until
-      // baselined; null for suspended tasks and AFTER-children)
-      val schema = StructType(Seq(
-        StructField("name", StringType, nullable = false),
-        StructField("schedule", StringType, nullable = true),
-        StructField("condition", StringType, nullable = true),
-        StructField("suspended", org.apache.spark.sql.types.BooleanType,
-          nullable = false),
-        StructField("last_fire", TimestampType, nullable = true),
-        StructField("next_fire", TimestampType, nullable = true),
-        // r9: SUSPEND_TASK_AFTER_NUM_FAILURES state — the configured
-        // threshold (0 = never) and the running consecutive-failure count
-        StructField("suspend_after_failures", IntegerType, nullable = false),
-        StructField("consec_failures", IntegerType, nullable = false)))
-      val runs = readTaskRuns()
-      val now = java.time.Instant.now()
-      def micros(i: java.time.Instant): Long =
-        i.getEpochSecond * 1000000L + i.getNano / 1000L
-      val rows =
-        if (!tasksVt.exists) Array.empty[InternalRow]
-        else readTasks().toArray.map { t =>
-          val last = runs.get(t.name.toUpperCase)
-          val next: Option[java.time.Instant] =
-            if (t.suspended) None
-            else t.schedule.flatMap(TaskSchedule.parse).flatMap {
-              case c: CronSchedule =>
-                val floor = last.map(_.plusSeconds(60)) match {
-                  case Some(l) if l.isAfter(now) => l
-                  case _ => now
-                }
-                c.earliestAtOrAfter(floor)
-              case IntervalSchedule(n) =>
-                last.map(_.plusSeconds(n * 60))
-            }
-          def s(v: Option[String]) =
-            v.map(UTF8String.fromString).orNull
-          InternalRow(UTF8String.fromString(t.name), s(t.schedule),
-            s(t.condition), t.suspended,
-            last.map(micros).map(Long.box).orNull,
-            next.map(micros).map(Long.box).orNull,
-            t.suspendAfter, t.consecFailures)
-        }
-      rowsScan(schema, rows)
-    }
-  }
-
-  /** TASK_HISTORY() parity (orchestrate_tasks.sql.j2:64-75): most recent
-    * runs from the warehouse `_TASK_HISTORY` log, newest first, bounded by
-    * `limit` (Snowflake's information-schema default of 100).
-    */
-  private final class TaskHistoryProcedure extends MaintenanceProcedure {
-    override def name(): String = "task_history"
-    override def description(): String =
-      "recent pipeline task runs, newest first (TASK_HISTORY parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("limit", org.apache.spark.sql.types.IntegerType)
-        .defaultValue("100").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val schema = StructType(Seq(
-        StructField("task_name", StringType, nullable = false),
-        StructField("state", StringType, nullable = false),
-        StructField("scheduled_time", TimestampType, nullable = false),
-        StructField("error_message", StringType, nullable = true)))
-      val vt = VersionedTable(spark, s"$root/_TASK_HISTORY")
-      val rows =
-        if (!vt.exists) Array.empty[InternalRow]
-        else {
-          // the Scala pipeline's runLog predates ERROR_MESSAGE — absent
-          // column reads as null (same tolerance as readTasks)
-          var df = vt.read
-          if (!df.columns.contains("ERROR_MESSAGE"))
-            df = df.withColumn("ERROR_MESSAGE", lit(null).cast("string"))
-          df.select("TASK_NAME", "STATE", "SCHEDULED_TIME", "ERROR_MESSAGE")
-            .orderBy(org.apache.spark.sql.functions.desc("SCHEDULED_TIME"))
-            .limit(math.max(0, input.getInt(0)))
-            .collect().map { r =>
-              InternalRow(
-                UTF8String.fromString(r.getString(0)),
-                UTF8String.fromString(r.getString(1)),
-                // fromJavaTimestamp keeps the nanos field; getTime*1000
-                // would truncate to millisecond precision
-                org.apache.spark.sql.catalyst.util.DateTimeUtils
-                  .fromJavaTimestamp(r.getTimestamp(2)),
-                if (r.isNullAt(3)) null
-                else UTF8String.fromString(r.getString(3)))
-            }
-        }
-      rowsScan(schema, rows)
-    }
-  }
 
   // ----------------------------------------------------------- task DDL ---
 
@@ -851,10 +369,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * parameter (0 = never auto-suspend); `consecFailures` is the running
     * count of consecutive failed runs behind it, reset on any success.
     */
-  private case class TaskDef(name: String, schedule: Option[String],
-                             condition: Option[String], body: Option[String],
-                             suspended: Boolean, suspendAfter: Int = 0,
-                             consecFailures: Int = 0)
+  private[sql] case class TaskDef(name: String, schedule: Option[String],
+                                  condition: Option[String], body: Option[String],
+                                  suspended: Boolean, suspendAfter: Int = 0,
+                                  consecFailures: Int = 0)
 
   private def tasksVt =
     VersionedTable(spark, s"$root/_TASKS", collectStats = false)
@@ -863,7 +381,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * (NAME/SCHEDULE/CONDITION) that [[graft.co2.Co2Pipeline.defineTasks]]
     * writes — absent BODY/SUSPENDED mean body-less, active tasks.
     */
-  private def readTasks(): Seq[TaskDef] = {
+  private[sql] def readTasks(): Seq[TaskDef] = {
     val vt = tasksVt
     if (!vt.exists) return Nil
     var df = vt.read
@@ -887,8 +405,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
   }
 
-  private def writeTasks(ts: Seq[TaskDef]): Unit = {
-    import org.apache.spark.sql.types._
+  private[sql] def writeTasks(ts: Seq[TaskDef]): Unit = {
     val schema = StructType(Seq(
       StructField("NAME", StringType, nullable = false),
       StructField("SCHEDULE", StringType, nullable = true),
@@ -903,7 +420,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     tasksVt.overwrite(spark.createDataFrame(rows.asJava, schema))
   }
 
-  private val StreamCond =
+  private[sql] val StreamCond =
     """(?i)\s*SYSTEM\$STREAM_HAS_DATA\(\s*'([^']+)'\s*\)\s*""".r
 
   /** Evaluates a task WHEN condition — the only supported shape is the
@@ -911,17 +428,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * (orchestrate_tasks.sql.j2:40), an O(1) offset comparison, no scan.
     */
   private def conditionHolds(cond: String): Boolean = cond match {
-    case StreamCond(stream) =>
-      val parts = stream.split("\\.").filter(_.nonEmpty)
-      require(parts.length >= 2,
-        s"stream in WHEN must be namespace-qualified, got '$stream'")
-      val id = Identifier.of(parts.init, parts.last)
-      val props = readProps(id)
-      require(props.get(GraftCatalog.STREAM_PROP).contains("true"),
-        s"'$stream' in WHEN is not a stream object")
-      val offsetKey = props.getOrElse(GraftCatalog.STREAM_KEY_PROP, stream)
-      val feed = ChangeFeed(spark, offsetKey, dirFor(id))
-      feed.log.exists && feed.hasData(streamConsumedOffset(props, offsetKey))
+    case StreamCond(stream) => streamStatus(stream)._3
     case other => throw new IllegalArgumentException(
       s"unsupported task WHEN condition '$other' - only " +
         "SYSTEM$STREAM_HAS_DATA('<ns>.<stream>') is supported")
@@ -941,198 +448,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  /** `CREATE [OR REPLACE] TASK` parity (orchestrate_tasks.sql.j2:28-48):
-    * persists name + SCHEDULE/AFTER + WHEN condition + SQL body as a
-    * catalog object. Like Snowflake, a new task is created SUSPENDED and
-    * must be resumed (`alter_task`) before a DAG run reaches it —
-    * `execute_task` on the task itself always runs it.
-    */
-  private final class CreateTaskProcedure extends MaintenanceProcedure {
-    override def name(): String = "create_task"
-    override def description(): String =
-      "define a TASK object: schedule or AFTER edge, optional " +
-        "SYSTEM$STREAM_HAS_DATA condition, SQL body (CREATE TASK parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] = {
-      import org.apache.spark.sql.types._
-      Array(
-        procedures.ProcedureParameter.in("task", StringType).build(),
-        procedures.ProcedureParameter.in("body", StringType).build(),
-        procedures.ProcedureParameter.in("schedule", StringType)
-          .defaultValue("''").build(),
-        procedures.ProcedureParameter.in("after", StringType)
-          .defaultValue("''").build(),
-        procedures.ProcedureParameter.in("condition", StringType)
-          .defaultValue("''").build(),
-        procedures.ProcedureParameter.in("or_replace", BooleanType)
-          .defaultValue("true").build(),
-        procedures.ProcedureParameter.in("suspend_after_failures", IntegerType)
-          .defaultValue("0").build())
-    }
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val taskName = input.getUTF8String(0).toString.trim
-      val body = input.getUTF8String(1).toString
-      val schedule = input.getUTF8String(2).toString.trim
-      val after = input.getUTF8String(3).toString.trim
-      val condition = input.getUTF8String(4).toString.trim
-      val orReplace = input.getBoolean(5)
-      val suspendAfter = input.getInt(6)
-      require(suspendAfter >= 0,
-        s"task $taskName: suspend_after_failures must be >= 0, got $suspendAfter")
-      require(taskName.nonEmpty, "task name must be non-empty")
-      require(body.trim.nonEmpty, s"task $taskName needs a SQL body")
-      require(schedule.isEmpty || after.isEmpty,
-        s"task $taskName: SCHEDULE and AFTER are mutually exclusive")
-      if (condition.nonEmpty)
-        require(StreamCond.pattern.matcher(condition).matches(),
-          s"task $taskName: WHEN condition must be " +
-            s"SYSTEM$$STREAM_HAS_DATA('<ns>.<stream>'), got '$condition'")
-      val existing = readTasks()
-      require(orReplace || !existing.exists(_.name.equalsIgnoreCase(taskName)),
-        s"task $taskName already exists (use or_replace => true)")
-      if (after.nonEmpty)
-        require(existing.exists(_.name.equalsIgnoreCase(after)),
-          s"task $taskName: AFTER parent '$after' does not exist")
-      // a schedule must parse NOW — a typo'd cron that silently never
-      // fires is the worst failure mode a scheduler can have
-      if (schedule.nonEmpty)
-        require(TaskSchedule.parse(schedule).nonEmpty,
-          s"task $taskName: SCHEDULE must be 'USING CRON <m> <h> <dom> " +
-            s"<mon> <dow> <tz>' or '<n> MINUTE', got '$schedule'")
-      val sched =
-        if (after.nonEmpty) Some(s"AFTER $after")
-        else if (schedule.nonEmpty) Some(schedule)
-        else None
-      val t = TaskDef(taskName, sched,
-        Option(condition).filter(_.nonEmpty), Some(body), suspended = true,
-        suspendAfter = suspendAfter)
-      writeTasks(existing.filterNot(_.name.equalsIgnoreCase(taskName)) :+ t)
-      singleRowScan(
-        StructType(Seq(
-          StructField("task", StringType, nullable = false),
-          StructField("status", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString(taskName),
-          UTF8String.fromString("created (suspended)")))
-    }
-  }
-
-  /** `ALTER TASK <t> SUSPEND|RESUME` parity (orchestrate_tasks.sql.j2:19-21,
-    * 53-55). `if_exists => true` makes a missing task a no-op, mirroring
-    * the template's `ALTER TASK IF EXISTS`.
-    */
-  private final class AlterTaskProcedure extends MaintenanceProcedure {
-    override def name(): String = "alter_task"
-    override def description(): String =
-      "SUSPEND or RESUME a TASK object (ALTER TASK parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] = {
-      import org.apache.spark.sql.types._
-      Array(
-        procedures.ProcedureParameter.in("task", StringType).build(),
-        procedures.ProcedureParameter.in("action", StringType).build(),
-        procedures.ProcedureParameter.in("if_exists", BooleanType)
-          .defaultValue("false").build())
-    }
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val taskName = input.getUTF8String(0).toString.trim
-      val action = input.getUTF8String(1).toString.trim.toUpperCase
-      val ifExists = input.getBoolean(2)
-      require(action == "SUSPEND" || action == "RESUME",
-        s"alter_task action must be SUSPEND or RESUME, got '$action'")
-      val existing = readTasks()
-      val found = existing.exists(_.name.equalsIgnoreCase(taskName))
-      require(found || ifExists, s"task $taskName does not exist")
-      val status = if (!found) "not found (if_exists)" else {
-        writeTasks(existing.map(t =>
-          if (t.name.equalsIgnoreCase(taskName))
-            // RESUME forgives the failure streak, like Snowflake's
-            // auto-suspend counter resetting on ALTER TASK RESUME
-            t.copy(suspended = action == "SUSPEND",
-              consecFailures =
-                if (action == "RESUME") 0 else t.consecFailures)
-          else t))
-        action.toLowerCase + "d"
-      }
-      singleRowScan(
-        StructType(Seq(
-          StructField("task", StringType, nullable = false),
-          StructField("status", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString(taskName),
-          UTF8String.fromString(status)))
-    }
-  }
-
-  /** `DROP TASK` parity. Children whose AFTER edge pointed at the dropped
-    * task become standalone (a DAG run no longer reaches them) — same
-    * orphaning Snowflake allows once the parent is suspended and dropped.
-    */
-  private final class DropTaskProcedure extends MaintenanceProcedure {
-    override def name(): String = "drop_task"
-    override def description(): String = "drop a TASK object (DROP TASK parity)"
-    override def parameters(): Array[procedures.ProcedureParameter] = {
-      import org.apache.spark.sql.types._
-      Array(
-        procedures.ProcedureParameter.in("task", StringType).build(),
-        procedures.ProcedureParameter.in("if_exists", BooleanType)
-          .defaultValue("false").build())
-    }
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val taskName = input.getUTF8String(0).toString.trim
-      val ifExists = input.getBoolean(1)
-      val existing = readTasks()
-      val found = existing.exists(_.name.equalsIgnoreCase(taskName))
-      require(found || ifExists, s"task $taskName does not exist")
-      if (found)
-        writeTasks(existing.filterNot(_.name.equalsIgnoreCase(taskName)))
-      singleRowScan(
-        StructType(Seq(
-          StructField("task", StringType, nullable = false),
-          StructField("status", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString(taskName),
-          UTF8String.fromString(if (found) "dropped" else "not found (if_exists)")))
-    }
-  }
-
-  /** `EXECUTE TASK <root>` parity (orchestrate_tasks.sql.j2:63): runs the
-    * named task, then its AFTER-descendants in dependency order. Mirrors
-    * Snowflake's manual-trigger semantics: the named root runs even if
-    * suspended (the standard way to test a DAG), while a suspended child
-    * stops its subtree; a false WHEN gate or a failed body also stops the
-    * subtree (a child never runs before its parent succeeded). Every
-    * visited task appends (TASK_NAME, STATE, SCHEDULED_TIME) to
-    * `_TASK_HISTORY`, the table `task_history` reads.
-    */
-  private final class ExecuteTaskProcedure extends MaintenanceProcedure {
-    override def name(): String = "execute_task"
-    override def description(): String =
-      "run a TASK and its AFTER-descendants in dependency order " +
-        "(EXECUTE TASK parity); records each outcome in task history"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("task", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val rootName = input.getUTF8String(0).toString.trim
-      val all = readTasks()
-      val rootTask = all.find(_.name.equalsIgnoreCase(rootName)).getOrElse(
-        throw new IllegalArgumentException(s"task $rootName does not exist"))
-      val results = runTaskDag(rootTask, all, rootEvenIfSuspended = true,
-        scheduledTime = new java.sql.Timestamp(System.currentTimeMillis()))
-      rowsScan(
-        StructType(Seq(
-          StructField("task_name", StringType, nullable = false),
-          StructField("state", StringType, nullable = false))),
-        results.toArray.map { case (t, s) =>
-          InternalRow(UTF8String.fromString(t), UTF8String.fromString(s))
-        })
-    }
-  }
-
   /** Shared DAG executor behind `execute_task` (manual trigger — the root
     * runs even if suspended) and `run_due` (scheduler tick — a suspended
     * root never fires). Runs the root then AFTER-descendants in
@@ -1148,11 +463,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * (written to `_TASKS`) and lifted by `alter_task RESUME`, which also
     * resets the counter.
     */
-  private def runTaskDag(rootTask: TaskDef, all: Seq[TaskDef],
+  private[sql] def runTaskDag(rootTask: TaskDef, all: Seq[TaskDef],
                          rootEvenIfSuspended: Boolean,
                          scheduledTime: java.sql.Timestamp)
       : Seq[(String, String)] = {
-    import org.apache.spark.sql.types._
     val results = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val visited = scala.collection.mutable.Set[String]()
     def children(parent: String): Seq[TaskDef] = all
@@ -1235,22 +549,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ------------------------------------------- scheduler (run_due) --
 
-  /** Per-task last-fire watermarks backing [[RunDueProcedure]] —
+  /** Per-task last-fire watermarks backing `run_due` —
     * (TASK_NAME, LAST_FIRE). Tiny (one row per scheduled task),
     * overwritten whole on each tick.
     */
   private def taskRunsVt =
     VersionedTable(spark, s"$root/_TASK_RUNS", collectStats = false)
 
-  private def readTaskRuns(): Map[String, java.time.Instant] = {
+  private[sql] def readTaskRuns(): Map[String, java.time.Instant] = {
     val vt = taskRunsVt
     if (!vt.exists) return Map.empty
     vt.read.collect().map(r => r.getString(0) ->
       r.getTimestamp(1).toInstant).toMap
   }
 
-  private def writeTaskRuns(m: Map[String, java.time.Instant]): Unit = {
-    import org.apache.spark.sql.types._
+  private[sql] def writeTaskRuns(m: Map[String, java.time.Instant]): Unit = {
     val schema = StructType(Seq(
       StructField("TASK_NAME", StringType, nullable = false),
       StructField("LAST_FIRE", TimestampType, nullable = false)))
@@ -1258,2023 +571,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       m.toSeq.sortBy(_._1)
         .map { case (n, i) => Row(n, java.sql.Timestamp.from(i)) }.asJava,
       schema))
-  }
-
-  /** The scheduler tick Snowflake runs internally: evaluates every
-    * non-suspended ROOT task's SCHEDULE (`USING CRON …` / `<n> MINUTE`,
-    * [[TaskSchedule]]) against a clock and fires due DAGs through the
-    * same executor as `execute_task`. The clock is an explicit `now`
-    * parameter (ISO-8601 instant or 'yyyy-MM-dd HH:mm[:ss]' UTC; empty =
-    * wall clock) so schedules are testable and replayable — a driver
-    * loop becomes `while true { CALL run_due(); sleep }`.
-    *
-    * Semantics, per task:
-    *   - first tick ever seen registers a BASELINE watermark and does
-    *     NOT fire (Snowflake: a resumed task first runs at the NEXT
-    *     occurrence, never a past one);
-    *   - cron: fires iff an occurrence exists in (last_fire, now]; the
-    *     watermark advances to the OCCURRENCE time, so N missed ticks
-    *     collapse to one catch-up run, and sub-schedule-resolution
-    *     ticks are idempotent;
-    *   - interval: fires iff now ≥ last_fire + n minutes; watermark
-    *     advances to `now`.
-    */
-  private final class RunDueProcedure extends MaintenanceProcedure {
-    override def name(): String = "run_due"
-    override def description(): String =
-      "scheduler tick: fire every non-suspended root task whose " +
-        "SCHEDULE is due at `now` (default: wall clock); missed " +
-        "occurrences collapse to one run"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("now", org.apache.spark.sql.types.StringType)
-        .defaultValue("''").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
-      val nowStr = input.getUTF8String(0).toString.trim
-      val now: java.time.Instant =
-        if (nowStr.isEmpty) java.time.Instant.now()
-        else try java.time.Instant.parse(nowStr)
-        catch {
-          case _: java.time.format.DateTimeParseException =>
-            val lt = java.time.LocalDateTime.parse(
-              nowStr.replace(' ', 'T'))
-            lt.toInstant(java.time.ZoneOffset.UTC)
-        }
-      val all = readTasks()
-      var runs = readTaskRuns()
-      val results = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      all.foreach { t =>
-        t.schedule.flatMap(TaskSchedule.parse) match {
-          case None => // AFTER-child or unscheduled: never fires directly
-          case Some(_) if t.suspended =>
-            results += t.name -> "SKIPPED (suspended)"
-          case Some(sched) =>
-            val key = t.name.toUpperCase
-            runs.get(key) match {
-              case None =>
-                runs += key -> now
-                results += t.name -> "BASELINE (first tick registered)"
-              case Some(last) => sched match {
-                case c: CronSchedule =>
-                  c.latestAtOrBefore(now) match {
-                    case Some(occ) if occ.isAfter(last) =>
-                      runs += key -> occ
-                      results ++= runTaskDag(t, all,
-                        rootEvenIfSuspended = false,
-                        scheduledTime = java.sql.Timestamp.from(occ))
-                    case _ =>
-                      results += t.name -> "NOT DUE"
-                  }
-                case i: IntervalSchedule =>
-                  if (i.due(last, now)) {
-                    runs += key -> now
-                    results ++= runTaskDag(t, all,
-                      rootEvenIfSuspended = false,
-                      scheduledTime = java.sql.Timestamp.from(now))
-                  } else results += t.name -> "NOT DUE"
-              }
-            }
-        }
-      }
-      writeTaskRuns(runs)
-      rowsScan(
-        StructType(Seq(
-          StructField("task_name", StringType, nullable = false),
-          StructField("state", StringType, nullable = false))),
-        results.toArray.map { case (t, s) =>
-          InternalRow(UTF8String.fromString(t), UTF8String.fromString(s))
-        })
-    }
-  }
-
-  // -------------------------------------------------- security (RBAC) --
-  // GRANT parity with the reference's table_grants.sql.j2:13-27: roles are
-  // catalog objects, privileges are granted per table / schema-star /
-  // account-star, and `SET spark.graft.role = <r>` is USE ROLE. See
-  // GraftSecurity for the model and enforcement points.
-
-  private final class CreateRoleProcedure extends MaintenanceProcedure {
-    override def name(): String = "create_role"
-    override def description(): String =
-      "CREATE ROLE parity: register a role in this catalog's _GRANTS store"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("role", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val role = input.getUTF8String(0).toString
-      security.createRole(spark, role)
-      singleRowScan(
-        StructType(Seq(StructField("role", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString(role.trim.toUpperCase)))
-    }
-  }
-
-  private final class DropRoleProcedure extends MaintenanceProcedure {
-    override def name(): String = "drop_role"
-    override def description(): String =
-      "DROP ROLE parity: remove a role and cascade-drop its grants"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("role", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val role = input.getUTF8String(0).toString
-      security.dropRole(spark, role)
-      singleRowScan(
-        StructType(Seq(StructField("dropped", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString(role.trim.toUpperCase)))
-    }
-  }
-
-  /** `GRANT <privilege> ON <target> TO ROLE <role>`: privilege one of
-    * SELECT / INSERT / UPDATE / DELETE / ALL (the four DML) / OWNERSHIP
-    * (drop, alter, rename) / CREATE TABLE (schema-scoped); target
-    * `NS.TABLE`, `NS.*`, or `*`.
-    */
-  private final class GrantPrivilegeProcedure extends MaintenanceProcedure {
-    override def name(): String = "grant_privilege"
-    override def description(): String =
-      "GRANT parity: grant a privilege on a table/schema-star/account-star " +
-        "target to a role (table_grants.sql.j2 GRANT INSERT,UPDATE ON TABLE)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("role", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("privilege", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("on", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      security.grant(spark, input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString, input.getUTF8String(2).toString)
-      singleRowScan(
-        StructType(Seq(StructField("status", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString("GRANTED")))
-    }
-  }
-
-  private final class RevokePrivilegeProcedure extends MaintenanceProcedure {
-    override def name(): String = "revoke_privilege"
-    override def description(): String =
-      "REVOKE parity: remove a previously granted privilege from a role"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter
-          .in("role", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("privilege", org.apache.spark.sql.types.StringType).build(),
-        procedures.ProcedureParameter
-          .in("on", org.apache.spark.sql.types.StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      security.revoke(spark, input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString, input.getUTF8String(2).toString)
-      singleRowScan(
-        StructType(Seq(StructField("status", StringType, nullable = false))),
-        InternalRow(UTF8String.fromString("REVOKED")))
-    }
-  }
-
-  private final class ShowGrantsProcedure extends MaintenanceProcedure {
-    override def name(): String = "show_grants"
-    override def description(): String =
-      "SHOW GRANTS [TO ROLE r] parity: list grants, optionally one role's"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter
-        .in("role", org.apache.spark.sql.types.StringType)
-        .defaultValue("''").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val roleArg = Option(input.getUTF8String(0)).map(_.toString.trim)
-        .filter(_.nonEmpty)
-      val schema = StructType(Seq(
-        StructField("role", StringType, nullable = false),
-        StructField("privilege", StringType, nullable = false),
-        StructField("target", StringType, nullable = false)))
-      rowsScan(schema,
-        security.showGrants(spark, roleArg)
-          .sortBy(g => (g.role, g.target, g.priv)).toArray.map(g =>
-            InternalRow(UTF8String.fromString(g.role),
-              UTF8String.fromString(g.priv), UTF8String.fromString(g.target))))
-    }
-  }
-
-  private final class ShowRolesProcedure extends MaintenanceProcedure {
-    override def name(): String = "show_roles"
-    override def description(): String = "SHOW ROLES parity"
-    override def parameters(): Array[procedures.ProcedureParameter] = Array.empty
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      rowsScan(
-        StructType(Seq(StructField("role", StringType, nullable = false))),
-        security.listRoles(spark).toArray.map(r =>
-          InternalRow(UTF8String.fromString(r))))
-    }
-  }
-
-  // ------------------------------------ LLM-pipeline operator procedures --
-  // SQL-text routes for the flagship extension operators (SURVEY §2.11):
-  //   CALL <cat>.system.dedup_exact(source => 'NS.DOCS', target => 'NS.D2',
-  //                                 text_col => 'text', id_col => 'doc_id')
-  // Dedup verbs are CTAS-shaped (read source, write survivors to a NEW
-  // table) and enforce the same grants as their DML equivalents: SELECT
-  // on the source, CREATE TABLE on the target's schema.
-
-  /** Shared CTAS tail of the dedup procedures. */
-  private def materializeResult(source: String, target: String)
-      (op: DataFrame => DataFrame): java.util.Iterator[Scan] = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val srcId = resolveIdent(source, "source")
-    security.requirePriv(spark, "SELECT", srcId.namespace.toSeq, srcId.name)
-    val tgtId = resolveIdent(target, "target", mustExist = false)
-    if (!namespaceExists(tgtId.namespace))
-      throw new NoSuchNamespaceException(tgtId.namespace.toSeq)
-    if (tableExists(tgtId))
-      throw new TableAlreadyExistsException(
-        Seq(catalogName) ++ tgtId.namespace.toSeq :+ tgtId.name)
-    security.requirePriv(spark, "CREATE TABLE", tgtId.namespace.toSeq,
-      tgtId.name)
-    // cache the operator result so the row count does not re-run the
-    // dedup (or re-scan the written table) a second time
-    val result = op(table(srcId).read).cache()
-    try {
-      val n = result.count()
-      table(tgtId).overwrite(result)
-      rowsScan(
-        StructType(Seq(
-          StructField("target", StringType, nullable = false),
-          StructField("n_rows", org.apache.spark.sql.types.LongType,
-            nullable = false))),
-        Array(InternalRow(UTF8String.fromString(target), n)))
-    } finally result.unpersist(blocking = false)
-  }
-
-  private final class DedupExactProcedure extends MaintenanceProcedure {
-    override def name(): String = "dedup_exact"
-    override def description(): String =
-      "exact content dedup: keep the smallest-id row per normalized text; " +
-        "survivors land in a NEW table (CTAS-shaped)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val (textCol, idCol) =
-        (input.getUTF8String(2).toString, input.getUTF8String(3).toString)
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        df.join(graft.operators.Dedup.exact(df, textCol, idCol)
-          .select(col(idCol)), Seq(idCol), "left_semi")
-      }
-    }
-  }
-
-  private final class MinhashDedupProcedure extends MaintenanceProcedure {
-    override def name(): String = "minhash_dedup"
-    override def description(): String =
-      "MinHash/LSH near-dup removal with exact Jaccard rescore " +
-        "(graft.operators.Dedup.minhashDedupExact); survivors land in a " +
-        "NEW table (CTAS-shaped)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("threshold", org.apache.spark.sql.types.DoubleType)
-          .defaultValue("0.7").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Dedup.minhashDedupExact(df,
-          input.getUTF8String(2).toString, input.getUTF8String(3).toString,
-          threshold = input.getDouble(4))
-      }
-  }
-
-  private final class SubstringDedupProcedure extends MaintenanceProcedure {
-    override def name(): String = "substring_dedup"
-    override def description(): String =
-      "cross-document exact-substring dedup (Lee et al. k-gram cover): " +
-        "spans seen earlier in the corpus are scrubbed, survivors " +
-        "reassemble into a NEW table (id, text, n_toks_kept, n_toks_dropped)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("5").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Dedup.substringDedup(df,
-          input.getUTF8String(2).toString, input.getUTF8String(3).toString,
-          input.getInt(4))
-      }
-  }
-
-  private final class DecontaminateProcedure extends MaintenanceProcedure {
-    override def name(): String = "decontaminate"
-    override def description(): String =
-      "benchmark decontamination: remove source docs sharing any word " +
-        "n-gram with the bench table (broadcast two-phase, corpus never " +
-        "shuffles); survivors land in a NEW table (CTAS-shaped)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("bench", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("n", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("8").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      // the bench table is read too: same SELECT grant as any other scan
-      val benchId = resolveIdent(input.getUTF8String(1).toString, "bench")
-      security.requirePriv(spark, "SELECT", benchId.namespace.toSeq,
-        benchId.name)
-      val bench = table(benchId).read
-      val (textCol, idCol) =
-        (input.getUTF8String(3).toString, input.getUTF8String(4).toString)
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(2).toString) { df =>
-        graft.operators.Decontaminate.clean(df, bench, idCol, textCol,
-          input.getInt(5))
-      }
-    }
-  }
-
-  private final class PmiTopKProcedure extends MaintenanceProcedure {
-    override def name(): String = "pmi_topk"
-    override def description(): String =
-      "top-k adjacent-token collocations by pointwise mutual information " +
-        "with a count floor; returns (bigram, c12, pmi_r) — k rows, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("20").build(),
-        procedures.ProcedureParameter
-          .in("min_count", org.apache.spark.sql.types.LongType)
-          .defaultValue("5").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Relevance
-        .pmiTopK(table(id).read, input.getUTF8String(1).toString,
-          input.getInt(2), input.getLong(3))
-        .collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("bigram", StringType, nullable = false),
-          StructField("c12", org.apache.spark.sql.types.LongType,
-            nullable = false),
-          StructField("pmi_r", org.apache.spark.sql.types.DoubleType,
-            nullable = false))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
-          r.getLong(1), r.getDouble(2))))
-    }
-  }
-
-  private final class QualityFilterProcedure extends MaintenanceProcedure {
-    override def name(): String = "quality_filter"
-    override def description(): String =
-      "C4/Gopher rule-based quality gate: survivors of the heuristic " +
-        "filter chain land in a NEW table (CTAS-shaped); one codegen'd " +
-        "map-only pass, no shuffle"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("min_words", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("50").build(),
-        procedures.ProcedureParameter
-          .in("max_words", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("100000").build(),
-        procedures.ProcedureParameter
-          .in("min_stopword_hits", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("2").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val cfg = graft.operators.QualityFilter.Config(
-        minWords = input.getInt(3), maxWords = input.getInt(4),
-        minStopwordHits = input.getInt(5))
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.QualityFilter.keep(df,
-          input.getUTF8String(2).toString, cfg)
-      }
-    }
-  }
-
-  private final class Bm25TopKProcedure extends MaintenanceProcedure {
-    override def name(): String = "bm25_topk"
-    override def description(): String =
-      "top-k BM25 documents for space-separated query terms; returns " +
-        "(id, score, n_terms_hit) — k rows, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter.in("terms", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("10").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val terms = input.getUTF8String(3).toString.trim
-        .split("\\s+").toSeq.filter(_.nonEmpty)
-      require(terms.nonEmpty, "terms must contain at least one token")
-      val rows = graft.operators.Relevance
-        .bm25TopK(table(id).read, input.getUTF8String(1).toString,
-          input.getUTF8String(2).toString, terms, input.getInt(4))
-        .select(col(input.getUTF8String(2).toString).cast("long").as("id"),
-          col("score"), col("n_terms_hit"))
-        .collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("id", org.apache.spark.sql.types.LongType,
-            nullable = false),
-          StructField("score", org.apache.spark.sql.types.DoubleType,
-            nullable = false),
-          StructField("n_terms_hit", org.apache.spark.sql.types.LongType,
-            nullable = false))),
-        rows.map(r => InternalRow(r.getLong(0), r.getDouble(1), r.getLong(2))))
-    }
-  }
-
-  private final class HybridTopKProcedure extends MaintenanceProcedure {
-    override def name(): String = "hybrid_topk"
-    override def description(): String =
-      "hybrid retrieval: BM25 lexical candidates reranked by embedding " +
-        "cosine against the vector of query_id; blended w_lex/w_vec; " +
-        "returns (id, bm25, cos, hybrid) — k rows, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("docs", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter.in("terms", StringType).build(),
-        procedures.ProcedureParameter.in("vectors", StringType).build(),
-        procedures.ProcedureParameter.in("vec_col", StringType).build(),
-        procedures.ProcedureParameter.in("vec_id_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("query_id", org.apache.spark.sql.types.LongType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("10").build(),
-        procedures.ProcedureParameter
-          .in("candidates", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("30").build(),
-        procedures.ProcedureParameter
-          .in("w_lex", org.apache.spark.sql.types.DoubleType)
-          .defaultValue("0.3").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val docsId = resolveIdent(input.getUTF8String(0).toString, "docs")
-      security.requirePriv(spark, "SELECT", docsId.namespace.toSeq, docsId.name)
-      val vecsId = resolveIdent(input.getUTF8String(4).toString, "vectors")
-      security.requirePriv(spark, "SELECT", vecsId.namespace.toSeq, vecsId.name)
-      val (textCol, idCol) =
-        (input.getUTF8String(1).toString, input.getUTF8String(2).toString)
-      val (vecCol, vidCol) =
-        (input.getUTF8String(5).toString, input.getUTF8String(6).toString)
-      val terms = input.getUTF8String(3).toString.trim
-        .split("\\s+").toSeq.filter(_.nonEmpty)
-      require(terms.nonEmpty, "terms must contain at least one token")
-      val wLex = input.getDouble(10)
-      require(wLex >= 0 && wLex <= 1, "w_lex in [0,1]")
-      val vecs = table(vecsId).read
-      val qRows = vecs.filter(col(vidCol).cast("long") === input.getLong(7))
-        .select(col(vecCol)).limit(1).collect()
-      require(qRows.nonEmpty,
-        s"query_id ${input.getLong(7)} not in ${input.getUTF8String(4)}")
-      val qv = qRows.head.getSeq[Number](0).map(_.doubleValue).toArray
-      val cand = graft.operators.Relevance
-        .bm25(table(docsId).read, textCol, idCol, terms)
-        .select(col(idCol).cast("long").as("id"), col("score").as("bm25"))
-        .orderBy(desc("bm25"), col("id")).limit(input.getInt(9))
-      val rows = cand
-        .join(vecs.select(col(vidCol).cast("long").as("id"), col(vecCol)), Seq("id"))
-        .select(col("id"), col("bm25"),
-          graft.operators.Similarity.cosineScore(col(vecCol), qv).as("cos"))
-        .withColumn("hybrid",
-          col("bm25") * wLex + col("cos") * (1 - wLex))
-        .orderBy(desc("hybrid"), col("id")).limit(input.getInt(8))
-        .collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("bm25", org.apache.spark.sql.types.DoubleType, nullable = false),
-          StructField("cos", org.apache.spark.sql.types.DoubleType, nullable = false),
-          StructField("hybrid", org.apache.spark.sql.types.DoubleType, nullable = false))),
-        rows.map(r => InternalRow(r.getLong(0), r.getDouble(1),
-          r.getDouble(2), r.getDouble(3))))
-    }
-  }
-
-  private final class DriftPsiProcedure extends MaintenanceProcedure {
-    override def name(): String = "drift_psi"
-    override def description(): String =
-      "PSI distribution drift of `table` vs `baseline` per group over a " +
-        "numeric column (buckets = floor(value/width)*width); returns " +
-        "(group, psi, n_base, n_cur) — groups-sized, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("baseline", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("bucket_width", org.apache.spark.sql.types.DoubleType)
-          .defaultValue("10.0").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val curId = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", curId.namespace.toSeq, curId.name)
-      val baseId = resolveIdent(input.getUTF8String(1).toString, "baseline")
-      security.requirePriv(spark, "SELECT", baseId.namespace.toSeq, baseId.name)
-      val (gCol, vCol) =
-        (input.getUTF8String(2).toString, input.getUTF8String(3).toString)
-      val width = input.getDouble(4)
-      require(width > 0, "bucket_width must be positive")
-      val bucket = (floor(col(vCol) / width) * width).cast("double")
-      import graft.operators.DriftMonitor
-      val rows = DriftMonitor.psi(
-          DriftMonitor.histogram(table(baseId).read, Seq(gCol), bucket),
-          DriftMonitor.histogram(table(curId).read, Seq(gCol), bucket),
-          Seq(gCol))
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("psi", org.apache.spark.sql.types.DoubleType, nullable = false),
-          StructField("n_base", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("n_cur", org.apache.spark.sql.types.LongType, nullable = false))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.getDouble(1), r.getLong(2), r.getLong(3))))
-    }
-  }
-
-  private final class QuantileBucketsProcedure extends MaintenanceProcedure {
-    override def name(): String = "quantile_buckets"
-    override def description(): String =
-      "CCNet-style per-group head/middle/tail bucketing by exact tercile " +
-        "thresholds of an integer score column (histogram-walked, no " +
-        "per-group sort); returns (group, bucket, n) — groups×3, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("score_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val (gCol, sCol) =
-        (input.getUTF8String(1).toString, input.getUTF8String(2).toString)
-      val rows = graft.operators.Selection.quantileBuckets(
-          table(id).read.select(col(gCol), col(sCol).cast("long").as(sCol)),
-          gCol, sCol, Seq(1 -> 3, 2 -> 3), Seq("head", "middle", "tail"))
-        .groupBy(col(gCol), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col(gCol), col("bucket")).collect() // groups×3, bounded
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("bucket", StringType, nullable = false),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = false))),
-        rows.map(r => InternalRow(
-          UTF8String.fromString(String.valueOf(r.get(0))),
-          UTF8String.fromString(r.getString(1)), r.getLong(2))))
-    }
-  }
-
-  private final class Scd2ApplyProcedure extends MaintenanceProcedure {
-    override def name(): String = "scd2_apply"
-    override def description(): String =
-      "SCD Type 2 batch apply: close changed keys' current rows at the " +
-        "effective date and open new versions; no-op updates create no " +
-        "churn; unseen keys insert. Overwrites `dim` in place; returns " +
-        "(version, n_rows, n_current)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("dim", StringType).build(),
-        procedures.ProcedureParameter.in("updates", StringType).build(),
-        procedures.ProcedureParameter.in("key_col", StringType).build(),
-        procedures.ProcedureParameter.in("tracked_cols", StringType).build(),
-        procedures.ProcedureParameter.in("effective_date", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val dimId = resolveIdent(input.getUTF8String(0).toString, "dim")
-      // mutation = UPDATE (closing rows) + INSERT (new versions)
-      Seq("SELECT", "UPDATE", "INSERT").foreach(p =>
-        security.requirePriv(spark, p, dimId.namespace.toSeq, dimId.name))
-      val updId = resolveIdent(input.getUTF8String(1).toString, "updates")
-      security.requirePriv(spark, "SELECT", updId.namespace.toSeq, updId.name)
-      val key = input.getUTF8String(2).toString
-      val tracked = input.getUTF8String(3).toString
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val eff = input.getUTF8String(4).toString
-      val dimT = table(dimId)
-      val result = graft.operators.Scd.applyBatch(dimT.read,
-        table(updId).read.select((key +: tracked).map(col): _*),
-        key, tracked, lit(eff)).cache()
-      try {
-        // materialize BEFORE overwriting the table the plan reads from
-        val nRows = result.count()
-        val nCurrent = result.filter(col("is_current")).count()
-        val version = dimT.overwrite(result)
-        singleRowScan(
-          StructType(Seq(
-            StructField("version", org.apache.spark.sql.types.LongType, nullable = false),
-            StructField("n_rows", org.apache.spark.sql.types.LongType, nullable = false),
-            StructField("n_current", org.apache.spark.sql.types.LongType, nullable = false))),
-          InternalRow(version, nRows, nCurrent))
-      } finally result.unpersist(blocking = false)
-    }
-  }
-
-  private final class ConnectedComponentsProcedure extends MaintenanceProcedure {
-    override def name(): String = "connected_components"
-    override def description(): String =
-      "resolve (id_a, id_b) pair rows into connected components via " +
-        "star contraction (distributed above the driver edge limit); " +
-        "target gets (id, component = min id of the component)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("id_a_col", StringType)
-          .defaultValue("'id_a'").build(),
-        procedures.ProcedureParameter.in("id_b_col", StringType)
-          .defaultValue("'id_b'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Dedup.connectedComponents(
-          df.select(col(input.getUTF8String(2).toString).as("id_a"),
-            col(input.getUTF8String(3).toString).as("id_b")))
-      }
-  }
-
-  private final class WeightedSampleProcedure extends MaintenanceProcedure {
-    override def name(): String = "weighted_sample"
-    override def description(): String =
-      "Efraimidis-Spirakis weighted sample without replacement, " +
-        "deterministic (md5-keyed); k rows land in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter.in("weight_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("1000").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Sampling.weightedSample(df,
-          input.getUTF8String(2).toString,
-          col(input.getUTF8String(3).toString), input.getInt(4))
-      }
-  }
-
-  private final class KmvOverlapProcedure extends MaintenanceProcedure {
-    override def name(): String = "kmv_overlap"
-    override def description(): String =
-      "KMV theta-sketch distinct/union/intersection estimates for every " +
-        "group pair; sketch-sized state, values never shuffle"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("256").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      // pairwise output: bounded group count so the row set stays small
-      val sk = graft.operators.Sketches.kmvByGroup(table(id).read,
-        input.getUTF8String(1).toString, input.getUTF8String(2).toString,
-        input.getInt(3), maxGroups = 64)
-      val groups = sk.keys.toSeq.sorted
-      val rows = for {
-        (a, i) <- groups.zipWithIndex; b <- groups.drop(i + 1)
-      } yield InternalRow(
-        UTF8String.fromString(a), UTF8String.fromString(b),
-        sk(a).estimate, sk(b).estimate,
-        sk(a).union(sk(b)).estimate, sk(a).intersectEstimate(sk(b)))
-      rowsScan(
-        StructType(Seq(
-          StructField("group_a", StringType, nullable = false),
-          StructField("group_b", StringType, nullable = false),
-          StructField("est_a", org.apache.spark.sql.types.DoubleType, nullable = false),
-          StructField("est_b", org.apache.spark.sql.types.DoubleType, nullable = false),
-          StructField("est_union", org.apache.spark.sql.types.DoubleType, nullable = false),
-          StructField("est_intersect", org.apache.spark.sql.types.DoubleType, nullable = false))),
-        rows.toArray)
-    }
-  }
-
-  private final class InterleaveProcedure extends MaintenanceProcedure {
-    override def name(): String = "interleave"
-    override def description(): String =
-      "deterministic weighted curriculum order: adds interleave_key " +
-        "(k/rate per group); rates as 'group:rate,group:rate'"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter.in("rates", StringType).build(),
-        procedures.ProcedureParameter
-          .in("default_rate", org.apache.spark.sql.types.DoubleType)
-          .defaultValue("1.0").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val rates = input.getUTF8String(4).toString.split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).map { kv =>
-          val Array(g, r) = kv.split(":")
-          g.trim -> r.trim.toDouble
-        }.toMap
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Sampling.interleaveWeighted(df,
-          input.getUTF8String(2).toString, input.getUTF8String(3).toString,
-          rates, input.getDouble(5))
-      }
-    }
-  }
-
-  private final class ProximityTopKProcedure extends MaintenanceProcedure {
-    override def name(): String = "proximity_topk"
-    override def description(): String =
-      "top-k docs by minimum token distance between two terms; " +
-        "bounded (id, min_dist, n_a, n_b) rows"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter.in("term_a", StringType).build(),
-        procedures.ProcedureParameter.in("term_b", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("10").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val idCol = input.getUTF8String(2).toString
-      val rows = graft.operators.Relevance.proximity(table(id).read,
-          input.getUTF8String(1).toString, idCol,
-          input.getUTF8String(3).toString, input.getUTF8String(4).toString)
-        .orderBy(col("min_dist"), col(idCol))
-        .limit(input.getInt(5))
-        .collect()
-        .map(r => InternalRow(r.getLong(0), r.getInt(1).toLong,
-          r.getLong(2), r.getLong(3)))
-      rowsScan(
-        StructType(Seq(
-          StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("min_dist", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("n_a", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("n_b", org.apache.spark.sql.types.LongType, nullable = false))),
-        rows)
-    }
-  }
-
-  private final class PageRankProcedure extends MaintenanceProcedure {
-    override def name(): String = "pagerank"
-    override def description(): String =
-      "fixed-point scaled-integer PageRank over (src, dst) edge rows; " +
-        "bit-reproducible ranks land in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("src_col", StringType)
-          .defaultValue("'src'").build(),
-        procedures.ProcedureParameter.in("dst_col", StringType)
-          .defaultValue("'dst'").build(),
-        procedures.ProcedureParameter
-          .in("iters", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("10").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.PageRank.scaledRanks(
-          df.select(col(input.getUTF8String(2).toString).as("src"),
-            col(input.getUTF8String(3).toString).as("dst")),
-          input.getInt(4))
-      }
-  }
-
-  private final class TriangleCountsProcedure extends MaintenanceProcedure {
-    override def name(): String = "triangle_counts"
-    override def description(): String =
-      "per-node triangle counts + local clustering coefficients over " +
-        "(src, dst) edge rows via degree-ordered orientation; lands in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("src_col", StringType)
-          .defaultValue("'src'").build(),
-        procedures.ProcedureParameter.in("dst_col", StringType)
-          .defaultValue("'dst'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Triangles.triangleCounts(
-          df.select(col(input.getUTF8String(2).toString).as("src"),
-            col(input.getUTF8String(3).toString).as("dst")))
-      }
-  }
-
-  private final class KCoreProcedure extends MaintenanceProcedure {
-    override def name(): String = "kcore"
-    override def description(): String =
-      "k-core survivors (node_id, core_degree) of the (src, dst) edge " +
-        "graph by bounded-round iterative peeling; lands in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType).build(),
-        procedures.ProcedureParameter.in("src_col", StringType)
-          .defaultValue("'src'").build(),
-        procedures.ProcedureParameter.in("dst_col", StringType)
-          .defaultValue("'dst'").build(),
-        procedures.ProcedureParameter
-          .in("max_rounds", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("30").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.KCore.kCore(
-          df.select(col(input.getUTF8String(3).toString).as("src"),
-            col(input.getUTF8String(4).toString).as("dst")),
-          input.getInt(2), input.getInt(5))
-      }
-  }
-
-  private final class AudioFeaturesProcedure extends MaintenanceProcedure {
-    override def name(): String = "audio_features"
-    override def description(): String =
-      "audio quality features (rms/peak/zero-crossings/duration) per " +
-        "payload row via the real WAV decode path; lands in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("payload_col", StringType)
-          .defaultValue("'payload'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Multimodal.audioFeatures(df,
-          input.getUTF8String(2).toString)
-      }
-  }
-
-  private final class LinkPredictProcedure extends MaintenanceProcedure {
-    override def name(): String = "link_predict"
-    override def description(): String =
-      "common-neighbor / Jaccard / Adamic-Adar scores for non-adjacent " +
-        "2-hop pairs of the (src, dst) edge graph (hub wedge centers " +
-        "beyond max_wedge_degree gated); lands (u, v, cn, jaccard, " +
-        "aa_scaled) in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("src_col", StringType)
-          .defaultValue("'src'").build(),
-        procedures.ProcedureParameter.in("dst_col", StringType)
-          .defaultValue("'dst'").build(),
-        procedures.ProcedureParameter
-          .in("max_wedge_degree", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("1000").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.Graphs.linkPredict(
-          df.select(col(input.getUTF8String(2).toString).as("src"),
-            col(input.getUTF8String(3).toString).as("dst")),
-          input.getInt(4))
-      }
-  }
-
-  private final class Chi2Procedure extends MaintenanceProcedure {
-    override def name(): String = "chi2"
-    override def description(): String =
-      "chi-square independence test between two categorical columns; " +
-        "returns one row (n, dof, chi2_ppm) — exact ppm-scaled statistic"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("a_col", StringType).build(),
-        procedures.ProcedureParameter.in("b_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.chiSquare(table(id).read,
-        input.getUTF8String(1).toString,
-        input.getUTF8String(2).toString).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("dof", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("chi2_ppm", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2))))
-    }
-  }
-
-  private final class GiniProcedure extends MaintenanceProcedure {
-    override def name(): String = "gini"
-    override def description(): String =
-      "per-group Gini concentration of a non-negative integer-valued " +
-        "column; returns (group, n, gini) — groups-sized, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.gini(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString)
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("gini", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2))))
-    }
-  }
-
-  private final class KsTestProcedure extends MaintenanceProcedure {
-    override def name(): String = "ks_test"
-    override def description(): String =
-      "two-sample Kolmogorov-Smirnov statistic between the `a` and `b` " +
-        "slices of group_col over an integer-valued column; returns one " +
-        "row (n_a, n_b, d_ppm)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter.in("a", StringType).build(),
-        procedures.ProcedureParameter.in("b", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.ksTest(table(id).read,
-        input.getUTF8String(1).toString, input.getUTF8String(2).toString,
-        input.getUTF8String(3).toString,
-        input.getUTF8String(4).toString).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("n_a", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_b", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("d_ppm", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2))))
-    }
-  }
-
-  private final class RankEvalProcedure extends MaintenanceProcedure {
-    override def name(): String = "rank_eval"
-    override def description(): String =
-      "recall@k / MRR / ln-nDCG of a candidate ranking vs ground truth " +
-        "(both tables carry qid, id, rank); returns one row per cutoff " +
-        "in `ks` (comma-separated) — exact ppm integers"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("truth", StringType).build(),
-        procedures.ProcedureParameter.in("cand", StringType).build(),
-        procedures.ProcedureParameter.in("ks", StringType)
-          .defaultValue("'1,5,10'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val tId = resolveIdent(input.getUTF8String(0).toString, "truth")
-      security.requirePriv(spark, "SELECT", tId.namespace.toSeq, tId.name)
-      val cId = resolveIdent(input.getUTF8String(1).toString, "cand")
-      security.requirePriv(spark, "SELECT", cId.namespace.toSeq, cId.name)
-      val ks = input.getUTF8String(2).toString.split(",").map(_.trim.toInt)
-      val rows = graft.operators.Relevance
-        .rankEval(table(tId).read, table(cId).read, ks.toSeq)
-        .orderBy(col("k")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("k", org.apache.spark.sql.types.IntegerType, nullable = true),
-          StructField("n_queries", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("recall_ppm", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("mrr_ppm", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("ndcg_ppm", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2), r.get(3),
-          r.get(4))))
-    }
-  }
-
-  private final class MutualInfoProcedure extends MaintenanceProcedure {
-    override def name(): String = "mutual_info"
-    override def description(): String =
-      "mutual information + marginal entropies (nats) between two " +
-        "categorical columns; returns one row (n, mi, hx, hy)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("a_col", StringType).build(),
-        procedures.ProcedureParameter.in("b_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.mutualInfo(table(id).read,
-        input.getUTF8String(1).toString,
-        input.getUTF8String(2).toString).collect()
-      val d = org.apache.spark.sql.types.DoubleType
-      rowsScan(
-        StructType(Seq(
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("mi", d, nullable = true),
-          StructField("hx", d, nullable = true),
-          StructField("hy", d, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class WassersteinProcedure extends MaintenanceProcedure {
-    override def name(): String = "wasserstein"
-    override def description(): String =
-      "1-D Wasserstein-1 distance between the `a` and `b` slices of " +
-        "group_col over an integer-valued column; one row (n_a, n_b, w1)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter.in("a", StringType).build(),
-        procedures.ProcedureParameter.in("b", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.wasserstein1(table(id).read,
-        input.getUTF8String(1).toString, input.getUTF8String(2).toString,
-        input.getUTF8String(3).toString,
-        input.getUTF8String(4).toString).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("n_a", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_b", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("w1", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2))))
-    }
-  }
-
-  private final class WelchTProcedure extends MaintenanceProcedure {
-    override def name(): String = "welch_t"
-    override def description(): String =
-      "Welch two-sample t statistic + Welch-Satterthwaite df between " +
-        "the `a` and `b` slices of group_col over an integer-valued " +
-        "column; one row (n_a, n_b, t, df)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter.in("a", StringType).build(),
-        procedures.ProcedureParameter.in("b", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.welchT(table(id).read,
-        input.getUTF8String(1).toString, input.getUTF8String(2).toString,
-        input.getUTF8String(3).toString,
-        input.getUTF8String(4).toString).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("n_a", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_b", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("t", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("df", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class MomentsProcedure extends MaintenanceProcedure {
-    override def name(): String = "moments"
-    override def description(): String =
-      "per-group distribution-shape profile of an integer-valued " +
-        "column: (group, n, mean, variance, skewness, kurt_excess) — " +
-        "one grouped pass, groups-sized"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.momentsProfile(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString)
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("mean", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("variance", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("skewness", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("kurt_excess", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3), r.get(4), r.get(5))))
-    }
-  }
-
-  private final class BootstrapCiProcedure extends MaintenanceProcedure {
-    override def name(): String = "bootstrap_ci"
-    override def description(): String =
-      "per-group Poisson-bootstrap 95% CI for the mean of an " +
-        "integer-valued column (id-pure md5 replicate weights); " +
-        "(group, n, mean, n_reps, lo, hi)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter.in("reps",
-          org.apache.spark.sql.types.IntegerType).build(),
-        procedures.ProcedureParameter.in("seed",
-          org.apache.spark.sql.types.LongType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.bootstrapMeanCI(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString,
-          reps = input.getInt(4), seed = input.getLong(5))
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("mean", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("n_reps", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("lo", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("hi", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3), r.get(4), r.get(5))))
-    }
-  }
-
-  private final class RidgeProcedure extends MaintenanceProcedure {
-    override def name(): String = "ridge"
-    override def description(): String =
-      "per-group ridge fit y ~ b0 + b1*x1 + b2*x2 over integer-valued " +
-        "columns via exact normal equations; (group, n, b0, b1, b2)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("x1_col", StringType).build(),
-        procedures.ProcedureParameter.in("x2_col", StringType).build(),
-        procedures.ProcedureParameter.in("y_col", StringType).build(),
-        procedures.ProcedureParameter.in("lambda",
-          org.apache.spark.sql.types.DoubleType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.ridgeFit(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString, input.getUTF8String(4).toString,
-          input.getDouble(5))
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("b0", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("b1", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("b2", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3), r.get(4))))
-    }
-  }
-
-  private final class CoverageProcedure extends MaintenanceProcedure {
-    override def name(): String = "coverage"
-    override def description(): String =
-      "per-group union of half-open integer intervals [start, end): " +
-        "(group, n_islands, coverage, max_merged) — the gaps-and-islands " +
-        "summary, groups-sized"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("start_col", StringType).build(),
-        procedures.ProcedureParameter.in("end_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Timeseries.intervalUnion(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString)
-        .groupBy(col(gCol))
-        .agg(count(lit(1)).as("n_islands"),
-          org.apache.spark.sql.functions.sum(
-            col("island_end") - col("island_start")).cast("long")
-            .as("coverage"),
-          org.apache.spark.sql.functions.max(col("n_merged"))
-            .as("max_merged"))
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n_islands", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("coverage", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("max_merged", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class ParetoProcedure extends MaintenanceProcedure {
-    override def name(): String = "pareto"
-    override def description(): String =
-      "2-D Pareto frontier (both dimensions maximized) over " +
-        "integer-valued columns; returns the undominated (x, y) points " +
-        "— frontier-sized by construction"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("x_col", StringType).build(),
-        procedures.ProcedureParameter.in("y_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val xc = input.getUTF8String(1).toString
-      val yc = input.getUTF8String(2).toString
-      val rows = graft.operators.Selection.paretoFront(
-          table(id).read.select(col(xc).cast("long").as("x"),
-            col(yc).cast("long").as("y")), "x", "y")
-        .orderBy(desc("x"), col("y")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("x", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("y", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1))))
-    }
-  }
-
-  private final class FrequentTriplesProcedure extends MaintenanceProcedure {
-    override def name(): String = "frequent_triples"
-    override def description(): String =
-      "A-Priori frequent 3-itemsets over (basket, item) rows at an " +
-        "absolute support; returns (item_a, item_b, item_c, support)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("basket_col", StringType).build(),
-        procedures.ProcedureParameter.in("item_col", StringType).build(),
-        procedures.ProcedureParameter.in("min_support",
-          org.apache.spark.sql.types.LongType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Itemsets.frequentTriples(table(id).read,
-          input.getUTF8String(1).toString, input.getUTF8String(2).toString,
-          input.getLong(3))
-        .orderBy(desc("support"), col("item_a"), col("item_b"),
-          col("item_c"))
-        .collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("item_a", StringType, nullable = true),
-          StructField("item_b", StringType, nullable = true),
-          StructField("item_c", StringType, nullable = true),
-          StructField("support", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(1))),
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(2))),
-          r.get(3))))
-    }
-  }
-
-  private final class KAnonymityProcedure extends MaintenanceProcedure {
-    override def name(): String = "k_anonymity"
-    override def description(): String =
-      "minimal-generalization k-anonymity / l-diversity audit: searches " +
-        "bucket widths 2^level over the numeric QI for the least-coarse " +
-        "release with every class >= k rows and >= l distinct sensitive " +
-        "values; returns the risk frontier (smallest classes) at the " +
-        "chosen level, chosen_level = -1 when even the coarsest fails"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("qi_cat_col", StringType).build(),
-        procedures.ProcedureParameter.in("qi_num_col", StringType).build(),
-        procedures.ProcedureParameter.in("sensitive_col", StringType).build(),
-        procedures.ProcedureParameter.in("k",
-          org.apache.spark.sql.types.LongType).build(),
-        procedures.ProcedureParameter.in("l",
-          org.apache.spark.sql.types.LongType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val catCol = input.getUTF8String(1).toString
-      val (lvl, classes) = graft.operators.Privacy.minimalGeneralization(
-        table(id).read, Seq(catCol), input.getUTF8String(2).toString,
-        input.getUTF8String(3).toString, input.getLong(4), input.getLong(5))
-      val rows = classes
-        .orderBy(col("class_size"), col(catCol), col("qi_bucket"))
-        .limit(100).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("chosen_level", org.apache.spark.sql.types.IntegerType, nullable = true),
-          StructField("qi_cat", StringType, nullable = true),
-          StructField("qi_bucket", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("class_size", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("l_diversity", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          lvl,
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class IsotonicFitProcedure extends MaintenanceProcedure {
-    override def name(): String = "isotonic_fit"
-    override def description(): String =
-      "monotone (isotonic) least-squares calibration of an integer label " +
-        "against an integer score per group: PAVA by its minimax closed " +
-        "form, fully relational; returns (group, x, n, y_sum, fitted)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("x_col", StringType).build(),
-        procedures.ProcedureParameter.in("y_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.isotonicFit(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString)
-        .orderBy(col(gCol), col("x")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("x", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("y_sum", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("fitted", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3), r.get(4))))
-    }
-  }
-
-  private final class KaplanMeierProcedure extends MaintenanceProcedure {
-    override def name(): String = "kaplan_meier"
-    override def description(): String =
-      "Kaplan-Meier product-limit survival curve per group over " +
-        "(duration, event 1/censored 0) rows; returns " +
-        "(group, t, n_risk, n_events, survival)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("duration_col", StringType).build(),
-        procedures.ProcedureParameter.in("event_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.kaplanMeier(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString)
-        .orderBy(col(gCol), col("t")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("t", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_risk", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_events", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("survival", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3), r.get(4))))
-    }
-  }
-
-  private final class WeightedQuantileProcedure extends MaintenanceProcedure {
-    override def name(): String = "weighted_quantile"
-    override def description(): String =
-      "exact weighted discrete quantile per group: the smallest value " +
-        "whose cumulative weight reaches q*W; returns " +
-        "(group, q, value, total_weight)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("value_col", StringType).build(),
-        procedures.ProcedureParameter.in("weight_col", StringType).build(),
-        procedures.ProcedureParameter.in("q",
-          org.apache.spark.sql.types.DoubleType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.weightedQuantile(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString, Seq(input.getDouble(4)))
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("q", org.apache.spark.sql.types.DoubleType, nullable = true),
-          StructField("value", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("total_weight", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class TheilSenProcedure extends MaintenanceProcedure {
-    override def name(): String = "theil_sen"
-    override def description(): String =
-      "Theil-Sen robust trend per group: median pairwise slope in " +
-        "integer micro-units over a bounded series; returns " +
-        "(group, n_points, n_pairs, slope_micro)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("x_col", StringType).build(),
-        procedures.ProcedureParameter.in("y_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.theilSen(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString)
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n_points", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_pairs", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("slope_micro", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class KendallTauProcedure extends MaintenanceProcedure {
-    override def name(): String = "kendall_tau"
-    override def description(): String =
-      "Kendall's tau-b rank correlation per group with tie correction " +
-        "over a bounded series; returns (group, n_points, concordant, " +
-        "discordant, tau_micro)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("group_col", StringType).build(),
-        procedures.ProcedureParameter.in("x_col", StringType).build(),
-        procedures.ProcedureParameter.in("y_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val gCol = input.getUTF8String(1).toString
-      val rows = graft.operators.Stats.kendallTau(table(id).read,
-          Seq(gCol), input.getUTF8String(2).toString,
-          input.getUTF8String(3).toString)
-        .orderBy(col(gCol)).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("group", StringType, nullable = true),
-          StructField("n_points", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("concordant", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("discordant", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("tau_micro", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))),
-          r.get(1), r.get(2), r.get(3),
-          if (r.isNullAt(7)) null else r.get(7))))
-    }
-  }
-
-  private final class FleissKappaProcedure extends MaintenanceProcedure {
-    override def name(): String = "fleiss_kappa"
-    override def description(): String =
-      "Fleiss' kappa: chance-corrected multi-rater agreement (constant " +
-        "m ratings per unit); one row (n_units, m_raters, po_ppm, kappa)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("unit_col", StringType).build(),
-        procedures.ProcedureParameter.in("category_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.fleissKappa(table(id).read,
-          input.getUTF8String(1).toString,
-          input.getUTF8String(2).toString).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("n_units", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("m_raters", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("po_ppm", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("kappa", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2),
-          if (r.isNullAt(3)) null else r.get(3))))
-    }
-  }
-
-  private final class ReconcileProcedure extends MaintenanceProcedure {
-    override def name(): String = "reconcile"
-    override def description(): String =
-      "order-independent per-bucket sync fingerprint of two tables " +
-        "(key-addressed buckets, md5 row checksums); one row per bucket " +
-        "with both sides' counts/checksums and a match flag"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("key_cols", StringType).build(),
-        procedures.ProcedureParameter.in("cols", StringType).build(),
-        procedures.ProcedureParameter.in("buckets",
-          org.apache.spark.sql.types.IntegerType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val src = resolveIdent(input.getUTF8String(0).toString, "source")
-      val tgt = resolveIdent(input.getUTF8String(1).toString, "target")
-      security.requirePriv(spark, "SELECT", src.namespace.toSeq, src.name)
-      security.requirePriv(spark, "SELECT", tgt.namespace.toSeq, tgt.name)
-      val keys = input.getUTF8String(2).toString.split(",").map(_.trim).toSeq
-      val cols0 = input.getUTF8String(3).toString.split(",").map(_.trim).toSeq
-      val b = input.getInt(4)
-      val fs = graft.operators.Diagnostics.reconcile(table(src).read,
-        keys, cols0, b)
-      val ft = graft.operators.Diagnostics.reconcile(table(tgt).read,
-          keys, cols0, b)
-        .select(col("bucket"), col("n_rows").as("t_rows"),
-          col("checksum").as("t_checksum"))
-      val rows = fs.join(ft, Seq("bucket"), "full_outer")
-        .orderBy(col("bucket")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("bucket", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_rows", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("checksum", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("t_rows", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("t_checksum", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("matches", org.apache.spark.sql.types.BooleanType, nullable = true))),
-        rows.map { r =>
-          val ok = !r.isNullAt(1) && !r.isNullAt(3) &&
-            r.getLong(1) == r.getLong(3) && !r.isNullAt(2) &&
-            !r.isNullAt(4) && r.getLong(2) == r.getLong(4)
-          InternalRow(r.get(0),
-            if (r.isNullAt(1)) null else r.get(1),
-            if (r.isNullAt(2)) null else r.get(2),
-            if (r.isNullAt(3)) null else r.get(3),
-            if (r.isNullAt(4)) null else r.get(4), ok)
-        })
-    }
-  }
-
-  private final class AucProcedure extends MaintenanceProcedure {
-    override def name(): String = "auc"
-    override def description(): String =
-      "exact rank-based ROC-AUC of an integer score against a boolean " +
-        "label; one row (n_pos, n_neg, auc)"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("label_col", StringType).build(),
-        procedures.ProcedureParameter.in("score_col", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.auc(table(id).read,
-        input.getUTF8String(1).toString,
-        input.getUTF8String(2).toString).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("n_pos", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("n_neg", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("auc", org.apache.spark.sql.types.DoubleType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2))))
-    }
-  }
-
-  private final class CalibrationProcedure extends MaintenanceProcedure {
-    override def name(): String = "calibration"
-    override def description(): String =
-      "reliability table of a ppm score vs a boolean label: per bucket " +
-        "(bucket, n, conf_ppm, obs_ppm) — exact integer-div ppm"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("score_col", StringType).build(),
-        procedures.ProcedureParameter.in("label_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("buckets", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("10").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val rows = graft.operators.Stats.calibration(table(id).read,
-          input.getUTF8String(1).toString, input.getUTF8String(2).toString,
-          input.getInt(3))
-        .orderBy(col("bucket")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("bucket", org.apache.spark.sql.types.IntegerType, nullable = true),
-          StructField("n", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("conf_ppm", org.apache.spark.sql.types.LongType, nullable = true),
-          StructField("obs_ppm", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(r.get(0), r.get(1), r.get(2), r.get(3))))
-    }
-  }
-
-  private final class MarkovStationaryProcedure extends MaintenanceProcedure {
-    override def name(): String = "markov_stationary"
-    override def description(): String =
-      "stationary distribution of the state column's Markov chain along " +
-        "each key's ordered stream — scaled-integer power iteration; " +
-        "returns (state, pi) at 1e9 scale"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("key_col", StringType).build(),
-        procedures.ProcedureParameter.in("order_col", StringType).build(),
-        procedures.ProcedureParameter.in("state_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("iters", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("3").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val trans = graft.operators.Markov.transitions(table(id).read,
-        Seq(input.getUTF8String(1).toString),
-        Seq(input.getUTF8String(2).toString),
-        input.getUTF8String(3).toString)
-      val rows = graft.operators.Markov
-        .scaledStationary(trans, input.getInt(4))
-        .orderBy(col("state")).collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("state", StringType, nullable = true),
-          StructField("pi", org.apache.spark.sql.types.LongType, nullable = true))),
-        rows.map(r => InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            String.valueOf(r.get(0))), r.get(1))))
-    }
-  }
-
-  /** CTAS-shaped LPA: SELECT enforced on BOTH the edge table and the
-    * seed table (the [[DecontaminateProcedure]] two-input contract).
-    */
-  private final class LabelPropagateProcedure extends MaintenanceProcedure {
-    override def name(): String = "label_propagate"
-    override def description(): String =
-      "clamped label propagation: seed labels spread a fixed number of " +
-        "majority-vote rounds over the (src, dst) edge graph; lands " +
-        "(id, label) in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("seeds", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter
-          .in("iters", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("5").build(),
-        procedures.ProcedureParameter.in("src_col", StringType)
-          .defaultValue("'src'").build(),
-        procedures.ProcedureParameter.in("dst_col", StringType)
-          .defaultValue("'dst'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val seedId = resolveIdent(input.getUTF8String(1).toString, "seeds")
-      security.requirePriv(spark, "SELECT",
-        seedId.namespace.toSeq, seedId.name)
-      val seeds = table(seedId).read
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(2).toString) { df =>
-        graft.operators.Graphs.labelPropagate(
-          df.select(col(input.getUTF8String(4).toString).as("src"),
-            col(input.getUTF8String(5).toString).as("dst")),
-          seeds, input.getInt(3))
-      }
-    }
-  }
-
-  private final class DataCardProcedure extends MaintenanceProcedure {
-    override def name(): String = "data_card"
-    override def description(): String =
-      "corpus datasheet per (lang, source): sizes, token mass, exact-dup " +
-        "rate, langid agreement, token-length distribution; lands in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType)
-          .defaultValue("'text'").build(),
-        procedures.ProcedureParameter.in("lang_col", StringType)
-          .defaultValue("'lang'").build(),
-        procedures.ProcedureParameter.in("source_col", StringType)
-          .defaultValue("'source'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      materializeResult(input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString) { df =>
-        graft.operators.DataCard.summarize(df,
-          input.getUTF8String(2).toString, input.getUTF8String(3).toString,
-          input.getUTF8String(4).toString)
-      }
-  }
-
-  /** The X87 delta-maintained datasheet from SQL: each call folds the
-    * source table's commit-log delta into persisted card state (under
-    * the catalog root at `_CARD_STATE/<ns>/<table>` — scalar sums +
-    * content-key multiset + token histogram) and lands the CURRENT card
-    * in `target` (overwritten: the card is a dashboard table, and the
-    * refresh is idempotent per source version). The source is never
-    * rescanned — repeat calls cost delta time.
-    */
-  private final class IncrementalCardProcedure extends MaintenanceProcedure {
-    override def name(): String = "incremental_card"
-    override def description(): String =
-      "delta-maintained data card: fold the source's commit-log delta " +
-        "into persisted card state, land the current card in target"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("text_col", StringType)
-          .defaultValue("'text'").build(),
-        procedures.ProcedureParameter.in("lang_col", StringType)
-          .defaultValue("'lang'").build(),
-        procedures.ProcedureParameter.in("source_col", StringType)
-          .defaultValue("'source'").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val srcId = resolveIdent(input.getUTF8String(0).toString, "source")
-      security.requirePriv(spark, "SELECT", srcId.namespace.toSeq, srcId.name)
-      val tgtId = resolveIdent(input.getUTF8String(1).toString, "target",
-        mustExist = false)
-      if (!namespaceExists(tgtId.namespace))
-        throw new NoSuchNamespaceException(tgtId.namespace.toSeq)
-      security.requirePriv(spark,
-        if (tableExists(tgtId)) "INSERT" else "CREATE TABLE",
-        tgtId.namespace.toSeq, tgtId.name)
-      val stateRoot = (s"$root/_CARD_STATE" +: srcId.namespace.toSeq :+
-        srcId.name).mkString("/")
-      val card = graft.operators.IncrementalDataCard(spark,
-        VersionedTable(spark, dirFor(srcId)), stateRoot,
-        input.getUTF8String(2).toString, input.getUTF8String(3).toString,
-        input.getUTF8String(4).toString)
-      val applied = card.refresh()
-      val result = card.card.cache()
-      try {
-        val n = result.count()
-        table(tgtId).overwrite(result)
-        rowsScan(
-          StructType(Seq(
-            StructField("target", StringType, nullable = false),
-            StructField("versions_applied",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            StructField("n_segments",
-              org.apache.spark.sql.types.LongType, nullable = false))),
-          Array(InternalRow(
-            UTF8String.fromString(input.getUTF8String(1).toString),
-            applied, n)))
-      } finally result.unpersist(blocking = false)
-    }
-  }
-
-  /** Scheduled incremental load from an external JDBC warehouse — the
-    * reference's task-driven high-watermark COPY loop
-    * (templates/orchestrate_tasks.sql.j2 scheduling
-    * incremental_raw_co2data.py's only-new-years load) as one SQL verb:
-    * `CALL gp.system.jdbc_ingest(url => …, source_table => …,
-    * watermark_col => …, target => 'NS.T')`. Pulls only the delta above
-    * the target's recorded watermark ([[graft.sources.JdbcIngest]]:
-    * server-side MAX probe, pushed-down bounded window, watermark in the
-    * same commit, exactly-once under replays) — composable with
-    * create_task/run_due for a fully in-engine scheduled ingest DAG.
-    */
-  private final class JdbcIngestProcedure extends MaintenanceProcedure {
-    override def name(): String = "jdbc_ingest"
-    override def description(): String =
-      "incremental pull from a JDBC warehouse table into a versioned " +
-        "table: delta above the recorded watermark only, exactly-once"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("url", StringType).build(),
-        procedures.ProcedureParameter.in("source_table", StringType).build(),
-        procedures.ProcedureParameter.in("watermark_col", StringType).build(),
-        procedures.ProcedureParameter.in("target", StringType).build(),
-        procedures.ProcedureParameter.in("driver", StringType)
-          .defaultValue("''").build(),
-        procedures.ProcedureParameter.in("user", StringType)
-          .defaultValue("''").build(),
-        procedures.ProcedureParameter.in("password", StringType)
-          .defaultValue("''").build(),
-        procedures.ProcedureParameter
-          .in("parts", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("1").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val tgtId = resolveIdent(input.getUTF8String(3).toString, "target",
-        mustExist = false)
-      if (!namespaceExists(tgtId.namespace))
-        throw new NoSuchNamespaceException(tgtId.namespace.toSeq)
-      security.requirePriv(spark,
-        if (tableExists(tgtId)) "INSERT" else "CREATE TABLE",
-        tgtId.namespace.toSeq, tgtId.name)
-      def opt(i: Int): Option[String] = {
-        val s = input.getUTF8String(i).toString
-        if (s.isEmpty) None else Some(s)
-      }
-      val wh = new graft.sources.JdbcWarehouse(spark,
-        graft.sources.JdbcProfile(
-          url = input.getUTF8String(0).toString,
-          driver = opt(4), user = opt(5), password = opt(6)))
-      val srcTable = input.getUTF8String(1).toString
-      val wmCol = input.getUTF8String(2).toString
-      val target = table(tgtId)
-      val n = graft.sources.JdbcIngest.pull(wh, srcTable, wmCol, target,
-        parts = input.getInt(7))
-      val hw = target.offsets
-        .getOrElse(graft.sources.JdbcIngest.streamId(srcTable, wmCol), -1L)
-      singleRowScan(
-        StructType(Seq(
-          StructField("target", StringType, nullable = false),
-          StructField("rows_ingested",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("watermark",
-            org.apache.spark.sql.types.LongType, nullable = false))),
-        InternalRow(
-          UTF8String.fromString(input.getUTF8String(3).toString), n, hw))
-    }
-  }
-
-  /** ANALYZE-style one-pass column profile: null count, distinct count,
-    * min/max (rendered as strings) for every column — the stats surface a
-    * query planner or a data-quality audit reads first. One job: all
-    * columns' aggregates ride a single scan.
-    */
-  private final class ProfileProcedure extends MaintenanceProcedure {
-    override def name(): String = "profile"
-    override def description(): String =
-      "per-column profile: n_nulls, approx_ndv, min, max in ONE scan"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(procedures.ProcedureParameter.in("table", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val id = resolveIdent(input.getUTF8String(0).toString, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val df = table(id).read
-      val cols = df.schema.fields
-      import org.apache.spark.sql.functions.{coalesce, count, sum, when, approx_count_distinct, min => fmin, max => fmax}
-      // row count rides the SAME aggregate as the per-column stats, so the
-      // whole profile is genuinely one scan; coalesce guards the zero-row
-      // table (sum over no rows is SQL NULL, and getLong on it would NPE)
-      val perCol = cols.flatMap { f =>
-        val c = col(f.name)
-        val countable = f.dataType match {
-          case _: org.apache.spark.sql.types.MapType => false
-          case _ => true
-        }
-        Seq(
-          coalesce(sum(when(c.isNull, 1L).otherwise(0L)), lit(0L))
-            .as(s"${f.name}__nulls"),
-          (if (countable) approx_count_distinct(c)
-           else lit(-1L)).as(s"${f.name}__ndv"),
-          (if (countable) fmin(c).cast(StringType)
-           else lit(null).cast(StringType)).as(s"${f.name}__min"),
-          (if (countable) fmax(c).cast(StringType)
-           else lit(null).cast(StringType)).as(s"${f.name}__max"))
-      }
-      val aggs = count(lit(1)).as("__n_rows") +: perCol
-      val r = df.agg(aggs.head, aggs.tail.toSeq: _*).head
-      val n = r.getLong(0)
-      val rows = cols.zipWithIndex.map { case (f, i) =>
-        val b = 1 + i * 4
-        InternalRow(
-          UTF8String.fromString(f.name),
-          UTF8String.fromString(f.dataType.simpleString),
-          n,
-          r.getLong(b),
-          r.getLong(b + 1),
-          if (r.isNullAt(b + 2)) null else UTF8String.fromString(r.getString(b + 2)),
-          if (r.isNullAt(b + 3)) null else UTF8String.fromString(r.getString(b + 3)))
-      }
-      rowsScan(
-        StructType(Seq(
-          StructField("column", StringType, nullable = false),
-          StructField("type", StringType, nullable = false),
-          StructField("n_rows", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("n_nulls", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("approx_ndv", org.apache.spark.sql.types.LongType, nullable = false),
-          StructField("min", StringType, nullable = true),
-          StructField("max", StringType, nullable = true))),
-        rows.toArray)
-    }
-  }
-
-  private final class AnnTopKProcedure extends MaintenanceProcedure {
-    override def name(): String = "ann_topk"
-    override def description(): String =
-      "exact cosine top-k against the vector of query_id in the same " +
-        "table (more-like-this); returns (id, score) — k rows, bounded"
-    override def parameters(): Array[procedures.ProcedureParameter] =
-      Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("vec_col", StringType).build(),
-        procedures.ProcedureParameter.in("id_col", StringType).build(),
-        procedures.ProcedureParameter
-          .in("query_id", org.apache.spark.sql.types.LongType).build(),
-        procedures.ProcedureParameter
-          .in("k", org.apache.spark.sql.types.IntegerType)
-          .defaultValue("10").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val qualified = input.getUTF8String(0).toString
-      val id = resolveIdent(qualified, "table")
-      security.requirePriv(spark, "SELECT", id.namespace.toSeq, id.name)
-      val (vecCol, idCol) =
-        (input.getUTF8String(1).toString, input.getUTF8String(2).toString)
-      val df = table(id).read
-      val qRows = df.filter(col(idCol).cast("long") === input.getLong(3))
-        .select(col(vecCol)).limit(1).collect()
-      require(qRows.nonEmpty, s"query_id ${input.getLong(3)} not in $qualified")
-      val q = qRows.head.getSeq[Number](0).map(_.doubleValue).toArray
-      val rows = graft.operators.Similarity
-        .topK(df, vecCol, idCol, q, input.getInt(4))
-        .select(col(idCol).cast("long").as("id"), col("score"))
-        .collect()
-      rowsScan(
-        StructType(Seq(
-          StructField("id", org.apache.spark.sql.types.LongType,
-            nullable = false),
-          StructField("score", org.apache.spark.sql.types.DoubleType,
-            nullable = false))),
-        rows.map(r => InternalRow(r.getLong(0), r.getDouble(1))))
-    }
   }
 
   private def firstLine(e: Throwable): String =

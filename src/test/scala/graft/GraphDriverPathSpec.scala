@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Graphs, Hits, PageRank}
+import graft.operators.{DriverPath, Graphs, Hits, PageRank}
 
 /** The r12 driver fast paths (PageRank / PPR / HITS / LPA / walks) must be
   * BIT-IDENTICAL to the distributed loops they shortcut — same rows, same
@@ -96,6 +96,17 @@ class GraphDriverPathSpec extends AnyFunSuite {
           .toSet
       assert(walks(1000000L) == walks(0L),
         s"walks disagree at len=$len walksPerNode=$wpn")
+    }
+  }
+
+  test("SPARK_GRAFT_DRIVER_EDGE_LIMIT: whole numbers parse, anything else names the variable") {
+    assert(DriverPath.parseLimit(None).isEmpty)
+    assert(DriverPath.parseLimit(Some(" 0 ")).contains(0L))
+    assert(DriverPath.parseLimit(Some("250000")).contains(250000L))
+    for (bad <- Seq("", "1e6", "ten", "12abc")) {
+      val msg = intercept[IllegalArgumentException](
+        DriverPath.parseLimit(Some(bad))).getMessage
+      assert(msg.contains("SPARK_GRAFT_DRIVER_EDGE_LIMIT") && msg.contains(s"'$bad'"), msg)
     }
   }
 }

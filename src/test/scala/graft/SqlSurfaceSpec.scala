@@ -1680,4 +1680,98 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(tick("2026-04-05T10:00:30Z")("FLAKY") == "SUCCEEDED")
     assert(taskRow().getInt(7) == 0)
   }
+
+  test("procedure registry: every listed procedure loads; the unknown-name error lists them all") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.catalog.Identifier
+    val root = java.nio.file.Files.createTempDirectory("graft_preg_").toString
+    val cat = new graft.sql.GraftCatalog
+    cat.initialize("preg",
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map("root" -> root).asJava))
+    val listed = cat.listProcedures(Array("system")).map(_.name).toSeq
+    assert(listed == graft.sql.Procedures.names)
+    assert(listed.distinct.size == listed.size, listed)
+    for (n <- listed) {
+      val p = cat.loadProcedure(Identifier.of(Array("system"), n))
+      assert(p.name == n)
+      val params = p.bind(new org.apache.spark.sql.types.StructType()).parameters()
+      assert(params.map(_.name).distinct.length == params.length, n)
+    }
+    val msg = intercept[IllegalArgumentException](
+      cat.loadProcedure(Identifier.of(Array("system"), "nope"))).getMessage
+    val named = msg.substring(msg.indexOf('(') + 1, msg.lastIndexOf(')'))
+      .split(",").map(_.trim).toSet
+    assert(named == listed.toSet, listed.filterNot(named))
+    // the SQL surface lists the same set
+    graft.sql.GraftCatalog.register(spark, "preg", root)
+    assert(spark.sql("SHOW PROCEDURES IN preg.system").collect()
+      .map(_.getString(3)).toSet == listed.toSet)
+  }
+
+  test("CALL table arguments are privilege-checked: maintenance needs OWNERSHIP, history SELECT") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ppriv_").toString
+    graft.sql.GraftCatalog.register(spark, "pp", root)
+    spark.sql("CREATE NAMESPACE pp.NS")
+    spark.sql("CREATE TABLE pp.NS.T (k INT)")
+    spark.sql("INSERT INTO pp.NS.T VALUES (1)")
+    spark.sql("INSERT INTO pp.NS.T VALUES (2)")
+    spark.sql("CREATE TABLE pp.NS.U (k INT)")
+    spark.sql("CALL pp.system.create_role('READER')")
+    spark.sql("CALL pp.system.grant_privilege(role => 'READER', " +
+      "privilege => 'SELECT', on => 'NS.T')")
+    val vt = graft.storage.VersionedTable(spark, s"$root/NS/T")
+    def denied(f: => Any): String = {
+      val e = intercept[Throwable](f)
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    }
+    try {
+      spark.conf.set("spark.graft.role", "reader")
+      assert(denied(spark.sql("CALL pp.system.vacuum('NS.T', retain_last => 1)"))
+        .contains("not authorized"))
+      assert(denied(spark.sql("CALL pp.system.compact(table => 'NS.T')"))
+        .contains("not authorized"))
+      assert(vt.state.get.parts.size == 2, "a denied compact rewrites nothing")
+      assert(spark.sql("CALL pp.system.history('NS.T')").collect()
+        .map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+      assert(denied(spark.sql("CALL pp.system.history('NS.U')"))
+        .contains("not authorized"))
+      assert(denied(spark.sql("CALL pp.system.zonemaps('NS.U')"))
+        .contains("not authorized"))
+      // clone reads the source and creates the target: CREATE TABLE is missing
+      assert(denied(spark.sql("CALL pp.system.clone('NS.T', 'NS.T2')"))
+        .contains("not authorized"))
+
+      spark.conf.set("spark.graft.role", "accountadmin")
+      spark.sql("CALL pp.system.grant_privilege(role => 'READER', " +
+        "privilege => 'OWNERSHIP', on => 'NS.T')")
+      spark.conf.set("spark.graft.role", "reader")
+      assert(spark.sql("CALL pp.system.compact(table => 'NS.T')").head.getLong(0) == 4L)
+    } finally spark.conf.unset("spark.graft.role")
+  }
+
+  test("CALL history/zonemaps read metadata only: no Spark job") {
+    import graft.TestSpark.jobsStartedBy
+    val root = java.nio.file.Files.createTempDirectory("graft_pnj_").toString
+    graft.sql.GraftCatalog.register(spark, "pnj", root)
+    spark.sql("CREATE NAMESPACE pnj.NS")
+    spark.sql("CREATE TABLE pnj.NS.T (k INT, v STRING)")
+    spark.sql("INSERT INTO pnj.NS.T VALUES (1, 'a'), (5, 'e')")
+    spark.sql("INSERT INTO pnj.NS.T VALUES (9, 'i')")
+    // warm the catalog and the statement path, then count
+    spark.sql("CALL pnj.system.history('NS.T')").collect()
+    spark.sql("CALL pnj.system.zonemaps('NS.T')").collect()
+    var hist: Array[org.apache.spark.sql.Row] = null
+    var zm: Array[org.apache.spark.sql.Row] = null
+    assert(jobsStartedBy {
+      hist = spark.sql("CALL pnj.system.history('NS.T')").collect()
+    } == 0)
+    assert(jobsStartedBy {
+      zm = spark.sql("CALL pnj.system.zonemaps(table => 'NS.T')").collect()
+    } == 0)
+    assert(hist.map(r => r.getLong(0) -> r.getString(2)).toSeq ==
+      Seq(1L -> "CREATE", 2L -> "APPEND", 3L -> "APPEND"))
+    assert(zm.filter(_.getString(1) == "k").map(r => (r.getString(2), r.getString(3)))
+      .toSet == Set(("1", "5"), ("9", "9")))
+  }
 }
