@@ -6,6 +6,7 @@ import graft.changefeed.ChangeFeed
 import graft.functions.Co2Functions
 import graft.operators.{MergeInto, OrderedLag}
 import graft.plans.expressions.runTimestamp
+import graft.sql.{TaskDag, TaskDef}
 import graft.storage.VersionedTable
 
 /** The full incremental pipeline — raw → harmonized → analytics — with the
@@ -30,8 +31,6 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
   val dailyStats  = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/DAILY_CO2_STATS", collectStats = false)
   val weeklyStats = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/WEEKLY_CO2_STATS", collectStats = false)
   val minMax      = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/_CO2_MINMAX", collectStats = false)
-
-  private val runLog = VersionedTable(spark, s"$warehouseRoot/_TASK_HISTORY", collectStats = false)
 
   // ---------------------------------------------------------------- load --
 
@@ -213,28 +212,33 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
   // --------------------------------------------------------- orchestrate --
 
-  /** The task DAG: load → (stream gate) harmonize → analytics, with a run
-    * history log (reference TASK_HISTORY introspection:
-    * templates/orchestrate_tasks.sql.j2:64-75).
+  /** The CO2 task DAG (orchestrate_tasks.sql.j2:28-54), each task with the
+    * stage it runs on a feed path; [[tasks]], [[defineTasks]] and
+    * [[runPipeline]] all derive from this one list.
+    */
+  private def dag(schedule: String): Seq[(TaskDef, String => String)] = Seq(
+    (TaskDef("CO2_RAW_DATA_TASK", Some(schedule), None),
+      feed => s"loaded ${load(feed)} rows"),
+    (TaskDef("CO2_HARMONIZED_TASK", Some("AFTER CO2_RAW_DATA_TASK"),
+      Some(s"SYSTEM$$STREAM_HAS_DATA('$STREAM_NAME')")), _ => harmonize()),
+    (TaskDef("CO2_ANALYTICS_TASK", Some("AFTER CO2_HARMONIZED_TASK"), None),
+      _ => analytics()))
+
+  /** One DAG run on [[TaskDag.run]], gated by [[streamHasData]]: each
+    * visited task with its stage's return string, or "skipped (stream
+    * empty)". A failing stage is recorded as FAILED, then rethrown.
     */
   def runPipeline(feedPath: String): Seq[(String, String)] = {
-    import spark.implicits._
-    val results = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    results += ("CO2_RAW_DATA_TASK" -> s"loaded ${load(feedPath)} rows")
-    val consumed = harmonized.offsets.getOrElse(STREAM_NAME, 0L)
-    if (feed.hasData(consumed)) {             // WHEN SYSTEM$STREAM_HAS_DATA
-      results += ("CO2_HARMONIZED_TASK" -> harmonize())
-      results += ("CO2_ANALYTICS_TASK" -> analytics())
-    } else {
-      results += ("CO2_HARMONIZED_TASK" -> "skipped (stream empty)")
-    }
-    val now = java.sql.Timestamp.from(java.time.Instant.now())
-    runLog.append(results.toSeq.map { case (t, s) => (t, s, now) }
-      .toDF("TASK_NAME", "STATE", "SCHEDULED_TIME"))
-    results.toSeq
+    val defs = dag(DefaultSchedule)
+    val stage = defs.map { case (t, run) => t.name -> run }.toMap
+    val runs = TaskDag.run(spark, warehouseRoot, defs.head._1, defs.map(_._1),
+        rootEvenIfSuspended = false, new java.sql.Timestamp(System.currentTimeMillis()))(
+      _ => streamHasData, t => Some(stage(t.name)(feedPath)))
+    runs.flatMap(_.error).foreach(e => throw e)
+    runs.map(r => r.task -> r.returnValue.getOrElse("skipped (stream empty)"))
   }
 
-  def taskHistory: DataFrame = runLog.read.orderBy(desc("SCHEDULED_TIME"))
+  def taskHistory: DataFrame = TaskDag.history(spark, warehouseRoot)
 
   /** SHOW TASKS parity: the DAG's task definitions — root task on the cron
     * schedule, children chained with AFTER + the stream-gate condition
@@ -243,14 +247,10 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     * itself is external (cron/Airflow calling runPipeline), matching the
     * reference's scheduler-driven tasks.
     */
-  def tasks(schedule: String = "USING CRON 0 10 * * * UTC"): DataFrame = {
+  def tasks(schedule: String = DefaultSchedule): DataFrame = {
     import spark.implicits._
-    Seq(
-      ("CO2_RAW_DATA_TASK", schedule, null: String),
-      ("CO2_HARMONIZED_TASK", "AFTER CO2_RAW_DATA_TASK",
-        s"SYSTEM$$STREAM_HAS_DATA('$STREAM_NAME')"),
-      ("CO2_ANALYTICS_TASK", "AFTER CO2_HARMONIZED_TASK", null: String)
-    ).toDF("NAME", "SCHEDULE", "CONDITION")
+    dag(schedule).map { case (t, _) => (t.name, t.schedule.orNull, t.condition.orNull) }
+      .toDF("NAME", "SCHEDULE", "CONDITION")
   }
 
   /** SYSTEM$STREAM_HAS_DATA surface for the harmonized consumer. */
@@ -282,11 +282,16 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
   /** Persist the task DAG into the warehouse `_TASKS` table so
     * `CALL <cat>.system.show_tasks()` lists it from SQL text (SHOW TASKS
-    * parity, orchestrate_tasks.sql.j2:81). Idempotent overwrite; 3 rows.
+    * parity, orchestrate_tasks.sql.j2:81). Idempotent: the three CO2 rows
+    * are replaced by fresh, active definitions, like the template's
+    * suspend / CREATE OR REPLACE / resume deploy (:19-55); every other task
+    * in the warehouse is kept as it is.
     */
-  def defineTasks(schedule: String = "USING CRON 0 10 * * * UTC"): Unit =
-    VersionedTable(spark, s"$warehouseRoot/_TASKS", collectStats = false)
-      .overwrite(tasks(schedule))
+  def defineTasks(schedule: String = DefaultSchedule): Unit = {
+    val defs = dag(schedule).map(_._1)
+    TaskDag.writeTasks(spark, warehouseRoot, TaskDag.readTasks(spark, warehouseRoot)
+      .filterNot(t => defs.exists(_.name.equalsIgnoreCase(t.name))) ++ defs)
+  }
 
   /** Register every layer as temp views (dots → underscores) plus the
     * stream view with metadata columns, so `spark.sql` covers the
@@ -306,6 +311,7 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
 object Co2Pipeline {
   val STREAM_NAME = "RAW_CO2.CO2_DATA_STREAM"
+  private val DefaultSchedule = "USING CRON 0 10 * * * UTC"
 
   def apply(spark: SparkSession, warehouseRoot: String): Co2Pipeline =
     new Co2Pipeline(spark, warehouseRoot)

@@ -111,6 +111,7 @@ object Hits {
           val grp = if (bySrc) dstI(k2) else srcI(k2)
           // inner join: `from` covers all keyed endpoints by construction
           val sc = from(key)
+          require(sc >= 0, s"HITS: vertex ${ids(key)} has no score from the previous half-round")
           raw(grp) = (if (raw(grp) < 0) 0L else raw(grp)) + sc
           k2 += 1
         }

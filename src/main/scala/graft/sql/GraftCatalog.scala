@@ -16,7 +16,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.changefeed.ChangeFeed
@@ -357,68 +357,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
     }
 
-  // ----------------------------------------------------------- task DDL ---
-
-  /** One row of the warehouse `_TASKS` table. `schedule` carries either a
-    * cron schedule (`USING CRON …`) or the dependency edge (`AFTER
-    * <parent>`), the same encoding [[graft.co2.Co2Pipeline.tasks]] uses and
-    * SHOW TASKS displays. `body` is the task's SQL text (`;`-separated
-    * statements); Scala-driven tasks (the pipeline DAG) have no body and
-    * are executed by their own orchestrator, not `execute_task`.
-    * `suspendAfter` is Snowflake's `SUSPEND_TASK_AFTER_NUM_FAILURES`
-    * parameter (0 = never auto-suspend); `consecFailures` is the running
-    * count of consecutive failed runs behind it, reset on any success.
-    */
-  private[sql] case class TaskDef(name: String, schedule: Option[String],
-                                  condition: Option[String], body: Option[String],
-                                  suspended: Boolean, suspendAfter: Int = 0,
-                                  consecFailures: Int = 0)
-
-  private def tasksVt =
-    VersionedTable(spark, s"$root/_TASKS", collectStats = false)
-
-  /** Reads `_TASKS` tolerating the pre-task-DDL 3-column layout
-    * (NAME/SCHEDULE/CONDITION) that [[graft.co2.Co2Pipeline.defineTasks]]
-    * writes — absent BODY/SUSPENDED mean body-less, active tasks.
-    */
-  private[sql] def readTasks(): Seq[TaskDef] = {
-    val vt = tasksVt
-    if (!vt.exists) return Nil
-    var df = vt.read
-    if (!df.columns.contains("BODY"))
-      df = df.withColumn("BODY", lit(null).cast("string"))
-    if (!df.columns.contains("SUSPENDED"))
-      df = df.withColumn("SUSPENDED", lit(false))
-    if (!df.columns.contains("SUSPEND_AFTER_FAILURES"))
-      df = df.withColumn("SUSPEND_AFTER_FAILURES", lit(0))
-    if (!df.columns.contains("CONSEC_FAILURES"))
-      df = df.withColumn("CONSEC_FAILURES", lit(0))
-    df.select(col("NAME"), col("SCHEDULE"), col("CONDITION"), col("BODY"),
-        col("SUSPENDED"), col("SUSPEND_AFTER_FAILURES"),
-        col("CONSEC_FAILURES"))
-      .collect().toSeq.map { r =>
-        def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
-        TaskDef(r.getString(0), opt(1), opt(2), opt(3),
-          !r.isNullAt(4) && r.getBoolean(4),
-          if (r.isNullAt(5)) 0 else r.getInt(5),
-          if (r.isNullAt(6)) 0 else r.getInt(6))
-      }
-  }
-
-  private[sql] def writeTasks(ts: Seq[TaskDef]): Unit = {
-    val schema = StructType(Seq(
-      StructField("NAME", StringType, nullable = false),
-      StructField("SCHEDULE", StringType, nullable = true),
-      StructField("CONDITION", StringType, nullable = true),
-      StructField("BODY", StringType, nullable = true),
-      StructField("SUSPENDED", BooleanType, nullable = false),
-      StructField("SUSPEND_AFTER_FAILURES", IntegerType, nullable = false),
-      StructField("CONSEC_FAILURES", IntegerType, nullable = false)))
-    val rows = ts.map(t =>
-      Row(t.name, t.schedule.orNull, t.condition.orNull, t.body.orNull,
-        t.suspended, t.suspendAfter, t.consecFailures))
-    tasksVt.overwrite(spark.createDataFrame(rows.asJava, schema))
-  }
+  // -------------------------------------------------------------- tasks ---
 
   private[sql] val StreamCond =
     """(?i)\s*SYSTEM\$STREAM_HAS_DATA\(\s*'([^']+)'\s*\)\s*""".r
@@ -448,103 +387,48 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Shared DAG executor behind `execute_task` (manual trigger — the root
-    * runs even if suspended) and `run_due` (scheduler tick — a suspended
-    * root never fires). Runs the root then AFTER-descendants in
-    * dependency order; a suspended child / false WHEN gate / failed body
-    * stops its subtree. Every visited task appends
-    * (TASK_NAME, STATE, SCHEDULED_TIME, ERROR_MESSAGE) to `_TASK_HISTORY`
-    * — STATE is the outcome string (FAILED states carry the first line of
-    * the error, Snowflake TASK_HISTORY ERROR_MESSAGE parity in the
-    * dedicated column). Failure accounting: a task whose body fails has
-    * its consecutive-failure counter bumped (reset on success); reaching
-    * a non-zero `suspendAfter` threshold auto-suspends the task —
+  /** `execute_task` (manual trigger — the root runs even if suspended) and
+    * `run_due` (scheduler tick — a suspended root never fires) walk the DAG
+    * with [[TaskDag.run]]: WHEN gates through [[streamStatus]], bodies as
+    * SQL statements. Failure accounting: a task whose body fails has its
+    * consecutive-failure counter bumped (reset on success); reaching a
+    * non-zero `suspendAfter` threshold auto-suspends the task —
     * `SUSPEND_TASK_AFTER_NUM_FAILURES` parity. The suspension is durable
     * (written to `_TASKS`) and lifted by `alter_task RESUME`, which also
     * resets the counter.
     */
   private[sql] def runTaskDag(rootTask: TaskDef, all: Seq[TaskDef],
-                         rootEvenIfSuspended: Boolean,
-                         scheduledTime: java.sql.Timestamp)
+                              rootEvenIfSuspended: Boolean,
+                              scheduledTime: java.sql.Timestamp)
       : Seq[(String, String)] = {
-    val results = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val visited = scala.collection.mutable.Set[String]()
-    def children(parent: String): Seq[TaskDef] = all
-      .filter(_.schedule.exists(_.trim.equalsIgnoreCase(s"AFTER $parent")))
-      .sortBy(_.name)
-    def exec(t: TaskDef, isRoot: Boolean): Unit = {
-      if (!visited.add(t.name.toUpperCase)) return // AFTER-cycle guard
-      if (t.suspended && !(isRoot && rootEvenIfSuspended)) {
-        results += t.name -> "SKIPPED (suspended)"
-        return
-      }
-      val gate =
-        try t.condition.forall(conditionHolds)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            results += t.name -> s"FAILED: ${firstLine(e)}"
-            return
-        }
-      if (!gate) {
-        results += t.name -> "SKIPPED (WHEN condition false)"
-        return
-      }
-      t.body match {
-        case None =>
-          results += t.name -> ("FAILED: task has no SQL body " +
-            "(Scala-defined task; run it from its own pipeline)")
-          return
-        case Some(b) =>
-          try {
-            splitStatements(b).foreach(stmt => spark.sql(stmt).collect())
-            results += t.name -> "SUCCEEDED"
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              results += t.name -> s"FAILED: ${firstLine(e)}"
-              return
-          }
-      }
-      children(t.name).foreach(exec(_, isRoot = false))
-    }
-    exec(rootTask, isRoot = true)
+    val results = TaskDag.run(spark, root, rootTask, all, rootEvenIfSuspended,
+        scheduledTime)(conditionHolds, t => t.body match {
+      case Some(b) =>
+        splitStatements(b).foreach(stmt => spark.sql(stmt).collect())
+        None
+      case None => throw new IllegalStateException("task has no SQL body " +
+        "(Scala-defined task; run it from its own pipeline)")
+    }).map(r => r.task -> r.state)
 
     // SUSPEND_TASK_AFTER_NUM_FAILURES accounting: bump/reset each visited
     // task's consecutive-failure counter; crossing a non-zero threshold
     // suspends the task durably. One _TASKS write per DAG run, only when
-    // a counter actually moved.
+    // a counter actually moved. Re-read rather than reuse `all`: a prior
+    // DAG in the same run_due tick may have written counters it predates.
     val outcomes = results.toMap
-    var changed = false
-    // re-read rather than reuse `all`: a prior DAG in the same run_due
-    // tick may have written counters this snapshot predates
-    val updated = readTasks().map { t =>
+    val current = TaskDag.readTasks(spark, root)
+    val updated = current.map { t =>
       outcomes.get(t.name) match {
         case Some(s) if s.startsWith("FAILED") =>
           val n = t.consecFailures + 1
-          val trip = t.suspendAfter > 0 && n >= t.suspendAfter && !t.suspended
-          changed = true
-          t.copy(consecFailures = n, suspended = t.suspended || trip)
-        case Some("SUCCEEDED") if t.consecFailures != 0 =>
-          changed = true
-          t.copy(consecFailures = 0)
+          t.copy(consecFailures = n,
+            suspended = t.suspended || (t.suspendAfter > 0 && n >= t.suspendAfter))
+        case Some(TaskDag.Succeeded) => t.copy(consecFailures = 0)
         case _ => t
       }
     }
-    if (changed) writeTasks(updated)
-
-    val histSchema = StructType(Seq(
-      StructField("TASK_NAME", StringType, nullable = false),
-      StructField("STATE", StringType, nullable = false),
-      StructField("SCHEDULED_TIME", TimestampType, nullable = false),
-      StructField("ERROR_MESSAGE", StringType, nullable = true)))
-    VersionedTable(spark, s"$root/_TASK_HISTORY", collectStats = false)
-      .append(spark.createDataFrame(
-        results.toSeq.map { case (t, s) =>
-          val err = if (s.startsWith("FAILED: ")) s.stripPrefix("FAILED: ")
-                    else null
-          Row(t, s, scheduledTime, err)
-        }.asJava,
-        histSchema))
-    results.toSeq
+    if (updated != current) TaskDag.writeTasks(spark, root, updated)
+    results
   }
 
   // ------------------------------------------- scheduler (run_due) --
@@ -572,10 +456,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         .map { case (n, i) => Row(n, java.sql.Timestamp.from(i)) }.asJava,
       schema))
   }
-
-  private def firstLine(e: Throwable): String =
-    Option(e.getMessage).getOrElse(e.toString)
-      .linesIterator.find(_.trim.nonEmpty).getOrElse(e.toString).take(200)
 
   override def alterNamespace(namespace: Array[String], changes: NamespaceChange*): Unit =
     throw new UnsupportedOperationException("ALTER NAMESPACE is not supported")

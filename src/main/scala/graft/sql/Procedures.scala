@@ -320,7 +320,7 @@ object Procedures {
       local("name STRING NOT NULL, schedule STRING, condition STRING, " +
         "suspended BOOLEAN NOT NULL, last_fire TIMESTAMP, next_fire TIMESTAMP, " +
         "suspend_after_failures INT NOT NULL, consec_failures INT NOT NULL",
-        c.readTasks().map { t =>
+        TaskDag.readTasks(spark, c.root).map { t =>
           val last = runs.get(t.name.toUpperCase)
           val next =
             if (t.suspended) None
@@ -339,21 +339,9 @@ object Procedures {
     proc("task_history",
       "recent pipeline task runs, newest first (TASK_HISTORY parity)",
       int("limit", 100)) { a =>
-      val vt = VersionedTable(spark, s"${a.catalog.root}/_TASK_HISTORY")
-      if (!vt.exists)
-        local("task_name STRING NOT NULL, state STRING NOT NULL, " +
-          "scheduled_time TIMESTAMP NOT NULL, error_message STRING")
-      else {
-        // the Scala pipeline's runLog predates ERROR_MESSAGE — absent
-        // column reads as null (same tolerance as readTasks)
-        val df = vt.read
-        val err = if (df.columns.contains("ERROR_MESSAGE")) col("ERROR_MESSAGE")
-                  else lit(null).cast(StringType)
-        df.select(col("TASK_NAME").as("task_name"), col("STATE").as("state"),
-            col("SCHEDULED_TIME").as("scheduled_time"), err.as("error_message"))
-          .orderBy(desc("scheduled_time"))
-          .limit(math.max(0, a.int("limit")))
-      }
+      TaskDag.history(spark, a.catalog.root)
+        .select(TaskDag.HistorySchema.fieldNames.toSeq.map(n => col(n).as(n.toLowerCase)): _*)
+        .limit(math.max(0, a.int("limit")))
     },
     // `CREATE [OR REPLACE] TASK` parity (orchestrate_tasks.sql.j2:28-48).
     // Like Snowflake, a new task is created SUSPENDED and must be resumed
@@ -382,7 +370,7 @@ object Procedures {
         require(c.StreamCond.pattern.matcher(condition).matches(),
           s"task $taskName: WHEN condition must be " +
             s"SYSTEM$$STREAM_HAS_DATA('<ns>.<stream>'), got '$condition'")
-      val existing = c.readTasks()
+      val existing = TaskDag.readTasks(spark, c.root)
       require(a.bool("or_replace") || !existing.exists(_.name.equalsIgnoreCase(taskName)),
         s"task $taskName already exists (use or_replace => true)")
       if (after.nonEmpty)
@@ -397,9 +385,10 @@ object Procedures {
       val sched =
         if (after.nonEmpty) Some(s"AFTER $after")
         else Some(schedule).filter(_.nonEmpty)
-      val t = c.TaskDef(taskName, sched, Some(condition).filter(_.nonEmpty),
+      val t = TaskDef(taskName, sched, Some(condition).filter(_.nonEmpty),
         Some(body), suspended = true, suspendAfter = suspendAfter)
-      c.writeTasks(existing.filterNot(_.name.equalsIgnoreCase(taskName)) :+ t)
+      TaskDag.writeTasks(spark, c.root,
+        existing.filterNot(_.name.equalsIgnoreCase(taskName)) :+ t)
       taskStatus(taskName, "created (suspended)")
     },
     // `ALTER TASK <t> SUSPEND|RESUME` parity (orchestrate_tasks.sql.j2:19-21,
@@ -411,11 +400,11 @@ object Procedures {
       val action = a.str("action").trim.toUpperCase
       require(action == "SUSPEND" || action == "RESUME",
         s"alter_task action must be SUSPEND or RESUME, got '$action'")
-      val existing = c.readTasks()
+      val existing = TaskDag.readTasks(spark, c.root)
       val found = existing.exists(_.name.equalsIgnoreCase(taskName))
       require(found || a.bool("if_exists"), s"task $taskName does not exist")
       if (found)
-        c.writeTasks(existing.map(t =>
+        TaskDag.writeTasks(spark, c.root, existing.map(t =>
           if (t.name.equalsIgnoreCase(taskName))
             // RESUME forgives the failure streak, like Snowflake's
             // auto-suspend counter resetting on ALTER TASK RESUME
@@ -432,10 +421,11 @@ object Procedures {
       str("task"), bool("if_exists", false)) { a =>
       val c = a.catalog
       val taskName = a.str("task").trim
-      val existing = c.readTasks()
+      val existing = TaskDag.readTasks(spark, c.root)
       val found = existing.exists(_.name.equalsIgnoreCase(taskName))
       require(found || a.bool("if_exists"), s"task $taskName does not exist")
-      if (found) c.writeTasks(existing.filterNot(_.name.equalsIgnoreCase(taskName)))
+      if (found) TaskDag.writeTasks(spark, c.root,
+        existing.filterNot(_.name.equalsIgnoreCase(taskName)))
       taskStatus(taskName, if (found) "dropped" else "not found (if_exists)")
     },
     // `EXECUTE TASK <root>` parity (orchestrate_tasks.sql.j2:63): Snowflake's
@@ -447,7 +437,7 @@ object Procedures {
       str("task")) { a =>
       val c = a.catalog
       val rootName = a.str("task").trim
-      val all = c.readTasks()
+      val all = TaskDag.readTasks(spark, c.root)
       val rootTask = all.find(_.name.equalsIgnoreCase(rootName)).getOrElse(
         throw new IllegalArgumentException(s"task $rootName does not exist"))
       taskStates(c.runTaskDag(rootTask, all, rootEvenIfSuspended = true,
@@ -484,10 +474,10 @@ object Procedures {
             java.time.LocalDateTime.parse(nowStr.replace(' ', 'T'))
               .toInstant(java.time.ZoneOffset.UTC)
         }
-      val all = c.readTasks()
+      val all = TaskDag.readTasks(spark, c.root)
       var runs = c.readTaskRuns()
       val results = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      def fire(t: c.TaskDef, at: java.time.Instant): Unit = {
+      def fire(t: TaskDef, at: java.time.Instant): Unit = {
         runs += t.name.toUpperCase -> at
         results ++= c.runTaskDag(t, all, rootEvenIfSuspended = false,
           scheduledTime = java.sql.Timestamp.from(at))

@@ -155,6 +155,88 @@ class Co2PipelineSpec extends AnyFunSuite {
     assert(p.weeklyStats.state.get.version == weeklyBefore + 1)
   }
 
+  test("execute_task and runPipeline append to one task history") {
+    val dir = Files.createTempDirectory("co2_task_history_")
+    val wh = dir.resolve("warehouse").toString
+    val p = Co2Pipeline(spark, wh)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2020, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2020, 3, 1))
+    p.runPipeline(feed.toString)
+    p.registerCatalog("co2th")
+    // the CO2 tasks have no SQL body, so the catalog records a failed run
+    val manual = spark.sql("CALL co2th.system.execute_task('CO2_RAW_DATA_TASK')")
+      .collect().map(r => r.getString(0) -> r.getString(1))
+    assert(manual.length == 1 && manual.head._1 == "CO2_RAW_DATA_TASK" &&
+      manual.head._2.startsWith("FAILED: task has no SQL body"), manual.toSeq)
+    writeFeed(feed, start, LocalDate.of(2020, 3, 2))
+    val history = graft.storage.VersionedTable(spark, s"$wh/_TASK_HISTORY")
+    val before = history.state.get.version
+    assert(p.runPipeline(feed.toString).head == ("CO2_RAW_DATA_TASK" -> "loaded 1 rows"))
+    assert(history.state.get.version == before + 1) // one history commit per run
+
+    val hist = spark.sql("CALL co2th.system.task_history()")
+    assert(hist.columns.toSeq ==
+      Seq("task_name", "state", "scheduled_time", "error_message", "return_value"))
+    val rows = hist.collect()
+    assert(rows.length == 3 + 1 + 3, rows.toSeq)
+    val failed = rows.filter(_.getString(1).startsWith("FAILED"))
+    assert(failed.length == 1 && failed.head.getString(3).startsWith("task has no SQL body"))
+    // newest first: the one-day run, its stage summaries in RETURN_VALUE
+    assert(rows.take(3).map(r => r.getString(0) -> r.getString(1)).toSet == Set(
+      "CO2_RAW_DATA_TASK" -> "SUCCEEDED", "CO2_HARMONIZED_TASK" -> "SUCCEEDED",
+      "CO2_ANALYTICS_TASK" -> "SUCCEEDED"))
+    assert(rows.head.getString(4) != null &&
+      rows.exists(r => r.getString(0) == "CO2_RAW_DATA_TASK" && r.getString(4) == "loaded 1 rows"))
+  }
+
+  test("registerCatalog redefines the CO2 tasks and keeps the warehouse's other tasks") {
+    val dir = Files.createTempDirectory("co2_define_tasks_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    p.registerCatalog("co2dt")
+    spark.sql(
+      """CALL co2dt.system.create_task(task => 'MINE', schedule => '30 MINUTE',
+        |  body => 'SELECT 1', suspend_after_failures => 2)""".stripMargin).collect()
+    spark.sql("CALL co2dt.system.alter_task(task => 'MINE', action => 'RESUME')").collect()
+    spark.sql("CALL co2dt.system.alter_task(task => 'CO2_ANALYTICS_TASK', action => 'SUSPEND')")
+      .collect()
+    p.registerCatalog("co2dt")
+    val shown = spark.sql("CALL co2dt.system.show_tasks()").collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(shown.keySet ==
+      Set("CO2_RAW_DATA_TASK", "CO2_HARMONIZED_TASK", "CO2_ANALYTICS_TASK", "MINE"))
+    assert(!shown("MINE").getBoolean(3) && shown("MINE").getInt(6) == 2, shown("MINE"))
+    // the CO2 tasks are deployed afresh: created, then resumed
+    assert(!shown("CO2_ANALYTICS_TASK").getBoolean(3))
+    assert(shown("CO2_HARMONIZED_TASK").getString(1) == "AFTER CO2_RAW_DATA_TASK")
+  }
+
+  test("a failing stage is a FAILED history row, stops its subtree and rethrows") {
+    val dir = Files.createTempDirectory("co2_stage_fail_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2020, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2020, 3, 1))
+    p.runPipeline(feed.toString)
+    // a harmonized table of another shape: the harmonize merge fails
+    p.harmonized.overwrite(Seq(1).toDF("X"))
+    writeFeed(feed, start, LocalDate.of(2020, 3, 2))
+    val thrown = intercept[Exception](p.runPipeline(feed.toString))
+    // the same failure as calling the stage directly, not a wrapper
+    val direct = intercept[Exception](p.harmonize())
+    def firstLine(e: Throwable) = e.getMessage.linesIterator.next()
+    assert(thrown.getClass == direct.getClass && firstLine(thrown) == firstLine(direct))
+
+    val hist = p.taskHistory.collect()
+    val newest = hist.head.getTimestamp(2)
+    val run = hist.filter(_.getTimestamp(2) == newest).map(r => r.getString(0) -> r).toMap
+    assert(run.keySet == Set("CO2_RAW_DATA_TASK", "CO2_HARMONIZED_TASK"), run) // no analytics
+    assert(run("CO2_RAW_DATA_TASK").getString(4) == "loaded 1 rows")
+    val harm = run("CO2_HARMONIZED_TASK")
+    assert(!harm.isNullAt(3) && harm.getString(1) == s"FAILED: ${harm.getString(3)}", harm)
+    assert(harm.getString(3) == firstLine(thrown).take(200))
+  }
+
   test("parseText tolerates 6th column, comments, malformed numerics") {
     val f = Files.createTempFile("noaa_", ".txt")
     Files.writeString(f,
