@@ -168,9 +168,10 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
     log.read.filter(col(BATCH_ID) > consumedBatchId && col(ACTION) === "INSERT")
   }
 
-  /** SYSTEM\$STREAM_HAS_DATA equivalent — O(1) metadata check, no scan. */
-  def hasData(consumedBatchId: Long): Boolean =
-    log.exists && lastBatchId > consumedBatchId
+  /** SYSTEM\$STREAM_HAS_DATA equivalent — O(1) metadata check, no scan:
+    * one commit-log read ([[lastBatchId]] is 0 before the first publish).
+    */
+  def hasData(consumedBatchId: Long): Boolean = lastBatchId > consumedBatchId
 }
 
 object ChangeFeed {

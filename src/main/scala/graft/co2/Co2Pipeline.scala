@@ -99,12 +99,23 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     if (!feed.hasData(consumed)) return "No data in stream - nothing to harmonize"
 
     val latestBatch = feed.lastBatchId
-    val pending = feed.pending(consumed)
-      .filter(col(ChangeFeed.ACTION) === "INSERT")
-      .drop(ChangeFeed.metaColumns: _*)
+    val r = mergeHarmonized(
+      feed.pending(consumed).filter(col(ChangeFeed.ACTION) === "INSERT"),
+      Map(STREAM_NAME -> latestBatch))
+    s"Harmonized: ${r.updated} updated, ${r.inserted} inserted (v${r.version})"
+  }
 
+  /** Derive DATE for change-feed INSERT rows, upsert them into harmonized
+    * and refresh the 1-row _CO2_MINMAX table: the one harmonize step of
+    * the batch consumer ([[harmonize]]) and the streaming one
+    * ([[graft.streaming.Streaming.harmonizeAvailableNow]]).
+    * `consumeOffsets` commit atomically with the merge.
+    */
+  private[graft] def mergeHarmonized(inserts: DataFrame,
+                                     consumeOffsets: Map[String, Long]): MergeInto.MergeResult = {
     val batchTs = runTimestamp() // one instant per merge batch
-    val source = pending
+    val source = inserts
+      .drop(ChangeFeed.metaColumns: _*)
       .withColumn("DATE",
         to_date(concat_ws("-",
           col("YEAR").cast("string"),
@@ -118,12 +129,12 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
     // Heavy statement bracket — reference scales to XLARGE around the merge
     // (co2_harmonized_sp/function.py:115,166)
-    val r = withScaledResources("XLARGE") {
+    withScaledResources("XLARGE") {
       // Partition-scoped merge: harmonized is committed partitioned by YEAR
       // (functionally determined by the DATE key), so an incremental load
       // rewrites only the touched years — never the full history snapshot.
       val r = MergeInto(spark, harmonized, source, Seq("DATE"),
-        consumeOffsets = Map(STREAM_NAME -> latestBatch), dedupeSource = true,
+        consumeOffsets = consumeOffsets, dedupeSource = true,
         partitionBy = Some("YEAR"))
 
       // CTAS _CO2_MINMAX (co2_harmonized_sp/function.py:74-91)
@@ -133,8 +144,6 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       minMax.overwrite(mm)
       r
     }
-
-    s"Harmonized: ${r.updated} updated, ${r.inserted} inserted (v${r.version})"
   }
 
   // ----------------------------------------------------------- analytics --

@@ -129,8 +129,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def streamConsumedOffset(props: Map[String, String], offsetKey: String): Long =
     props.get(GraftCatalog.STREAM_CONSUMER_PROP) match {
       case Some(rel) =>
-        val vt = VersionedTable(spark, s"$root/$rel")
-        if (vt.exists) vt.offsets.getOrElse(offsetKey, 0L) else 0L
+        VersionedTable(spark, s"$root/$rel").offsets.getOrElse(offsetKey, 0L)
       case None => 0L
     }
 
@@ -340,7 +339,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val offsetKey = props.getOrElse(GraftCatalog.STREAM_KEY_PROP, qualified)
     val feed = ChangeFeed(spark, offsetKey, dirFor(id))
     val consumed = streamConsumedOffset(props, offsetKey)
-    (props, consumed, feed.log.exists && feed.hasData(consumed))
+    (props, consumed, feed.hasData(consumed))
   }
 
   /** Every STREAM object in the warehouse: qualified name → properties
@@ -511,27 +510,24 @@ object GraftCatalog {
       "mode" -> mode))
   }
 
+  /** `_table_meta.json`: one JSON object of string properties, through the
+    * commit records' codec ([[VersionedTable.json]]).
+    */
   private[sql] def readPropsAt(fs: org.apache.hadoop.fs.FileSystem,
                                p: Path): Map[String, String] = {
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
-    val json =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(json).map { m =>
-      def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-      un(m.group(1)) -> un(m.group(2))
-    }.toMap
+    try VersionedTable.json.readTree(in).properties.asScala
+      .map(e => e.getKey -> e.getValue.asText).toMap
+    finally in.close()
   }
 
   private[sql] def writePropsAt(fs: org.apache.hadoop.fs.FileSystem,
                                 p: Path, props: Map[String, String]): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json = props.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-      .mkString("{", ",", "}")
+    val o = VersionedTable.json.createObjectNode()
+    props.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
     val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(VersionedTable.json.writeValueAsBytes(o))
     finally out.close()
   }
 }

@@ -43,9 +43,9 @@ import java.nio.charset.StandardCharsets
   *    time: parts written partitioned carry hive-style `_pt=<value>` dirs,
   *    so the anti-filter is partition PRUNING, not a scan filter.
   *  - Each part's commit entry lists its data files (path, length, mtime),
-  *    so a read plans its scan from the commit alone: no directory listing,
-  *    no Spark listing job. Parts committed before file lists existed are
-  *    read by listing their dirs, as before.
+  *    and every commit records the table schema as DDL, so a read plans its
+  *    scan from the commit alone: no directory listing, no footer read, no
+  *    Spark listing job. A record without either is rejected as malformed.
   */
 final class VersionedTable(spark: SparkSession, val root: String,
                            collectStats: Boolean = true,
@@ -56,17 +56,19 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * unpartitioned full/append parts); a later part's vals shadow the same
     * values in every earlier part. `stats` = zone-map (min, max) per
     * column, harvested from the part's parquet footers at commit time
-    * (empty for pre-zone-map commits and stat-less columns — absent stats
+    * (empty for `collectStats = false` and stat-less columns — absent stats
     * simply mean "never skip this part"). `files` = the part's data files
-    * as written (None for parts committed before file lists were recorded).
+    * as written.
     */
   case class Part(dir: String, vals: Seq[String],
-                  stats: Map[String, (String, String)] = Map.empty,
-                  files: Option[Seq[VersionedTable.DataFile]] = None)
+                  stats: Map[String, (String, String)],
+                  files: Seq[VersionedTable.DataFile])
 
   case class State(version: Long, partitionCol: Option[String],
                    parts: Seq[Part], offsets: Map[String, Long],
-                   schemaDdl: Option[String] = None)
+                   schemaDdl: String) {
+    def schema: StructType = StructType.fromDDL(schemaDdl)
+  }
 
   /** Hive-default-safe encoding of a partition value (NULLs included). */
   private val NULL_PT = "__GRAFT_NULL__"
@@ -83,16 +85,21 @@ final class VersionedTable(spark: SparkSession, val root: String,
   private def partPath(dir: String): String =
     if (dir.startsWith("/") || dir.contains("://")) dir else s"$root/$dir"
 
-  def exists: Boolean = fs.exists(commitsDir) && state.isDefined
+  /** The commit log, ascending by version: one listing of `_commits/`
+    * (temp claim files carry no `.json` suffix). A table never committed
+    * to has no `_commits/` and an empty log. [[vacuum]] trims it.
+    */
+  private def commitLog: Seq[(Long, FileStatus)] =
+    try fs.listStatus(commitsDir).toSeq.collect {
+      case st if st.getPath.getName.endsWith(".json") =>
+        st.getPath.getName.stripSuffix(".json").toLong -> st
+    }.sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
-  def state: Option[State] = {
-    if (!fs.exists(commitsDir)) return None
-    val files = fs.listStatus(commitsDir).map(_.getPath)
-      .filter(_.getName.endsWith(".json"))
-    if (files.isEmpty) return None
-    val latest = files.maxBy(p => p.getName.stripSuffix(".json").toLong)
-    Some(readCommitFile(latest))
-  }
+  def exists: Boolean = state.isDefined
+
+  def state: Option[State] =
+    commitLog.lastOption.map { case (_, st) => readCommitFile(st.getPath) }
 
   def read: DataFrame = state match {
     case Some(s) => readCommitted(s)
@@ -101,23 +108,10 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   private def readCommitted(s: State): DataFrame =
-    if (s.parts.nonEmpty) readState(s)
-    else if (s.schemaDdl.isDefined)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(s.schemaDdl.get))
-    else
-      throw new IllegalStateException(s"table at $root has no committed data")
+    if (s.parts.nonEmpty) readState(s) else emptyRelation(s)
 
-  /** All committed versions, ascending. The commit log is append-only, so
-    * this is one O(#versions) directory listing ([[vacuum]] trims it).
-    */
-  def versions: Seq[Long] = {
-    if (!fs.exists(commitsDir)) return Seq.empty
-    fs.listStatus(commitsDir).map(_.getPath.getName)
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong).toSeq.sorted
-  }
+  /** All committed versions, ascending. */
+  def versions: Seq[Long] = commitLog.map(_._1)
 
   /** Commit history (Delta `DESCRIBE HISTORY` / Snowflake query-history
     * parity), METADATA-ONLY — no data files are opened. The operation
@@ -126,13 +120,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * (overwrite or compaction), ADD_COLUMNS/OFFSETS change only metadata.
     */
   def history: Seq[VersionedTable.CommitInfo] = {
-    if (!fs.exists(commitsDir)) return Seq.empty
-    val mtimes = fs.listStatus(commitsDir)
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map(st => st.getPath.getName.stripSuffix(".json").toLong ->
-        st.getModificationTime).toMap
-    val states = versions.flatMap(v => stateAt(v))
-    states.zip(None +: states.map(Some(_))).map { case (s, prevOpt) =>
+    // a version vacuumed after the listing has no record left: skip it
+    val states = commitLog.flatMap { case (v, st) =>
+      stateAt(v).map(_ -> st.getModificationTime)
+    }
+    states.zip(None +: states.map(x => Some(x._1))).map { case ((s, mtime), prevOpt) =>
       val op = prevOpt match {
         case None =>
           if (s.parts.isEmpty) "CREATE" else "WRITE"
@@ -146,18 +138,16 @@ final class VersionedTable(spark: SparkSession, val root: String,
             else "APPEND"
           else "REWRITE"
       }
-      VersionedTable.CommitInfo(s.version, mtimes.getOrElse(s.version, 0L),
-        op, s.parts.size, s.offsets)
+      VersionedTable.CommitInfo(s.version, mtime, op, s.parts.size, s.offsets)
     }
   }
 
   /** The committed state at an exact version — the time-travel anchor.
     * None if that version was never committed or was [[vacuum]]ed away.
     */
-  def stateAt(version: Long): Option[State] = {
-    val p = new Path(commitsDir, f"$version%08d.json")
-    if (fs.exists(p)) Some(readCommitFile(p)) else None
-  }
+  def stateAt(version: Long): Option[State] =
+    try Some(readCommitFile(new Path(commitsDir, f"$version%08d.json")))
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Time-travel read (`VERSION AS OF`): table contents exactly as commit
     * `version` left them. Snapshot isolation is free — a commit never
@@ -200,9 +190,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     def fieldsOf(v: Long): Map[String, String] = {
       val s = stateAt(v).getOrElse(
         throw new IllegalArgumentException(s"no committed version $v at $root"))
-      s.schemaDdl.map(StructType.fromDDL)
-        .getOrElse(parquetRead(s, s.parts.map(p => partPath(p.dir))).schema)
-        .fields.map(f => f.name -> f.dataType.sql).toMap
+      s.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     }
     val o = fieldsOf(vOld); val n = fieldsOf(vNew)
     val rows =
@@ -248,35 +236,23 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   /** Committed schema as of `version` (metadata only, no data files). */
-  def schemaAt(version: Long): StructType = stateAt(version) match {
-    case Some(s) if s.schemaDdl.isDefined => StructType.fromDDL(s.schemaDdl.get)
-    case Some(s) if s.parts.nonEmpty => readState(s).schema
-    case _ => throw new IllegalArgumentException(
-      s"no committed schema for version $version at $root")
-  }
+  def schemaAt(version: Long): StructType =
+    stateAt(version).getOrElse(throw new IllegalArgumentException(
+      s"no committed schema for version $version at $root")).schema
 
   /** Latest version whose commit landed at or before `tsMillis`
     * (`TIMESTAMP AS OF`). Uses the commit file's own modification time —
     * the atomic-claim create IS the commit instant.
     */
-  def versionAt(tsMillis: Long): Option[Long] = {
-    if (!fs.exists(commitsDir)) return None
-    val cands = fs.listStatus(commitsDir)
-      .filter(_.getPath.getName.endsWith(".json"))
-      .filter(_.getModificationTime <= tsMillis)
-      .map(_.getPath.getName.stripSuffix(".json").toLong)
-    if (cands.isEmpty) None else Some(cands.max)
-  }
+  def versionAt(tsMillis: Long): Option[Long] =
+    commitLog.filter(_._2.getModificationTime <= tsMillis).lastOption.map(_._1)
 
   /** Committed schema without opening data files (every commit records its
-    * DataFrame schema as DDL; pre-schema commits fall back to a footer read).
+    * DataFrame schema as DDL).
     */
-  def schema: StructType = state match {
-    case Some(s) if s.schemaDdl.isDefined => StructType.fromDDL(s.schemaDdl.get)
-    case Some(s) if s.parts.nonEmpty => readState(s).schema
-    case _ =>
-      throw new IllegalStateException(s"table at $root has no committed schema")
-  }
+  def schema: StructType =
+    state.getOrElse(throw new IllegalStateException(
+      s"table at $root has no committed schema")).schema
 
   /** Commit an empty table with just a schema (CREATE TABLE semantics). */
   def createEmpty(schema: StructType): Long = {
@@ -284,7 +260,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val version = prev.map(_.version).getOrElse(0L) + 1
     val offs = prev.map(_.offsets).getOrElse(Map.empty)
     writeCommit(version,
-      State(version, None, Seq.empty, offs, Some(schema.toDDL)))
+      State(version, None, Seq.empty, offs, schema.toDDL))
     version
   }
 
@@ -296,9 +272,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
   def addColumns(fields: Seq[org.apache.spark.sql.types.StructField]): Long = {
     val prev = state.getOrElse(
       throw new IllegalStateException(s"no table at $root"))
-    val cur = prev.schemaDdl.map(StructType.fromDDL).getOrElse(
-      throw new IllegalStateException(
-        s"table at $root predates schema-carrying commits; rewrite it first"))
+    val cur = prev.schema
     val resolver = spark.sessionState.analyzer.resolver
     fields.foreach { f =>
       require(!cur.exists(c => resolver(c.name, f.name)),
@@ -306,47 +280,26 @@ final class VersionedTable(spark: SparkSession, val root: String,
     }
     val version = prev.version + 1
     writeCommit(version, prev.copy(version = version,
-      schemaDdl = Some(StructType(cur ++ fields.map(_.copy(nullable = true))).toDDL)))
+      schemaDdl = StructType(cur ++ fields.map(_.copy(nullable = true))).toDDL))
     version
   }
 
   private def ptKey(c: Column): Column =
     coalesce(c.cast("string"), lit(NULL_PT))
 
-  /** Parquet read with the COMMITTED schema when one is recorded: skips the
-    * footer-read/schema-inference pass that `spark.read.parquet` otherwise
-    * runs per call — a visible per-commit cost in commit-heavy pipelines.
-    * Fields are relaxed to nullable (an older part may hold NULLs in a
-    * column the latest batch happened to commit as NOT NULL).
+  /** The read schema: the COMMITTED schema, so no footer is read, with
+    * fields relaxed to nullable (an older part may hold NULLs in a column
+    * the latest batch happened to commit as NOT NULL).
     */
-  private def parquetRead(s: State, paths: Seq[String]): DataFrame =
-    s.schemaDdl match {
-      case Some(d) => spark.read.schema(relaxed(d)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-
-  private def relaxed(ddl: String): StructType =
-    StructType(StructType.fromDDL(ddl).map(_.copy(nullable = true)))
+  private def relaxed(schema: StructType): StructType =
+    StructType(schema.map(_.copy(nullable = true)))
 
   /** One scan over slices of parts, each a part with its live `_pt` values
-    * (None = the whole part). Parts whose commit lists their files share a
-    * single relation built from those lists: its file index finds every
-    * directory in a pre-filled status cache, so building the DataFrame
-    * lists nothing and starts no Spark job, however many partition dirs
-    * it spans. Parts committed without a list are read by listing.
+    * (None = the whole part), built from the parts' committed file lists:
+    * its file index finds every directory in a pre-filled status cache, so
+    * building the DataFrame lists nothing and starts no Spark job, however
+    * many partition dirs it spans.
     */
-  private def slicesRead(s: State,
-                         slices: Seq[(Part, Option[Seq[String]])]): DataFrame = {
-    val (listed, unlisted) =
-      slices.partition(_._1.files.isDefined && s.schemaDdl.isDefined)
-    val legacy = unlisted.map { case (p, live) =>
-      val dir = partPath(p.dir)
-      parquetRead(s, live.fold(Seq(dir))(_.map(v => s"$dir/$PT=$v")))
-    }
-    (Option.when(listed.nonEmpty)(listedRead(s, listed)).toSeq ++ legacy)
-      .reduce(_ unionByName _)
-  }
-
   private def listedRead(s: State,
                          slices: Seq[(Part, Option[Seq[String]])]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -356,7 +309,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       val pfs = raw.getFileSystem(conf)
       val dir = pfs.makeQualified(raw)
       val blockSize = pfs.getDefaultBlockSize(dir)
-      p.files.get.toArray
+      p.files.toArray
         .map(f => new FileStatus(f.length, false, 1, blockSize, f.mtime,
           new Path(dir, f.path)))
         .groupBy(_.getPath.getParent)
@@ -375,7 +328,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val index = new InMemoryFileIndex(spark, leafDirs.map(_._1), Map.empty,
       None, cache, Some(PartitionSpec.emptySpec))
     spark.baseRelationToDataFrame(HadoopFsRelation(index,
-      PartitionSpec.emptySpec.partitionColumns, relaxed(s.schemaDdl.get), None,
+      PartitionSpec.emptySpec.partitionColumns, relaxed(s.schema), None,
       new ParquetFileFormat, Map.empty)(spark))
   }
 
@@ -521,14 +474,14 @@ final class VersionedTable(spark: SparkSession, val root: String,
       return emptyRelation(s)
     val anyPartitioned = s.parts.exists(_.vals.nonEmpty)
     if (!anyPartitioned)
-      return slicesRead(s, kept.map(_ -> None))
+      return listedRead(s, kept.map(_ -> None))
     val pcol = s.partitionCol.getOrElse(
       throw new IllegalStateException(s"partitioned parts but no partcol at $root"))
     // Later parts shadow earlier ones. Partitioned parts are pruned by PATH
     // (only live `_pt=<v>` subdirs are read — the data files inside carry
     // the full original schema, so no partition-column inference is
-    // involved); legacy unpartitioned parts fall back to an exact
-    // anti-filter on the real column.
+    // involved); an unpartitioned part (an append after a partition-scoped
+    // commit) falls back to an exact anti-filter on the real column.
     val slices = Seq.newBuilder[(Part, Option[Seq[String]])]
     val filtered = Seq.newBuilder[DataFrame]
     s.parts.zipWithIndex.foreach { case (p, i) =>
@@ -540,21 +493,19 @@ final class VersionedTable(spark: SparkSession, val root: String,
         val live = p.vals.filterNot(shadowed).filter(wanted)
         if (live.nonEmpty) slices += p -> Some(live)
       } else if (shadowed.isEmpty) slices += p -> None
-      else filtered += slicesRead(s, Seq(p -> None)).filter(not(ptKey(col(pcol))
+      else filtered += listedRead(s, Seq(p -> None)).filter(not(ptKey(col(pcol))
         .isin(shadowed.toSeq.map(ExternalCatalogUtils.unescapePathName): _*)))
     }
     val listed = slices.result()
-    val all = Option.when(listed.nonEmpty)(slicesRead(s, listed)).toSeq ++
+    val all = Option.when(listed.nonEmpty)(listedRead(s, listed)).toSeq ++
       filtered.result()
     if (all.isEmpty) emptyRelation(s)
     else all.reduce(_ unionByName _)
   }
 
-  /** Zero-row relation carrying the table schema (all parts pruned). */
-  private def emptyRelation(s: State): DataFrame = s.schemaDdl match {
-    case Some(_) => readCommitted(s.copy(parts = Seq.empty))
-    case None => parquetRead(s, s.parts.map(p => partPath(p.dir))).limit(0)
-  }
+  /** Zero-row relation carrying the table schema (no parts, or all pruned). */
+  private def emptyRelation(s: State): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
 
   /** Read with ZONE-MAP PART SKIPPING: part directories whose committed
     * (min, max) column stats cannot satisfy `cond`'s top-level AND
@@ -596,7 +547,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   private def readWhereState(s: State, cond: Column): DataFrame = {
-    val schema = stateSchema(s)
+    val schema = s.schema
     val preds = ZoneMaps.predsOf(spark, schema, cond)
     val resolver = spark.sessionState.analyzer.resolver
     readState(s, p => ZoneMaps.mayMatch(p.stats, preds, resolver) &&
@@ -604,20 +555,12 @@ final class VersionedTable(spark: SparkSession, val root: String,
       .filter(cond)
   }
 
-  /** Schema of a state without opening data files when the commit carries
-    * its DDL (it always does for post-round-1 commits).
-    */
-  private def stateSchema(s: State): StructType = s.schemaDdl match {
-    case Some(d) => StructType.fromDDL(d)
-    case None => readState(s).schema
-  }
-
   /** Diagnostic: how many parts a predicate's zone maps would keep/skip —
     * `(kept, total)`. Metadata-only, no data files opened.
     */
   def pruneStats(cond: Column): (Int, Int) = {
     val s = state.getOrElse(return (0, 0))
-    val schema = stateSchema(s)
+    val schema = s.schema
     val preds = ZoneMaps.predsOf(spark, schema, cond)
     val resolver = spark.sessionState.analyzer.resolver
     (s.parts.count(p => ZoneMaps.mayMatch(p.stats, preds, resolver) &&
@@ -625,9 +568,10 @@ final class VersionedTable(spark: SparkSession, val root: String,
       s.parts.size)
   }
 
-  def readOr(schema: StructType): DataFrame =
-    if (exists) read
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  def readOr(schema: StructType): DataFrame = state match {
+    case Some(s) => readCommitted(s)
+    case None => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   def offsets: Map[String, Long] = state.map(_.offsets).getOrElse(Map.empty)
 
@@ -899,7 +843,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
         throw new java.io.IOException(
           s"rename of clustered range $rd to $dirName failed at $root")
       Part(dirName, Seq.empty, partStats(s"$root/$dirName"),
-        Some(dataFiles(new Path(s"$root/$dirName"))))
+        dataFiles(new Path(s"$root/$dirName")))
     }.toSeq
     fs.delete(new Path(stage), true)
     // preserve a recorded partition column (reachable with zero valued
@@ -953,7 +897,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     if (s.parts.exists(_.vals.nonEmpty))
       return (commit(transform(readCommitted(s)),
         Commit.Rewrite(s.partitionCol), Map.empty), true)
-    val rwSchema = stateSchema(s)
+    val rwSchema = s.schema
     val preds = ZoneMaps.predsOf(spark, rwSchema, cond)
     val resolver = spark.sessionState.analyzer.resolver
     val (touched, untouched) =
@@ -963,7 +907,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     val version = s.version + 1
     val attempt = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val dirName = f"v_$version%08d_$attempt"
-    transform(slicesRead(s, touched.map(_ -> None)))
+    transform(listedRead(s, touched.map(_ -> None)))
       .write.mode("overwrite").parquet(s"$root/$dirName")
     // a transform can delete every row of the touched parts — an empty
     // write still produces a zero-row parquet file, so check the footers'
@@ -973,7 +917,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       fs, new Path(s"$root/$dirName"))
     val newParts =
       if (rows != 0L) Seq(Part(dirName, Seq.empty, partStats(s"$root/$dirName"),
-        Some(dataFiles(new Path(s"$root/$dirName")))))
+        dataFiles(new Path(s"$root/$dirName"))))
       else { fs.delete(new Path(s"$root/$dirName"), true); Seq.empty }
     try writeCommit(version,
       State(version, s.partitionCol, untouched ++ newParts, s.offsets,
@@ -1029,21 +973,16 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   def vacuumOlderThan(maxAgeMs: Long): Seq[String] = {
     require(maxAgeMs >= 0, "maxAgeMs must be non-negative")
-    val vs = versions
-    if (vs.isEmpty) return Seq.empty
-    val mtimes = fs.listStatus(commitsDir)
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map(st => st.getPath.getName.stripSuffix(".json").toLong ->
-        st.getModificationTime).toMap
+    val log = commitLog
+    if (log.isEmpty) return Seq.empty
     val cutoff = System.currentTimeMillis() - maxAgeMs
     // retain from the OLDEST fresh version onward: commit mtimes are
     // normally monotone with versions, but a restored/touched commit
     // file must never cause a fresh version to be deleted — so the
     // suffix starts at the first fresh one, conservatively keeping any
     // stale versions after it
-    val firstFresh = vs.indexWhere(v =>
-      mtimes.getOrElse(v, Long.MaxValue) >= cutoff)
-    val retain = if (firstFresh < 0) 1 else vs.length - firstFresh
+    val firstFresh = log.indexWhere(_._2.getModificationTime >= cutoff)
+    val retain = if (firstFresh < 0) 1 else log.length - firstFresh
     vacuum(math.max(1, retain))
   }
 
@@ -1080,7 +1019,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       if (newParts.isEmpty)
         readCommitted(s2).limit(0).withColumn(ACTION, lit("INSERT"))
       else
-        slicesRead(s2, newParts.map(_ -> None))
+        listedRead(s2, newParts.map(_ -> None))
           .withColumn(ACTION, lit("INSERT"))
     } else {
       // align the old snapshot to the NEW schema before diffing — an
@@ -1135,7 +1074,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   /** Reads apply the LATEST commit's schema to ALL parts (see
-    * [[parquetRead]]), so an incremental commit that drops a column would
+    * [[relaxed]]), so an incremental commit that drops a column would
     * silently hide it in every older part, and one that changes a column's
     * type can make the vectorized reader throw on old files. Reject both at
     * commit time; ADDING a column is fine (parquet reads it as NULL from
@@ -1143,7 +1082,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   private def requireCompatibleSchema(prev: State, df: DataFrame): Unit = {
     if (prev.parts.isEmpty) return
-    val committed = prev.schemaDdl.map(StructType.fromDDL).getOrElse(return)
+    val committed = prev.schema
     val resolver = spark.sessionState.analyzer.resolver
     committed.foreach { old =>
       df.schema.find(f => resolver(f.name, old.name)) match {
@@ -1210,7 +1149,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
         // commit version + offsets with the parts unchanged instead
         fs.delete(new Path(dataDir), true)
         None
-      } else Some(Part(partName, vals, partStats(dataDir), Some(files)))
+      } else Some(Part(partName, vals, partStats(dataDir), files))
     }
 
     val newPart = mode match {
@@ -1219,7 +1158,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       case _ =>
         df.write.mode("overwrite").parquet(dataDir)
         Some(Part(partName, Seq.empty, partStats(dataDir),
-          Some(dataFiles(new Path(dataDir)))))
+          dataFiles(new Path(dataDir))))
     }
 
     def stateFor(prev: Option[State], version: Long): State = {
@@ -1238,7 +1177,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       // older parts (or a pre-ADD COLUMN part missing the column entirely)
       // still hold NULLs — so merge nullability with the committed schema
       // and force columns this batch introduced to nullable.
-      val declared = (mode, prev.flatMap(_.schemaDdl).map(StructType.fromDDL)) match {
+      val declared = (mode, prev.map(_.schema)) match {
         // compaction re-lands the table's own rows: keep the declared schema
         // verbatim (the relaxed-nullable read schema must not erode it)
         case (Commit.Rewrite(_), Some(committed)) => committed
@@ -1254,7 +1193,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
               .map(_.copy(nullable = true)))
         case _ => df.schema
       }
-      State(version, pcol, parts, offs, Some(declared.toDDL))
+      State(version, pcol, parts, offs, declared.toDDL)
     }
 
     // The claim races against concurrent writers, and the window is wide:
@@ -1352,8 +1291,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   // The commit record is JSON through Jackson's tree model (jackson-databind
-  // ships with Spark); records the earlier hand-rolled codec wrote, which
-  // carry no file lists, parse unchanged.
+  // ships with Spark). Every field but `partcol` and a part's `stats` is
+  // required: a record missing one fails [[readCommitFile]] as malformed.
   private def renderState(s: State): String = {
     val o = VersionedTable.json.createObjectNode().put("version", s.version)
     s.partitionCol.foreach(c => o.put("partcol", c))
@@ -1368,35 +1307,34 @@ final class VersionedTable(spark: SparkSession, val root: String,
           st.putArray(n).add(mn).add(mx)
         }
       }
-      p.files.foreach { files =>
-        val fa = po.putArray("files")
-        files.foreach(f => fa.addArray().add(f.path).add(f.length).add(f.mtime))
-      }
+      val fa = po.putArray("files")
+      p.files.foreach(f => fa.addArray().add(f.path).add(f.length).add(f.mtime))
     }
     val offs = o.putObject("offsets")
     s.offsets.toSeq.sortBy(_._1).foreach { case (k, v) => offs.put(k, v) }
-    s.schemaDdl.foreach(d => o.put("schema", d))
+    o.put("schema", s.schemaDdl)
     VersionedTable.json.writeValueAsString(o)
   }
 
   private def parseState(json: String): State = {
     import scala.jdk.CollectionConverters._
-    def elems(n: com.fasterxml.jackson.databind.JsonNode) =
-      n.elements.asScala.toSeq
+    type Node = com.fasterxml.jackson.databind.JsonNode
+    def field(n: Node, name: String): Node = Option(n.get(name)).getOrElse(
+      throw new IllegalArgumentException(s"missing field $name"))
+    def elems(n: Node) = n.elements.asScala.toSeq
     val o = VersionedTable.json.readTree(json)
-    val parts = elems(o.get("parts")).map { p =>
-      if (p.isTextual) Part(p.asText, Seq.empty) // legacy round-1 plain-string form
-      else Part(p.get("dir").asText, elems(p.get("vals")).map(_.asText),
+    val parts = elems(field(o, "parts")).map { p =>
+      Part(field(p, "dir").asText, elems(field(p, "vals")).map(_.asText),
         Option(p.get("stats")).map(_.properties.asScala.map { e =>
           e.getKey -> (e.getValue.get(0).asText, e.getValue.get(1).asText)
         }.toMap).getOrElse(Map.empty),
-        Option(p.get("files")).map(elems(_).map(f =>
-          VersionedTable.DataFile(f.get(0).asText, f.get(1).asLong, f.get(2).asLong))))
+        elems(field(p, "files")).map(f =>
+          VersionedTable.DataFile(f.get(0).asText, f.get(1).asLong, f.get(2).asLong)))
     }
-    val offsets = o.get("offsets").properties.asScala
+    val offsets = field(o, "offsets").properties.asScala
       .map(e => e.getKey -> e.getValue.asLong).toMap
-    State(o.get("version").asLong, Option(o.get("partcol")).map(_.asText),
-      parts, offsets, Option(o.get("schema")).map(_.asText))
+    State(field(o, "version").asLong, Option(o.get("partcol")).map(_.asText),
+      parts, offsets, field(o, "schema").asText)
   }
 }
 
@@ -1404,8 +1342,11 @@ object VersionedTable {
   /** One data file of a part: `path` relative to the part dir. */
   case class DataFile(path: String, length: Long, mtime: Long)
 
-  // earlier writers left control characters in schema DDL unescaped
-  private val json = JsonMapper.builder()
+  /** The one JSON codec of storage metadata: commit records and the
+    * catalog's `_table_meta.json`. Control characters are accepted
+    * unescaped, as the hand-rolled writers before it left them.
+    */
+  private[graft] val json = JsonMapper.builder()
     .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
 
   /** One [[VersionedTable.history]] entry. `committedAtMs` is the commit

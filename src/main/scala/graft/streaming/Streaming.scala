@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.co2.Co2Pipeline
-import graft.operators.MergeInto
 
 /** Structured-Streaming surface of the engine. The reference's "streaming"
   * is batch CDC (a Snowflake stream consumed on a daily cron —
@@ -500,10 +499,11 @@ object Streaming {
         maxPsi) _)
 
   /** Streaming harmonize: consume a Co2Pipeline's change-log directory with
-    * Trigger.AvailableNow and upsert each micro-batch through the same
-    * MergeInto used by the batch path (foreachBatch = the exactly-once
-    * sink pattern for non-idempotent writes). Blocks until drained.
-    * Returns micro-batches processed.
+    * Trigger.AvailableNow and upsert each micro-batch through the batch
+    * path's [[Co2Pipeline.mergeHarmonized]] (foreachBatch = the exactly-once
+    * sink pattern for non-idempotent writes); the checkpoint, not a
+    * committed offset, records progress. Blocks until drained. Returns
+    * micro-batches processed.
     */
   def harmonizeAvailableNow(spark: SparkSession, pipeline: Co2Pipeline,
                             checkpointDir: String): Long = {
@@ -518,18 +518,8 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val source = batch
-          .drop(graft.changefeed.ChangeFeed.metaColumns: _*)
-          .withColumn("DATE",
-            to_date(concat_ws("-",
-              col("YEAR").cast("string"),
-              col("MONTH").cast("string"),
-              col("DAY").cast("string")), "yyyy-M-d"))
-          .select(col("DATE"), col("YEAR"), col("MONTH"), col("DAY"),
-            col("CO2_PPM"), current_timestamp().as("META_UPDATED_AT"))
-        if (!source.isEmpty) {
-          MergeInto(spark, pipeline.harmonized, source, Seq("DATE"),
-            dedupeSource = true)
+        if (!batch.isEmpty) {
+          pipeline.mergeHarmonized(batch, Map.empty)
           batches += 1
         }
         ()

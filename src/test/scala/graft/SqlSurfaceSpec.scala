@@ -1681,6 +1681,28 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(taskRow().getInt(7) == 0)
   }
 
+  test("_table_meta.json: a tricky property value round-trips; the old writer's bytes read back") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableChange}
+    val root = java.nio.file.Files.createTempDirectory("graft_meta_").toString
+    graft.sql.GraftCatalog.register(spark, "tmeta", root)
+    spark.sql("CREATE TABLE tmeta.NS.T (k INT)")
+    val cat = new graft.sql.GraftCatalog
+    cat.initialize("tmeta",
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map("root" -> root).asJava))
+    val id = Identifier.of(Array("NS"), "T")
+    def props = cat.loadTable(id).properties().asScala.toMap
+    val tricky = "a \"quoted\" \\path} key:value\nsecond line"
+    cat.alterTable(id, TableChange.setProperty("weird", tricky))
+    assert(props.get("weird").contains(tricky))
+    // the hand-rolled writer escaped only \ and ", and left newlines raw
+    val old = "{\"comment\":\"plain\",\"weird\":\"a \\\"quoted\\\" \\\\path} key:value\nsecond line\"}"
+    val meta = new org.apache.hadoop.fs.Path(s"$root/NS/T/_table_meta.json")
+    val out = meta.getFileSystem(spark.sparkContext.hadoopConfiguration).create(meta, true)
+    try out.write(old.getBytes("UTF-8")) finally out.close()
+    assert(props == Map("comment" -> "plain", "weird" -> tricky))
+  }
+
   test("procedure registry: every listed procedure loads; the unknown-name error lists them all") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.connector.catalog.Identifier

@@ -414,8 +414,11 @@ class StorageSpec extends AnyFunSuite {
     // the protocol's primitive: create(overwrite=false) succeeds exactly once
     val claim = new org.apache.hadoop.fs.Path(root, "_commits/00000002.json")
     val out = fs.create(claim, false)
-    // legacy round-1 plain-string parts format — parse compatibility covered
-    out.write(s"""{"version":2,"parts":["$v1dir"],"offsets":{}}""".getBytes)
+    // the winner's record: v1's record re-versioned (parts = [v1's part])
+    val in = fs.open(new org.apache.hadoop.fs.Path(root, "_commits/00000001.json"))
+    val v1record = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(v1record.contains(s""""dir":"$v1dir""""))
+    out.write(v1record.replace("\"version\":1,", "\"version\":2,").getBytes("UTF-8"))
     out.close()
     intercept[java.io.IOException] { fs.create(claim, false).close() }
     // a writer that lost the race re-reads state and lands AFTER the winner,
@@ -701,7 +704,7 @@ class StorageSpec extends AnyFunSuite {
 
   test("read of a >32-partition table starts no Spark job before an action") {
     val t = manyPartitions(tmp() + "/many")
-    assert(t.state.get.parts.forall(_.files.isDefined))
+    assert(t.state.get.parts.forall(_.files.nonEmpty))
     var df: org.apache.spark.sql.DataFrame = null
     assert(jobsStartedBy { df = t.read } == 0)
     assert(jobsStartedBy(t.readVersion(1)) == 0)
@@ -726,55 +729,32 @@ class StorageSpec extends AnyFunSuite {
       want.filter(r => Set(1980, 1999)(r.getInt(0))))
   }
 
-  test("a commit record without file lists still reads, time-travels and takes commits") {
-    val root = tmp() + "/legacy"
+  test("a commit record without file lists, schema or part objects is rejected, naming its path") {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def put(path: String, text: String): Unit = {
+    val part = """"dir":"v_00000001_0a1b2c3d","vals":[]"""
+    val files = """"files":[["part-00000.parquet",512,1700000000000]]"""
+    val schema = """"schema":"k BIGINT,v STRING""""
+    Seq(
+      "no_files" -> s"""{"version":1,"parts":[{$part}],"offsets":{},$schema}""",
+      "no_schema" -> s"""{"version":1,"parts":[{$part,$files}],"offsets":{}}""",
+      "round1_parts" -> """{"version":1,"parts":["v_00000001_0a1b2c3d"],"offsets":{}}"""
+    ).foreach { case (name, record) =>
+      val root = tmp() + "/" + name
+      val path = s"$root/_commits/00000001.json"
       val out = fs.create(new org.apache.hadoop.fs.Path(path), false)
-      try out.write(text.getBytes("UTF-8")) finally out.close()
+      try out.write(record.getBytes("UTF-8")) finally out.close()
+      val e = intercept[IllegalStateException](VersionedTable(spark, root).state)
+      assert(e.getMessage.startsWith("malformed commit record") &&
+        e.getMessage.endsWith(path), s"$name: ${e.getMessage}")
     }
-    // an append-committed table, laid out and recorded as the writer
-    // before file lists did it (stats and offsets included)
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$root/v_00000001_0a1b2c3d")
-    put(s"$root/_commits/00000001.json",
-      """{"version":1,"parts":[{"dir":"v_00000001_0a1b2c3d","vals":[],""" +
-        """"stats":{"k":["L:1","L:2"]}}],"offsets":{"stream:q1":3},""" +
-        """"schema":"k BIGINT NOT NULL,v STRING"}""")
-    val t = VersionedTable(spark, root)
-    val p0 = t.state.get.parts.head
-    assert(p0.files.isEmpty && p0.stats == Map("k" -> ("L:1", "L:2")))
-    assert(t.offsets == Map("stream:q1" -> 3L))
-    assert(t.read.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
-    assert(t.append(Seq((3L, "c")).toDF("k", "v")) == 2L)
-    assert(t.state.get.parts.map(_.files.isDefined) == Seq(false, true))
-    assert(t.read.as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    assert(t.readVersion(1).count() == 2)
-    assert(t.readWhere(col("k") === 3L).count() == 1)
-    assert(t.offsets == Map("stream:q1" -> 3L))
-
-    // a partition-committed table in the same format
-    val proot = tmp() + "/legacy_pt"
-    Seq((2019, 1L), (2020, 2L)).toDF("YEAR", "V")
-      .withColumn("_pt", col("YEAR").cast("string"))
-      .write.partitionBy("_pt").parquet(s"$proot/v_00000001_0a1b2c3d")
-    put(s"$proot/_commits/00000001.json",
-      """{"version":1,"partcol":"YEAR","parts":[{"dir":"v_00000001_0a1b2c3d",""" +
-        """"vals":["2019","2020"]}],"offsets":{},"schema":"YEAR INT NOT NULL,V BIGINT NOT NULL"}""")
-    val pt = VersionedTable(spark, proot)
-    val r = MergeInto(spark, pt, Seq((2020, 20L), (2021, 21L)).toDF("YEAR", "V"),
-      Seq("YEAR"), partitionBy = Some("YEAR"))
-    assert((r.updated, r.inserted, r.version) == (1L, 1L, 2L))
-    assert(pt.read.as[(Int, Long)].collect().toSet == Set((2019, 1L), (2020, 20L), (2021, 21L)))
-    assert(pt.readVersion(1).as[(Int, Long)].collect().toSet == Set((2019, 1L), (2020, 2L)))
   }
 
   test("parts written by cloneTo, compact, compactClustered and rewriteWhere carry file lists") {
     val root = tmp()
     def listed(t: VersionedTable): Boolean = t.state.get.parts.forall { p =>
       val dir = if (p.dir.startsWith("/")) p.dir else s"${t.root}/${p.dir}"
-      p.files.exists(fs => fs.nonEmpty && fs.forall(f =>
-        new java.io.File(s"$dir/${f.path}").length() == f.length))
+      p.files.nonEmpty && p.files.forall(f =>
+        new java.io.File(s"$dir/${f.path}").length() == f.length)
     }
     val t = VersionedTable(spark, s"$root/t")
     t.overwrite((1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v"))

@@ -466,6 +466,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(p.harmonized.read.count() == 3)
   }
 
+  test("harmonizeAvailableNow keeps harmonized YEAR-partitioned and refreshes _CO2_MINMAX") {
+    val root = Files.createTempDirectory("graft_stream_mm").toString
+    val p = Co2Pipeline(spark, s"$root/wh")
+    val feed = Files.createTempFile("noaa", ".txt")
+    val days = Seq(
+      "2023 12 30 2023.9945 419.80",
+      "2023 12 31 2023.9973 420.02",
+      "2024 1 1 2024.0000 420.11")
+    Files.writeString(feed, days.mkString("# NOAA\n", "\n", "\n"))
+    assert(p.load(feed.toString) == 3)
+    assert(p.harmonize().startsWith("Harmonized"))
+    // a 4th day with a new maximum reaches harmonized only by streaming
+    Files.writeString(feed, (days :+ "2024 1 2 2024.0027 425.50")
+      .mkString("# NOAA\n", "\n", "\n"))
+    assert(p.load(feed.toString) == 1)
+    assert(Streaming.harmonizeAvailableNow(spark, p, s"$root/ckpt") >= 1)
+
+    val parts = p.harmonized.state.get.parts
+    assert(parts.forall(_.vals.nonEmpty), parts.map(_.vals))
+    val harm = p.harmonized.read.agg(min("CO2_PPM"), max("CO2_PPM")).head
+    val mm = p.minMax.read.head
+    assert(p.harmonized.read.count() == 4)
+    assert((mm.getDouble(0), mm.getDouble(1)) == (harm.getDouble(0), harm.getDouble(1)))
+    assert(mm.getDouble(1) == 425.5)
+    p.analytics()
+    assert(p.dailyStats.read.agg(max("NORMALIZED_CO2")).head.getDouble(0) == 1.0)
+  }
+
   test("exactly-once append sink: batch replays are skipped, batch ids piggyback atomically") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("eo_append").toString
