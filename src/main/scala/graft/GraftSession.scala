@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import graft.storage.LocalFs
 
 /** Shared SparkSession factory — one config point for every main/test.
   *
@@ -10,6 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  private val FileImpl = "spark.hadoop.fs.file.impl"
 
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     SparkSession.builder()
@@ -42,6 +46,10 @@ object GraftSession {
       // classes and recompiles all of them every day. At 1000, the
       // steady-state day compiles only what per-run plan shapes make new.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // the `file` scheme without a forked `chmod` per file and dir created
+      // (graft.storage.LocalFs); a file system the launcher already chose,
+      // e.g. a counting one, is kept
+      .config(FileImpl, new SparkConf().get(FileImpl, classOf[LocalFs].getName))
 
   /** Get-or-create and register the SQL-callable function surface. */
   def get(master: String = s"local[$cpus]"): SparkSession = {

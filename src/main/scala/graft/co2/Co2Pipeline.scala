@@ -8,6 +8,8 @@ import graft.operators.{MergeInto, OrderedLag}
 import graft.plans.expressions.runTimestamp
 import graft.sql.{TaskDag, TaskDef}
 import graft.storage.VersionedTable
+import java.sql.Date
+import java.time.LocalDate
 
 /** The full incremental pipeline — raw → harmonized → analytics — with the
   * same layer semantics as the reference's three stored procedures and task
@@ -75,12 +77,28 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     }
   }
 
+  /** The watermark is read from raw's commit offsets, not from a scan of
+    * raw: each ingest records the new watermark (epoch day) and the raw
+    * version its append lands in. It is trusted only while that version is
+    * still raw's latest; after any other commit to raw (a SQL INSERT, a
+    * compaction) the next ingest scans raw once, as it always did.
+    */
   private def ingest(parsed: DataFrame): Long = {
-    val wm = if (raw.exists) NoaaIngest.watermark(raw.read) else None
+    val prev = raw.state
+    val recorded = prev
+      .filter(s => s.offsets.get(WatermarkVersion).contains(s.version))
+      .flatMap(_.offsets.get(WatermarkDay))
+      .map(d => Date.valueOf(LocalDate.ofEpochDay(d)))
+    val wm = recorded.orElse(prev.flatMap(_ => NoaaIngest.watermark(raw.read)))
     val fresh = NoaaIngest.newerThan(parsed, wm).cache()
-    val n = fresh.count()
+    val agg = fresh.agg(count(lit(1)), max(NoaaIngest.rowDate)).head()
+    val n = agg.getLong(0)
     if (n > 0) {
-      raw.append(fresh)
+      val newWm = (wm.toSeq ++ Option(agg.getDate(1)))
+        .map(_.toLocalDate.toEpochDay).maxOption
+      raw.append(fresh, newWm.fold(Map.empty[String, Long])(d => Map(
+        WatermarkDay -> d,
+        WatermarkVersion -> (prev.fold(0L)(_.version) + 1))))
       feed.publish(fresh) // stream records the INSERT delta
     }
     fresh.unpersist()
@@ -148,8 +166,14 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
   // ----------------------------------------------------------- analytics --
 
-  /** Recompute daily + weekly stats from harmonized and upsert into the
-    * analytics tables (co2_analytical_sp semantics).
+  /** Recompute daily + weekly stats from harmonized and commit them over
+    * the analytics tables (co2_analytical_sp semantics). The reference
+    * MERGEs the recompute into the tables; here it replaces them, which is
+    * the same result: every DAILY/WEEKLY key is derived from a harmonized
+    * key, and the pipeline never deletes harmonized keys. DAILY/WEEKLY are
+    * thus a function of harmonized alone: a date deleted from harmonized
+    * leaves DAILY too, and rows written to them by other means are
+    * replaced.
     */
   def analytics(): String = {
     if (!harmonized.exists) return "No harmonized data - nothing to analyze"
@@ -189,34 +213,51 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
         Co2Functions.normalizeCo2(col("AVG_WEEKLY_CO2"), lit(minCo2), lit(maxCo2)).as("NORMALIZED_WEEKLY_CO2"),
         batchTs.as("META_UPDATED_AT"))
 
-    // key-unique by construction: harmonized is keyed by DATE and OrderedLag
-    // emits one output row per input row (daily); weekly IS a groupBy on
-    // WEEK_START — both skip the duplicate-source pass. Reference scales to
-    // LARGE around the analytics merges (co2_analytical_sp/function.py:91,151).
-    // The two merges target DIFFERENT tables with NO data dependency, so
-    // they run as two concurrent driver threads (the scheduler back-fills
-    // each job's straggler tail with the other's tasks) — each commit keeps
-    // its own per-root lock and exactly-once protocol, and neither consumes
-    // stream offsets, so the semantics are byte-identical to sequential.
-    import scala.concurrent.{Await, Future}
+    // Reference scales to LARGE around the analytics merges
+    // (co2_analytical_sp/function.py:91,151). The two commits target
+    // DIFFERENT tables with NO data dependency, so they run as two
+    // concurrent driver threads (the scheduler back-fills each job's
+    // straggler tail with the other's tasks) — each commit keeps its own
+    // per-root lock, and neither consumes stream offsets, so the semantics
+    // are byte-identical to sequential. The threads are started here, so
+    // they inherit the caller's Spark job group and local properties.
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val dF = Future(withScaledResources("LARGE") {
-      MergeInto(spark, dailyStats, daily, Seq("DATE"),
-        checkDuplicateKeys = false)
-    })
-    val wF = Future(withScaledResources("LARGE") {
-      MergeInto(spark, weeklyStats, weekly, Seq("WEEK_START"),
-        checkDuplicateKeys = false)
-    })
-    // await BOTH before surfacing a failure, so no merge commit is still
-    // in flight once this method has thrown
-    val dT = Await.ready(dF, Duration.Inf).value.get
-    val wT = Await.ready(wF, Duration.Inf).value.get
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val (dT, wT) = try {
+      val dF = Future(withScaledResources("LARGE")(replace(dailyStats, daily)))
+      val wF = Future(withScaledResources("LARGE")(replace(weeklyStats, weekly)))
+      // await BOTH before surfacing a failure, so no commit is still in
+      // flight once this method has thrown
+      (Await.ready(dF, Duration.Inf).value.get, Await.ready(wF, Duration.Inf).value.get)
+    } finally pool.shutdown()
     for (d <- dT.failed; w <- wT.failed) d.addSuppressed(w)
-    val (dr, wr) = (dT.get, wT.get)
+    val ((du, di), (wu, wi)) = (dT.get, wT.get)
 
-    s"Analytics: daily ${dr.updated}u/${dr.inserted}i, weekly ${wr.updated}u/${wr.inserted}i"
+    s"Analytics: daily ${du}u/${di}i, weekly ${wu}u/${wi}i"
+  }
+
+  /** Commit `rows`, a full recompute, over `target`, and return the
+    * (updated, inserted) counts the reference's MERGE reports, without a
+    * job of their own: every previous row's key is recomputed, so the
+    * previous row count (from footers) is the updated count, capped at the
+    * rows written (observed on the write); the rest are inserted. Like the
+    * MERGE, it refuses a target of another column set.
+    */
+  private def replace(target: VersionedTable, rows: DataFrame): (Long, Long) = {
+    val prev = target.state
+    prev.foreach { s =>
+      require(s.schema.fieldNames.sorted.sameElements(rows.columns.sorted),
+        s"merge schema mismatch: target ${s.schema.fieldNames.mkString(",")} " +
+          s"vs source ${rows.columns.mkString(",")}")
+    }
+    val before = prev.fold(0L)(target.rowCount)
+    val obs = new org.apache.spark.sql.Observation()
+    target.overwrite(rows.observe(obs, count(lit(1)).as("n")))
+    val written = obs.get("n").asInstanceOf[Long]
+    val updated = math.min(before, written)
+    (updated, written - updated)
   }
 
   // --------------------------------------------------------- orchestrate --
@@ -320,6 +361,11 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
 
 object Co2Pipeline {
   val STREAM_NAME = "RAW_CO2.CO2_DATA_STREAM"
+  /** Raw's commit offsets: the ingest watermark (epoch day) and the raw
+    * version it was recorded in.
+    */
+  private val WatermarkDay = "RAW_CO2.WATERMARK_EPOCH_DAY"
+  private val WatermarkVersion = "RAW_CO2.WATERMARK_VERSION"
   private val DefaultSchedule = "USING CRON 0 10 * * * UTC"
 
   def apply(spark: SparkSession, warehouseRoot: String): Co2Pipeline =

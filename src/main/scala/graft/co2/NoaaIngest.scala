@@ -1,6 +1,6 @@
 package graft.co2
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Date
 
@@ -115,16 +115,18 @@ object NoaaIngest {
     }.toSeq
   }
 
-  /** Ingest high-watermark: MAX(TO_DATE(CONCAT(LPAD(YEAR..),-,LPAD(MONTH..),
-    * -,LPAD(DAY..)))) (loading_data_sp/function.py:41-49). None on empty.
+  /** A row's date, the watermark's measure: TO_DATE(CONCAT(LPAD(YEAR..),-,
+    * LPAD(MONTH..),-,LPAD(DAY..))) (loading_data_sp/function.py:41-49).
     */
+  def rowDate: Column =
+    to_date(concat_ws("-",
+      lpad(col("YEAR").cast("string"), 4, "0"),
+      lpad(col("MONTH").cast("string"), 2, "0"),
+      lpad(col("DAY").cast("string"), 2, "0")), "yyyy-MM-dd")
+
+  /** Ingest high-watermark: MAX([[rowDate]]). None on empty. */
   def watermark(raw: DataFrame): Option[Date] = {
-    val d = raw.agg(
-      max(to_date(concat_ws("-",
-        lpad(col("YEAR").cast("string"), 4, "0"),
-        lpad(col("MONTH").cast("string"), 2, "0"),
-        lpad(col("DAY").cast("string"), 2, "0")), "yyyy-MM-dd")).as("wm")
-    ).collect().head
+    val d = raw.agg(max(rowDate).as("wm")).collect().head
     if (d.isNullAt(0)) None else Some(d.getDate(0))
   }
 
@@ -134,11 +136,6 @@ object NoaaIngest {
     */
   def newerThan(df: DataFrame, wm: Option[Date]): DataFrame = wm match {
     case None => df
-    case Some(d) =>
-      df.filter(
-        to_date(concat_ws("-",
-          lpad(col("YEAR").cast("string"), 4, "0"),
-          lpad(col("MONTH").cast("string"), 2, "0"),
-          lpad(col("DAY").cast("string"), 2, "0")), "yyyy-MM-dd") > lit(d))
+    case Some(d) => df.filter(rowDate > lit(d))
   }
 }

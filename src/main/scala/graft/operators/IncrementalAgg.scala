@@ -60,7 +60,7 @@ final class IncrementalAgg(spark: SparkSession, source: VersionedTable,
     // under GROUP BY's null-as-a-group semantics, and the plan is one
     // small shuffle over |table| + |delta| grouped rows
     val merged =
-      if (!target.exists || target.state.exists(_.parts.isEmpty)) delta
+      if (target.state.forall(_.parts.isEmpty)) delta
       else target.read.unionByName(delta)
         .groupBy(groupCols.map(col): _*)
         .agg(sum(col(valueCols.head)).as(valueCols.head),

@@ -73,7 +73,7 @@ final class IncrementalComponents(spark: SparkSession,
           col(idBCol).cast("long").as("id_b"))
         .filter(col("id_a").isNotNull && col("id_b").isNotNull)
         .distinct()
-      val empty = !state.exists || state.state.exists(_.parts.isEmpty)
+      val empty = state.state.forall(_.parts.isEmpty)
       if (empty) {
         state.overwritePartitions(
           withBucket(Dedup.connectedComponents(delta)), "_b",

@@ -97,7 +97,7 @@ final class IncrementalDataCard(spark: SparkSession, source: VersionedTable,
                     dropZero: Boolean): Unit = {
       if (from == latest) return
       val merged =
-        if (!state.exists || state.state.exists(_.parts.isEmpty)) delta
+        if (state.state.forall(_.parts.isEmpty)) delta
         else state.read.unionByName(delta)
       val folded = merged.groupBy(keys.map(col): _*)
         .agg(sum(col(sums.head)).cast("long").as(sums.head),

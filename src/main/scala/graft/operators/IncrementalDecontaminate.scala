@@ -71,7 +71,7 @@ final class IncrementalDecontaminate(spark: SparkSession,
         explode(TextFunctions.wordNgrams(col(textCol), n)).as("gram"))
       .groupBy(col("gram")).agg(sum(col("_s")).as("n"))
     val merged =
-      if (!target.exists || target.state.exists(_.parts.isEmpty)) delta
+      if (target.state.forall(_.parts.isEmpty)) delta
       else target.read.unionByName(delta)
         .groupBy(col("gram")).agg(sum(col("n")).as("n"))
     target.overwrite(merged.filter(col("n") =!= 0L),

@@ -68,7 +68,7 @@ final class IncrementalDistinct(spark: SparkSession, source: VersionedTable,
     } else {
       val delta = sketchOf(changes.drop(changes.columns.filter(_.startsWith("METADATA$")): _*))
       val merged =
-        if (!target.exists || target.state.exists(_.parts.isEmpty)) delta
+        if (target.state.forall(_.parts.isEmpty)) delta
         else target.read.unionByName(delta)
           .groupBy(groupCols.map(col): _*)
           .agg(hll_union_agg(col("hll"), lit(true)).as("hll"))

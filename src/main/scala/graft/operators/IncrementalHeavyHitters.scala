@@ -83,7 +83,7 @@ final class IncrementalHeavyHitters(spark: SparkSession,
   }
 
   private def stored(): Option[(CountMinSketch, DataFrame)] =
-    if (!target.exists || target.state.forall(_.parts.isEmpty)) None
+    if (target.state.forall(_.parts.isEmpty)) None
     else {
       val st = target.read
       val bytes = st.filter(col("kind") === "cms")

@@ -68,7 +68,7 @@ final class IncrementalKmv(spark: SparkSession, source: VersionedTable,
           "rows — KMV min-sets cannot forget hashes; rebuild from scratch")
       val deltaSketch = sketchOf(changes)
       val merged =
-        if (!state.exists || state.state.exists(_.parts.isEmpty)) deltaSketch
+        if (state.state.forall(_.parts.isEmpty)) deltaSketch
         else {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("g")).orderBy(col("h"))

@@ -57,7 +57,7 @@ final class IncrementalPareto(spark: SparkSession, source: VersionedTable,
       val delta = changes
         .drop(changes.columns.filter(_.startsWith("METADATA$")): _*)
       val merged =
-        if (!target.exists || target.state.exists(_.parts.isEmpty)) delta
+        if (target.state.forall(_.parts.isEmpty)) delta
         else target.read.unionByName(
           delta.select(col(idCol), col(xCol), col(yCol)))
       target.overwrite(front(merged), Map(OFFSET_KEY -> latest))

@@ -71,7 +71,7 @@ final class IncrementalQuantiles(spark: SparkSession, source: VersionedTable,
     val delta = histOf(changes.filter(col(ACTION) === "INSERT"), 1)
       .unionByName(histOf(changes.filter(col(ACTION) === "DELETE"), -1))
     val merged =
-      if (!target.exists || target.state.exists(_.parts.isEmpty)) delta
+      if (target.state.forall(_.parts.isEmpty)) delta
       else target.read.unionByName(delta)
     val folded = merged
       .groupBy(groupCols.map(col) :+ col("_v"): _*)

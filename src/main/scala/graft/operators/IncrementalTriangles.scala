@@ -82,7 +82,7 @@ final class IncrementalTriangles(spark: SparkSession,
           col("a") =!= col("b"))
         .distinct()
 
-      val empty = !state.exists || state.state.exists(_.parts.isEmpty)
+      val empty = state.state.forall(_.parts.isEmpty)
       val existing =
         if (empty) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)

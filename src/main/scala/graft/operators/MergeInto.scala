@@ -86,7 +86,6 @@ object MergeInto {
       dedupeSource: Boolean = false,
       partitionBy: Option[String] = None,
       validatePartitionKeys: Boolean = false,
-      checkDuplicateKeys: Boolean = true,
       maxTouchedPartitions: Int = 10000
   ): MergeResult = {
     require(keys.nonEmpty, "merge requires at least one key column")
@@ -99,17 +98,12 @@ object MergeInto {
         .agg(max(struct(nonKey.map(col): _*)).as("_s"))
         .select(keys.map(col) ++ nonKey.map(c => col(s"_s.$c").as(c)): _*)
         .select(srcCols.map(col): _*)
-    } else if (checkDuplicateKeys) {
+    } else {
       val dups = source.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
       if (!dups.isEmpty)
         throw new IllegalArgumentException(
           s"duplicate source keys for merge on ${keys.mkString(",")} " +
             "(Snowflake raises on nondeterministic MERGE); pass dedupeSource=true")
-      source
-    } else {
-      // caller vouches for key uniqueness (e.g. the source IS a groupBy on
-      // the keys) — skipping the check saves one full source pass; a lie
-      // here gives the same nondeterministic multi-match Snowflake rejects
       source
     }
     // the source feeds several jobs inside this (eager) merge — touched-

@@ -73,12 +73,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * and equality/IN SELECTs prune through them — the SQL opt-in is
     * `ALTER TABLE t SET TBLPROPERTIES ('graft.bloom.cols'='h,k')`.
     */
-  private[sql] def table(ident: Identifier) = {
-    val blooms = readProps(ident).get(GraftCatalog.BLOOM_COLS_PROP)
+  private[sql] def table(ident: Identifier,
+                         props: Map[String, String]): VersionedTable = {
+    val blooms = props.get(GraftCatalog.BLOOM_COLS_PROP)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
     VersionedTable(spark, dirFor(ident), bloomCols = blooms)
   }
+  private[sql] def table(ident: Identifier): VersionedTable =
+    table(ident, readProps(ident))
   private def isTableDir(p: Path): Boolean =
     fs.exists(new Path(p, "_commits"))
 
@@ -91,17 +94,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .map(s => Identifier.of(namespace, s.getPath.getName))
   }
 
+  /** One commit-log read; a dir without `_commits/` has no state. */
   override def tableExists(ident: Identifier): Boolean =
-    isTableDir(new Path(dirFor(ident))) && table(ident).exists
+    VersionedTable(spark, dirFor(ident)).exists
+
+  /** An existing table with its properties: one `_table_meta.json` read
+    * and one commit-log read, on every SQL statement that names it.
+    */
+  private def existing(ident: Identifier): (VersionedTable, Map[String, String]) = {
+    val props = readProps(ident)
+    val vt = table(ident, props)
+    if (!vt.exists)
+      throw new NoSuchTableException(Seq(catalogName) ++ ident.namespace.toSeq :+ ident.name)
+    (vt, props)
+  }
 
   override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident))
-      throw new NoSuchTableException(Seq(catalogName) ++ ident.namespace.toSeq :+ ident.name)
-    val props = readProps(ident)
+    val (vt, props) = existing(ident)
     if (props.get(GraftCatalog.STREAM_PROP).contains("true"))
       streamTable(ident, props)
-    else new GraftSqlTable(table(ident), ident, props,
-      security = Some(security))
+    else new GraftSqlTable(vt, ident, props, security = Some(security))
   }
 
   /** A STREAM object (Snowflake `CREATE STREAM ... ON TABLE` parity,
@@ -137,9 +149,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * commit (the reference's Snowflake `AT (STATEMENT => ...)` shape).
     */
   override def loadTable(ident: Identifier, version: String): Table = {
-    if (!tableExists(ident))
-      throw new NoSuchTableException(Seq(catalogName) ++ ident.namespace.toSeq :+ ident.name)
-    val vt = table(ident)
+    val (vt, props) = existing(ident)
     val v = try version.toLong catch {
       case _: NumberFormatException => throw new IllegalArgumentException(
         s"graft table versions are numeric commit ids; got '$version'")
@@ -147,7 +157,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(vt.stateAt(v).isDefined,
       s"no committed version $v of ${ident.name} " +
         s"(available: ${vt.versions.mkString(", ")})")
-    new GraftSqlTable(vt, ident, readProps(ident), asOfVersion = Some(v))
+    new GraftSqlTable(vt, ident, props, asOfVersion = Some(v))
   }
 
   /** `SELECT ... FROM t TIMESTAMP AS OF <ts>` — Spark hands us the instant
@@ -155,13 +165,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * before it (Snowflake `AT (TIMESTAMP => ...)`).
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    if (!tableExists(ident))
-      throw new NoSuchTableException(Seq(catalogName) ++ ident.namespace.toSeq :+ ident.name)
-    val vt = table(ident)
+    val (vt, props) = existing(ident)
     val v = vt.versionAt(timestamp / 1000L).getOrElse(
       throw new IllegalArgumentException(
         s"no commit of ${ident.name} at or before timestamp $timestamp"))
-    new GraftSqlTable(vt, ident, readProps(ident), asOfVersion = Some(v))
+    new GraftSqlTable(vt, ident, props, asOfVersion = Some(v))
   }
 
   override def createTable(ident: Identifier, schema: StructType,

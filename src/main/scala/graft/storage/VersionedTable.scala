@@ -163,22 +163,6 @@ final class VersionedTable(spark: SparkSession, val root: String,
           (if (vs.isEmpty) "" else s" (available: ${vs.min}..${vs.max})"))
   }
 
-  /** Time-travel diff: what changed between two committed versions, keyed
-    * by `keyCols` — the audit face of the commit log ("what did last
-    * night's merge actually do"), and the generic CDC extractor for
-    * consumers that cannot read the engine's change feed. One row per key
-    * whose payload differs: `change ∈ added | removed | changed`, with
-    * both payload sides as structs (null on the absent side).
-    *
-    * Keys must be unique within each version (the [[graft.operators
-    * .MergeInto]] invariant) — duplicate keys would make "the" old/new
-    * payload ambiguous, so they fail loud rather than pick one.
-    *
-    * Scale shape: one full-outer join, shuffle keyed on the key columns —
-    * both sides are column-pruned scans of exactly the two versions'
-    * parts; equality is evaluated per row and unchanged keys drop before
-    * anything aggregates. No driver materialization.
-    */
   /** Schema drift between two versions — the data-contract audit to run
     * when [[diffVersions]] refuses on a schema change: one row per
     * column whose presence or type differs, `(column, change, old_type,
@@ -205,6 +189,22 @@ final class VersionedTable(spark: SparkSession, val root: String,
     rows.toDF("column", "change", "old_type", "new_type")
   }
 
+  /** Time-travel diff: what changed between two committed versions, keyed
+    * by `keyCols` — the audit face of the commit log ("what did last
+    * night's merge actually do"), and the generic CDC extractor for
+    * consumers that cannot read the engine's change feed. One row per key
+    * whose payload differs: `change ∈ added | removed | changed`, with
+    * both payload sides as structs (null on the absent side).
+    *
+    * Keys must be unique within each version (the [[graft.operators
+    * .MergeInto]] invariant) — duplicate keys would make "the" old/new
+    * payload ambiguous, so they fail loud rather than pick one.
+    *
+    * Scale shape: one full-outer join, shuffle keyed on the key columns —
+    * both sides are column-pruned scans of exactly the two versions'
+    * parts; equality is evaluated per row and unchanged keys drop before
+    * anything aggregates. No driver materialization.
+    */
   def diffVersions(vOld: Long, vNew: Long,
                    keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "diffVersions requires key columns")
@@ -346,15 +346,20 @@ final class VersionedTable(spark: SparkSession, val root: String,
       else Seq(VersionedTable.DataFile(name, st.getLen, st.getModificationTime))
     }.sortBy(_.path)
 
-  /** Zone-map harvest for a freshly written part: driver-side parquet
-    * footer reads only (the write already produced the stats); failures
-    * degrade to "no stats", never block the commit.
+  /** A freshly written part with its bloom sidecars and zone maps, both
+    * built from `files`, the part's one listing: driver-side parquet footer
+    * reads only (the write already produced the stats); failures degrade
+    * to "no stats", never block the commit.
     */
-  private def partStats(dataDir: String): Map[String, (String, String)] = {
-    writeBlooms(dataDir)
-    if (!collectStats) Map.empty
-    else ZoneMaps.collect(spark.sparkContext.hadoopConfiguration, fs,
-      new Path(dataDir))
+  private def writtenPart(dirName: String, vals: Seq[String],
+                          files: Seq[VersionedTable.DataFile]): Part = {
+    val dataDir = s"$root/$dirName"
+    val paths = files.map(f => new Path(dataDir, f.path))
+    writeBlooms(dataDir, paths)
+    val stats =
+      if (!collectStats) Map.empty[String, (String, String)]
+      else ZoneMaps.collect(spark.sparkContext.hadoopConfiguration, paths)
+    Part(dirName, vals, stats, files)
   }
 
   // -------------------------------------------------------- bloom sidecars
@@ -384,13 +389,13 @@ final class VersionedTable(spark: SparkSession, val root: String,
       case _ => false
     }
 
-  private def writeBlooms(dataDir: String): Unit = {
+  private def writeBlooms(dataDir: String, files: Seq[Path]): Unit = {
     if (bloomCols.isEmpty) return
     try {
       val df = spark.read.parquet(dataDir)
       val resolver = spark.sessionState.analyzer.resolver
       val n = math.max(1024L, ZoneMaps.totalRows(
-        spark.sparkContext.hadoopConfiguration, fs, new Path(dataDir)))
+        spark.sparkContext.hadoopConfiguration, files))
       bloomCols.foreach { c =>
         df.schema.fields.find(f => resolver(f.name, c))
           .filter(f => bloomSupported(f.dataType))
@@ -574,6 +579,19 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   def offsets: Map[String, Long] = state.map(_.offsets).getOrElse(Map.empty)
+
+  /** Live rows of `s`, from its data files' parquet footers: driver-side
+    * metadata reads, no Spark job. Partition-scoped parts, whose later
+    * parts shadow rows of earlier ones, or an unreadable footer fall back
+    * to counting a scan.
+    */
+  def rowCount(s: State): Long = {
+    val fromFooters =
+      if (s.parts.exists(_.vals.nonEmpty)) -1L
+      else ZoneMaps.totalRows(spark.sparkContext.hadoopConfiguration,
+        s.parts.flatMap(p => p.files.map(f => new Path(partPath(p.dir), f.path))))
+    if (fromFooters >= 0) fromFooters else readCommitted(s).count()
+  }
 
   /** Metadata-only commit advancing/resetting offsets — no data job, no
     * new part. The building block for stream-offset resets
@@ -842,8 +860,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       if (!fs.rename(new Path(s"$stage/$rd"), new Path(s"$root/$dirName")))
         throw new java.io.IOException(
           s"rename of clustered range $rd to $dirName failed at $root")
-      Part(dirName, Seq.empty, partStats(s"$root/$dirName"),
-        dataFiles(new Path(s"$root/$dirName")))
+      writtenPart(dirName, Seq.empty, dataFiles(new Path(s"$root/$dirName")))
     }.toSeq
     fs.delete(new Path(stage), true)
     // preserve a recorded partition column (reachable with zero valued
@@ -913,11 +930,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
     // write still produces a zero-row parquet file, so check the footers'
     // row counts (metadata-only) and drop the part instead of committing
     // an empty reference
+    val files = dataFiles(new Path(s"$root/$dirName"))
     val rows = ZoneMaps.totalRows(spark.sparkContext.hadoopConfiguration,
-      fs, new Path(s"$root/$dirName"))
+      files.map(f => new Path(s"$root/$dirName", f.path)))
     val newParts =
-      if (rows != 0L) Seq(Part(dirName, Seq.empty, partStats(s"$root/$dirName"),
-        dataFiles(new Path(s"$root/$dirName"))))
+      if (rows != 0L) Seq(writtenPart(dirName, Seq.empty, files))
       else { fs.delete(new Path(s"$root/$dirName"), true); Seq.empty }
     try writeCommit(version,
       State(version, s.partitionCol, untouched ++ newParts, s.offsets,
@@ -1149,7 +1166,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
         // commit version + offsets with the parts unchanged instead
         fs.delete(new Path(dataDir), true)
         None
-      } else Some(Part(partName, vals, partStats(dataDir), files))
+      } else Some(writtenPart(partName, vals, files))
     }
 
     val newPart = mode match {
@@ -1157,8 +1174,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       case Commit.Rewrite(Some(pcol)) => writePartitioned(pcol)
       case _ =>
         df.write.mode("overwrite").parquet(dataDir)
-        Some(Part(partName, Seq.empty, partStats(dataDir),
-          dataFiles(new Path(dataDir))))
+        Some(writtenPart(partName, Seq.empty, dataFiles(new Path(dataDir))))
     }
 
     def stateFor(prev: Option[State], version: Long): State = {

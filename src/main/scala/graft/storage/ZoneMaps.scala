@@ -1,7 +1,7 @@
 package graft.storage
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
@@ -46,24 +46,17 @@ object ZoneMaps {
   // Collection (commit-time, driver-side)
   // ---------------------------------------------------------------------
 
-  /** Harvest per-column (min, max) for every parquet file under `dir`
-    * (recursive — covers hive `_pt=` subdirs). A column survives only if
-    * EVERY chunk holding non-null values reports usable stats; all-null
-    * chunks are fine (they contribute no values). Returns empty on any
+  /** Harvest per-column (min, max) over the parquet files among `paths`
+    * (a freshly written part's data files, as its commit lists them: no
+    * second listing). A column survives only if EVERY chunk holding
+    * non-null values reports usable stats; all-null chunks are fine (they
+    * contribute no values). Returns empty on any
     * footer failure — stats are an optimization, never a commit blocker.
     */
-  def collect(conf: Configuration, fs: FileSystem, dir: Path,
+  def collect(conf: Configuration, paths: Seq[Path],
               maxCols: Int = 32): Stats = {
     try {
-      val files = {
-        val it = fs.listFiles(dir, true)
-        val b = Seq.newBuilder[Path]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) b += f.getPath
-        }
-        b.result()
-      }
+      val files = paths.filter(_.getName.endsWith(".parquet"))
       if (files.isEmpty) return Map.empty
       // footers are independent: read them on a small driver pool (the
       // per-commit harvest is pure metadata I/O, latency-bound)
@@ -115,21 +108,17 @@ object ZoneMaps {
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
   }
 
-  /** Total row count under `dir` from parquet footers alone (driver-side
-    * metadata reads; -1 if any footer fails — callers treat unknown as
-    * non-empty).
+  /** Total row count of the parquet files among `paths` from their
+    * footers alone (driver-side metadata reads; -1 if any footer fails —
+    * callers treat unknown as non-empty).
     */
-  def totalRows(conf: Configuration, fs: FileSystem, dir: Path): Long = {
+  def totalRows(conf: Configuration, paths: Seq[Path]): Long = {
     try {
       var total = 0L
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-          try reader.getFooter.getBlocks.forEach(b => total += b.getRowCount)
-          finally reader.close()
-        }
+      paths.filter(_.getName.endsWith(".parquet")).foreach { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try reader.getFooter.getBlocks.forEach(b => total += b.getRowCount)
+        finally reader.close()
       }
       total
     } catch { case scala.util.control.NonFatal(_) => -1L }

@@ -318,4 +318,160 @@ class Co2PipelineSpec extends AnyFunSuite {
     assert(back.schema == graft.co2.Co2Schemas.raw)
     assert(back.agg(sum("CO2_PPM")).head.getDouble(0) == 420.1 + 423.4)
   }
+
+  /** Append literal feed lines (`YEAR MONTH DAY DECIMAL CO2`) to a feed. */
+  private def appendFeed(path: Path, lines: String*): Unit =
+    Files.writeString(path, lines.map(_ + "\n").mkString,
+      java.nio.file.StandardOpenOption.APPEND)
+
+  private val WatermarkDay = "RAW_CO2.WATERMARK_EPOCH_DAY"
+  private val WatermarkVersion = "RAW_CO2.WATERMARK_VERSION"
+
+  test("watermark: after a SQL INSERT into raw the next run scans, and no day loads twice") {
+    val dir = Files.createTempDirectory("co2_wm_insert_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2020, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    val s = p.raw.state.get
+    assert(s.offsets(WatermarkDay) == LocalDate.of(2020, 12, 31).toEpochDay)
+    assert(s.offsets(WatermarkVersion) == s.version)
+
+    p.registerCatalog("co2wm")
+    spark.sql("INSERT INTO co2wm.RAW_CO2.CO2_DATA VALUES (2021, 1, 3, 2021.005, 413.5)")
+    // January 1-5 have no feed gaps; the 3rd is already in raw, so only the
+    // 4th and 5th are newer than raw's watermark
+    writeFeed(feed, start, LocalDate.of(2021, 1, 6))
+    assert(p.runPipeline(feed.toString).head._2 == "loaded 2 rows")
+    val jan3 = p.raw.read.filter($"YEAR" === 2021 && $"MONTH" === 1 && $"DAY" === 3)
+    assert(jan3.count() == 1)
+    val after = p.raw.state.get
+    assert(after.offsets(WatermarkDay) == LocalDate.of(2021, 1, 5).toEpochDay)
+    assert(after.offsets(WatermarkVersion) == after.version)
+  }
+
+  test("watermark: a raw table without the offsets is scanned once, then carries them") {
+    val dir = Files.createTempDirectory("co2_wm_legacy_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2020, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 1))
+    p.raw.append(NoaaIngest.parseText(spark, feed.toString)) // no offsets
+    writeFeed(feed, start, LocalDate.of(2021, 1, 4))
+    assert(p.load(feed.toString) == 3)
+    val s = p.raw.state.get
+    assert(s.offsets(WatermarkDay) == LocalDate.of(2021, 1, 3).toEpochDay)
+    assert(s.offsets(WatermarkVersion) == s.version)
+
+    // a recorded watermark at raw's latest version is answered without a
+    // scan: one recorded past the rows raw really holds skips them
+    p.raw.commitOffsets(Map(
+      WatermarkDay -> LocalDate.of(2021, 1, 10).toEpochDay,
+      WatermarkVersion -> (s.version + 1)))
+    writeFeed(feed, start, LocalDate.of(2021, 1, 12))
+    assert(p.load(feed.toString) == 1) // January 11 only
+  }
+
+  /** (updated, inserted) per table from analytics' return text. */
+  private def analyticsCounts(ret: String): Seq[(Long, Long)] =
+    "(\\d+)u/(\\d+)i".r.findAllMatchIn(ret)
+      .map(m => (m.group(1).toLong, m.group(2).toLong)).toSeq
+
+  /** DAILY and WEEKLY equal a from-scratch analytics run over the same
+    * harmonized and min/max tables, on every column but META_UPDATED_AT.
+    */
+  private def assertEqualsRecompute(p: Co2Pipeline, scratch: String): Unit = {
+    val q = Co2Pipeline(spark, scratch)
+    q.harmonized.overwrite(p.harmonized.read)
+    q.minMax.overwrite(p.minMax.read)
+    q.analytics()
+    Seq(p.dailyStats -> q.dailyStats, p.weeklyStats -> q.weeklyStats).foreach {
+      case (got, want) =>
+        val g = got.read.drop("META_UPDATED_AT")
+        val w = want.read.drop("META_UPDATED_AT").select(g.columns.map(col): _*)
+        assert(g.count() == w.count() && g.exceptAll(w).isEmpty &&
+          w.exceptAll(g).isEmpty, s"${got.root} differs from a recompute")
+    }
+  }
+
+  test("analytics after each day equals a from-scratch recompute, with the MERGE's counts") {
+    val dir = Files.createTempDirectory("co2_analytics_days_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2019, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    def redeliver(y: Int, m: Int, d: Int, co2: Double): Unit =
+      p.feed.publish(Seq((y, m, d, y + 0.5, co2))
+        .toDF("YEAR", "MONTH", "DAY", "DECIMAL_DATE", "CO2_PPM"))
+    val days: Seq[() => Unit] = Seq(
+      () => appendFeed(feed, "2021 1 1 2021.001 401.25"),
+      () => redeliver(2020, 6, 15, 377.5), // a re-delivered day, new value
+      () => appendFeed(feed, "2021 1 2 2021.004 999.0"), // moves MAX
+      () => { appendFeed(feed, "2021 1 3 2021.007 402.5"); redeliver(2019, 3, 4, 100.0) }, // and MIN
+      () => appendFeed(feed, "2021 1 4 2021.010 403.0", "2021 1 5 2021.012 403.5"))
+    days.zipWithIndex.foreach { case (day, i) =>
+      day()
+      val before = (p.dailyStats.read.select("DATE").as[java.sql.Date].collect().toSet,
+        p.weeklyStats.read.select("WEEK_START").as[java.sql.Date].collect().toSet)
+      val ret = p.runPipeline(feed.toString).toMap
+      assert(!ret("CO2_ANALYTICS_TASK").startsWith("skipped"), ret)
+      val harm = p.harmonized.read
+      val dailyKeys = harm.select("DATE").as[java.sql.Date].collect().toSet
+      val weeklyKeys = harm.select(date_trunc("week", $"DATE").cast("date"))
+        .as[java.sql.Date].collect().toSet
+      // what a MERGE of the recompute into the previous tables reports
+      val want = Seq(before._1 -> dailyKeys, before._2 -> weeklyKeys).map {
+        case (old, now) => ((old & now).size.toLong, (now -- old).size.toLong)
+      }
+      assert(analyticsCounts(ret("CO2_ANALYTICS_TASK")) == want, s"day ${i + 1}: $ret")
+      assertEqualsRecompute(p, dir.resolve(s"scratch$i").toString)
+    }
+    val mm = p.minMax.read.head()
+    assert(mm.getDouble(0) == 100.0 && mm.getDouble(1) == 999.0)
+  }
+
+  test("DAILY/WEEKLY are a function of harmonized: deleted dates leave, foreign rows are replaced") {
+    val dir = Files.createTempDirectory("co2_analytics_pure_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    writeFeed(feed, LocalDate.of(2020, 1, 1), LocalDate.of(2020, 6, 1))
+    p.runPipeline(feed.toString)
+    p.registerCatalog("co2pure")
+    val gone = java.sql.Date.valueOf("2020-03-04")
+    assert(p.dailyStats.read.filter($"DATE" === gone).count() == 1)
+    spark.sql("DELETE FROM co2pure.HARMONIZED_CO2.HARMONIZED_CO2 WHERE DATE = DATE'2020-03-04'")
+    spark.sql("INSERT INTO co2pure.ANALYTICS_CO2.DAILY_CO2_STATS VALUES " +
+      "(DATE'1999-01-01', 1.0, 1.0, 0.0, 0.0, 0.0, TIMESTAMP'1999-01-01 00:00:00')")
+    val harmRows = p.harmonized.read.count()
+    p.analytics()
+    val daily = p.dailyStats.read
+    assert(daily.count() == harmRows)
+    assert(daily.filter($"DATE" === gone || $"DATE" < java.sql.Date.valueOf("2000-01-01"))
+      .isEmpty)
+    // the lag skips the deleted date: March 5th's previous day is March 3rd
+    val mar = daily.filter($"DATE".between("2020-03-03", "2020-03-05")).orderBy("DATE")
+      .select("CO2_PPM", "PREV_DAY_CO2").collect()
+    assert(mar.length == 2 && mar(1).getDouble(1) == mar(0).getDouble(0))
+  }
+
+  test("a one-row day: load takes at most 5 Spark jobs, analytics at most 8") {
+    val dir = Files.createTempDirectory("co2_day_jobs_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2019, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 2))
+    p.runPipeline(feed.toString) // warm-up day
+    writeFeed(feed, start, LocalDate.of(2021, 1, 3))
+    var loaded = 0L
+    val loadJobs = TestSpark.jobsStartedBy { loaded = p.load(feed.toString) }
+    assert(loaded == 1)
+    p.harmonize()
+    val analyticsJobs = TestSpark.jobsStartedBy(p.analytics())
+    assert(loadJobs <= 5 && analyticsJobs <= 8,
+      s"load $loadJobs jobs, analytics $analyticsJobs jobs")
+  }
 }

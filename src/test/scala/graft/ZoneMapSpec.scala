@@ -397,4 +397,15 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(t.readWhere(col("id") >= 100L && col("id") < 200L)
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(100L, 199L))
   }
+
+  test("zone maps of a many-file partitioned part cover every file the commit lists") {
+    val t = VersionedTable(spark, tmp())
+    val df = (1 to 400).map(i => (i % 4, i.toLong, i * 0.5)).toDF("k", "id", "x")
+      .repartition(4, $"id")
+    t.overwritePartitions(df, "k")
+    val part = t.state.get.parts.head
+    assert(part.vals.size == 4 && part.files.size >= 4, part.files)
+    assert(part.stats("id") == ("L:1", "L:400") && part.stats("x") == ("D:0.5", "D:200.0") &&
+      part.stats("k") == ("L:0", "L:3"), part.stats)
+  }
 }
