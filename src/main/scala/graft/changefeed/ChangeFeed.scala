@@ -19,8 +19,10 @@ import graft.storage.VersionedTable
   * the reference's offset-advances-on-DML-consume contract
   * (co2_harmonized_sp/function.py:119-153).
   *
-  * At 100 TB: the log is partitioned parquet, pending() is a pushed-down
-  * range filter on `_BATCH_ID` (partition-pruned), and nothing is ever
+  * At 100 TB: each publish appends one unpartitioned part whose zone map
+  * bounds its `_BATCH_ID`, so pending()'s range filter on `_BATCH_ID`
+  * skips every consumed part without opening it
+  * ([[graft.storage.VersionedTable.SkipParts]]), and nothing is ever
   * rewritten — appends only.
   */
 final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
@@ -130,12 +132,15 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
     * ONE scan + ONE hash shuffle on ROW_ID: a row's net is insert-surplus
     * XOR delete-surplus, so both actions emit from a single aggregate
     * branch (a union of per-action branches would scan and shuffle twice).
+    *
+    * `s` pins the log state read (the latest by default), as a catalog
+    * table pinned at load passes it.
     */
-  def pending(consumedBatchId: Long): DataFrame = {
-    if (!log.exists)
-      throw new IllegalStateException(s"stream $name has no published batches")
-    val raw = log.read.filter(col(BATCH_ID) > consumedBatchId)
-    if (lastMutationBatchId <= consumedBatchId) return raw  // pure appends
+  def pending(consumedBatchId: Long,
+              s: VersionedTable.State = published): DataFrame = {
+    val raw = log.readState(s).filter(col(BATCH_ID) > consumedBatchId)
+    if (s.offsets.getOrElse(MUTATION_KEY, 0L) <= consumedBatchId)
+      return raw  // pure appends
     val dataCols = raw.columns.filterNot(metaColumns.contains).toSeq
     val ins = col(ACTION) === "INSERT"
     val agg = raw.groupBy(col(ROW_ID)).agg(
@@ -160,13 +165,17 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
   }
 
   /** Snowflake APPEND_ONLY stream semantics: raw INSERT rows only, no
-    * netting, deletes/updates invisible. Always shuffle-free.
+    * netting, deletes/updates invisible. Always shuffle-free. `s` as in
+    * [[pending]].
     */
-  def pendingAppendOnly(consumedBatchId: Long): DataFrame = {
-    if (!log.exists)
-      throw new IllegalStateException(s"stream $name has no published batches")
-    log.read.filter(col(BATCH_ID) > consumedBatchId && col(ACTION) === "INSERT")
-  }
+  def pendingAppendOnly(consumedBatchId: Long,
+                        s: VersionedTable.State = published): DataFrame =
+    log.readState(s)
+      .filter(col(BATCH_ID) > consumedBatchId && col(ACTION) === "INSERT")
+
+  /** The log's latest state: one commit-log read for a whole pending read. */
+  private def published: VersionedTable.State = log.state.getOrElse(
+    throw new IllegalStateException(s"stream $name has no published batches"))
 
   /** SYSTEM\$STREAM_HAS_DATA equivalent — O(1) metadata check, no scan:
     * one commit-log read ([[lastBatchId]] is 0 before the first publish).

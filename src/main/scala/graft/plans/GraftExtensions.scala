@@ -26,9 +26,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // SQL reads of graft catalog tables plan the table's own DataFrame
+    // (graft.sql.GraftReadRule); it runs first, so a MERGE source is
+    // already the table's plan when the MERGE rewrite takes it
+    ext.injectPostHocResolutionRule(_ => graft.sql.GraftReadRule)
     // SQL MERGE INTO over graft catalog tables — post-hoc resolution
     // rewrite into an eagerly-executed command (see graft.sql.GraftMergeRule)
     ext.injectPostHocResolutionRule(spark => graft.sql.GraftMergeRule(spark))
+    // part skipping for every filtered table read, DataFrame or SQL
+    // (graft.storage.VersionedTable.SkipParts)
+    ext.injectOptimizerRule(_ => graft.storage.VersionedTable.SkipParts)
 
     ext.injectFunction((FunctionIdentifier("simhash64"),
       info("simhash64", "simhash64(text) - 64-bit SimHash of whitespace-tokenized text"),

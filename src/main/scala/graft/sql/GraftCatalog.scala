@@ -5,22 +5,24 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable, V2WriteCommand}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.procedures
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit, not}
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.changefeed.ChangeFeed
 import graft.storage.VersionedTable
+import graft.storage.VersionedTable.State
 
 /** A DataSource V2 `TableCatalog` over [[VersionedTable]] directories — the
   * raw-SQL surface the reference drives through Snowflake's catalog
@@ -36,11 +38,13 @@ import graft.storage.VersionedTable
   * }}}
   *
   * Layout mapping: `root/<namespace>/<table>` — a table is any directory
-  * with a `_commits` log. Reads go through a V1Scan bridge that delegates
-  * to the table's own DataFrame (so parquet column pruning applies, and
-  * translatable filters are pushed into the underlying scan); writes go
-  * through a V1Write bridge that lands an atomic [[VersionedTable]] commit
-  * — INSERT INTO appends a part, INSERT OVERWRITE / TRUNCATE replaces.
+  * with a `_commits` log. A loaded table is pinned to one committed state.
+  * Reads are planned as the table's own DataFrame over that state
+  * ([[GraftReadRule]]), so Spark optimizes one plan over the parquet
+  * relation: column and filter pushdown, part skipping, vectorized read.
+  * Writes go through a V1Write bridge that lands an atomic
+  * [[VersionedTable]] commit — INSERT INTO appends a part, INSERT
+  * OVERWRITE / TRUNCATE replaces.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog {
@@ -98,22 +102,30 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def tableExists(ident: Identifier): Boolean =
     VersionedTable(spark, dirFor(ident)).exists
 
-  /** An existing table with its properties: one `_table_meta.json` read
-    * and one commit-log read, on every SQL statement that names it.
+  /** An existing table with its properties and the state `at` picks from
+    * it (the latest by default): one `_table_meta.json` read and one commit
+    * read, on every SQL statement that names it. `missing` explains a table
+    * that exists but has no such state.
     */
-  private def existing(ident: Identifier): (VersionedTable, Map[String, String]) = {
+  private def existing(ident: Identifier,
+                       at: VersionedTable => Option[State] = _.state,
+                       missing: VersionedTable => String = _ => "")
+      : (VersionedTable, State, Map[String, String]) = {
     val props = readProps(ident)
     val vt = table(ident, props)
-    if (!vt.exists)
-      throw new NoSuchTableException(Seq(catalogName) ++ ident.namespace.toSeq :+ ident.name)
-    (vt, props)
+    at(vt) match {
+      case Some(s) => (vt, s, props)
+      case None if vt.exists => throw new IllegalArgumentException(missing(vt))
+      case None => throw new NoSuchTableException(
+        Seq(catalogName) ++ ident.namespace.toSeq :+ ident.name)
+    }
   }
 
   override def loadTable(ident: Identifier): Table = {
-    val (vt, props) = existing(ident)
+    val (vt, s, props) = existing(ident)
     if (props.get(GraftCatalog.STREAM_PROP).contains("true"))
-      streamTable(ident, props)
-    else new GraftSqlTable(vt, ident, props, security = Some(security))
+      streamTable(ident, s, props)
+    else new GraftSqlTable(vt, s, ident, props, Some(security))
   }
 
   /** A STREAM object (Snowflake `CREATE STREAM ... ON TABLE` parity,
@@ -124,11 +136,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * commits it (MergeInto consumeOffsets), exactly like Snowflake's
     * DML-transaction advance.
     */
-  private def streamTable(ident: Identifier, props: Map[String, String]): Table = {
+  private def streamTable(ident: Identifier, s: State,
+                          props: Map[String, String]): Table = {
     val offsetKey = props.getOrElse(GraftCatalog.STREAM_KEY_PROP,
       (ident.namespace.toSeq :+ ident.name).mkString("."))
     val feed = ChangeFeed(spark, offsetKey, dirFor(ident))
-    new GraftStreamTable(feed, ident, props,
+    new GraftStreamTable(feed, s, ident, props,
       () => streamConsumedOffset(props, offsetKey),
       appendOnly = props.get("mode").contains("APPEND_ONLY"),
       security = Some(security))
@@ -149,15 +162,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * commit (the reference's Snowflake `AT (STATEMENT => ...)` shape).
     */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val (vt, props) = existing(ident)
     val v = try version.toLong catch {
       case _: NumberFormatException => throw new IllegalArgumentException(
         s"graft table versions are numeric commit ids; got '$version'")
     }
-    require(vt.stateAt(v).isDefined,
+    val (vt, s, props) = existing(ident, _.stateAt(v), vt =>
       s"no committed version $v of ${ident.name} " +
         s"(available: ${vt.versions.mkString(", ")})")
-    new GraftSqlTable(vt, ident, props, asOfVersion = Some(v))
+    new GraftSqlTable(vt, s, ident, props, Some(security))
   }
 
   /** `SELECT ... FROM t TIMESTAMP AS OF <ts>` — Spark hands us the instant
@@ -165,11 +177,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * before it (Snowflake `AT (TIMESTAMP => ...)`).
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val (vt, props) = existing(ident)
-    val v = vt.versionAt(timestamp / 1000L).getOrElse(
-      throw new IllegalArgumentException(
-        s"no commit of ${ident.name} at or before timestamp $timestamp"))
-    new GraftSqlTable(vt, ident, props, asOfVersion = Some(v))
+    val (vt, s, props) = existing(ident,
+      vt => vt.versionAt(timestamp / 1000L).flatMap(vt.stateAt),
+      _ => s"no commit of ${ident.name} at or before timestamp $timestamp")
+    new GraftSqlTable(vt, s, ident, props, Some(security))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -188,7 +199,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     vt.createEmpty(schema)
     val props = properties.asScala.toMap
     if (props.nonEmpty) writeProps(ident, props)
-    new GraftSqlTable(vt, ident, props, security = Some(security))
+    new GraftSqlTable(vt, vt.state.get, ident, props, Some(security))
   }
 
   /** COMMENT ON TABLE / SET-UNSET TBLPROPERTIES (the reference's
@@ -222,7 +233,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     writeProps(ident, updated)
-    new GraftSqlTable(table(ident), ident, updated, security = Some(security))
+    val vt = table(ident, updated)
+    new GraftSqlTable(vt, vt.state.get, ident, updated, Some(security))
   }
 
   private def metaPath(ident: Identifier) =
@@ -540,96 +552,75 @@ object GraftCatalog {
   }
 }
 
-/** Read-only façade over a STREAM object: the scan is the feed's NET
-  * pending window at the consumer's committed offset, resolved at scan
-  * time (a re-run of the same SQL after a consume sees the drained
-  * stream). Column pruning applies; filters deliberately do NOT push
-  * down — a predicate like `METADATA\$ACTION = 'INSERT'` must evaluate
-  * on the NETTED result, and pushing it below the insert/delete netting
-  * would change the answer.
+/** A catalog table that SQL reads as the table's own DataFrame:
+  * [[GraftReadRule]] puts [[readChecked]]'s plan in place of each read of
+  * the table's relation, so the tables implement no scan of their own.
   */
-final class GraftStreamTable(feed: ChangeFeed, ident: Identifier,
+sealed trait GraftReadable extends Table {
+  /** The table's contents, after the role's SELECT check. */
+  private[sql] def readChecked(): DataFrame
+}
+
+/** Read-only façade over a STREAM object: a read is the feed's NET
+  * pending window at the consumer's committed offset, resolved when the
+  * statement is analyzed (a re-run of the same SQL after a consume sees
+  * the drained stream). A predicate like `METADATA\$ACTION = 'INSERT'`
+  * evaluates on the netted result: Catalyst pushes a filter below the
+  * netting aggregate only where the answer cannot change.
+  */
+final class GraftStreamTable(feed: ChangeFeed, pinned: State, ident: Identifier,
                              props: Map[String, String],
                              consumed: () => Long,
                              appendOnly: Boolean = false,
                              security: Option[GraftSecurity] = None)
-    extends Table with SupportsRead {
+    extends GraftReadable {
 
   override def name(): String = (ident.namespace.toSeq :+ ident.name).mkString(".")
-  override def schema(): StructType = feed.log.schema
+  override def schema(): StructType = pinned.readSchema
   override def properties(): util.Map[String, String] = props.asJava
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+  override private[sql] def readChecked(): DataFrame = {
     security.foreach(_.requirePriv(SparkSession.active, "SELECT",
       ident.namespace.toSeq, ident.name))
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private val fullSchema = schema()
-      private var pruned: StructType = fullSchema
-
-      override def pruneColumns(required: StructType): Unit = {
-        val keep = required.fieldNames.toSet
-        pruned = StructType(fullSchema.fields.filter(f => keep(f.name)))
-      }
-
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = pruned
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val df =
-            if (appendOnly) feed.pendingAppendOnly(consumed())
-            else feed.pending(consumed())
-          val relation = new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = pruned
-            override def buildScan(): RDD[Row] =
-              if (pruned.fields.isEmpty)
-                df.select(lit(1)).rdd.map(_ => Row.empty)
-              else
-                df.select(pruned.fieldNames.map(n => col(s"`$n`")).toSeq: _*).rdd
-          }
-          relation.asInstanceOf[T]
-        }
-      }
-    }
+    if (appendOnly) feed.pendingAppendOnly(consumed(), pinned)
+    else feed.pending(consumed(), pinned)
   }
 }
 
-/** V2 table façade over one [[VersionedTable]]. DELETE is served through
-  * the v1-filter bridge: rows matching ALL pushed predicates are dropped
-  * in one versioned overwrite (rows where the predicate is NULL are KEPT,
-  * per SQL DELETE semantics).
+/** V2 table façade over one [[VersionedTable]], pinned to one committed
+  * state: the latest at load, or a time-travel version. Reads go through
+  * [[GraftReadRule]], writes through the V1 write bridge, and MERGE,
+  * UPDATE and DELETE through [[GraftMergeRule]].
   */
-final class GraftSqlTable(vt: VersionedTable, ident: Identifier,
+final class GraftSqlTable(vt: VersionedTable, pinned: State, ident: Identifier,
                           props: Map[String, String] = Map.empty,
-                          asOfVersion: Option[Long] = None,
                           security: Option[GraftSecurity] = None)
-    extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
+    extends GraftReadable with SupportsWrite with TruncatableTable {
 
-  /** The backing table — used by the SQL MERGE/UPDATE rewrites. */
+  /** The backing table — used by the SQL MERGE/UPDATE/DELETE rewrites. */
   private[graft] def versionedTable: VersionedTable = vt
 
   /** RBAC check against the owning catalog's grants (no-op when the table
     * was built outside a secured catalog, or in admin mode) — also called
-    * by the MERGE/UPDATE rewrite rules, which bypass scan/write builders.
+    * by the read and MERGE/UPDATE/DELETE rewrite rules, which bypass the
+    * write builder.
     */
   private[graft] def requirePriv(priv: String): Unit =
     security.foreach(_.requirePriv(SparkSession.active, priv,
       ident.namespace.toSeq, ident.name))
 
   override def name(): String = (ident.namespace.toSeq :+ ident.name).mkString(".")
-  override def schema(): StructType =
-    asOfVersion.fold(vt.schema)(vt.schemaAt)
+  override def schema(): StructType = pinned.readSchema
   override def properties(): util.Map[String, String] = props.asJava
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+  override private[sql] def readChecked(): DataFrame = {
     requirePriv("SELECT")
-    new GraftScanBuilder(vt, asOfVersion)
+    vt.readState(pinned)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -637,104 +628,43 @@ final class GraftSqlTable(vt: VersionedTable, ident: Identifier,
     new GraftWriteBuilder(vt, onTruncate = () => requirePriv("DELETE"))
   }
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftScanBuilder.toColumn(f).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
+  /** `TRUNCATE TABLE`: a commit with no rows. */
+  override def truncateTable(): Boolean = {
     requirePriv("DELETE")
-    val conds = filters.flatMap(GraftScanBuilder.toColumn)
-    val deletePred = conds.reduceOption(_ && _).getOrElse(lit(true))
-    // zone-map-pruned rewrite: parts that provably contain no matching
-    // row carry over by reference (NULL predicate keeps the row, per SQL)
-    vt.deleteWhere(deletePred)
+    vt.deleteWhere(lit(true))
+    true
   }
 }
 
-/** Pushes column pruning and the translatable subset of filters into the
-  * table's own DataFrame plan, then bridges to V1 — so `.explain` on a SQL
-  * SELECT shows a pruned parquet ReadSchema and PushedFilters, same as the
-  * programmatic path.
+/** SQL reads of graft tables, planned as the tables' own DataFrames (the
+  * way Delta resolves its V2 tables to a file relation): each read of a
+  * [[GraftReadable]] relation becomes the table's SELECT-checked read
+  * plan, under the relation's own output attribute ids, before any file
+  * is opened. Spark then optimizes one plan over the parquet relation.
+  * Write targets and the DELETE/MERGE/UPDATE targets keep their
+  * relations: the write bridge and [[GraftMergeRule]] take them from
+  * there.
   */
-final class GraftScanBuilder(vt: VersionedTable,
-                             asOfVersion: Option[Long] = None)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+object GraftReadRule extends Rule[LogicalPlan] {
 
-  private val fullSchema = asOfVersion.fold(vt.schema)(vt.schemaAt)
-  private var prunedSchema: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rest) = filters.partition(f => GraftScanBuilder.toColumn(f).isDefined)
-    pushed = ok
-    rest // unhandled — Spark re-applies them above the scan
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve the table's column order for the surviving subset
-    val keep = requiredSchema.fieldNames.toSet
-    prunedSchema = StructType(fullSchema.fields.filter(f => keep(f.name)))
-  }
-
-  override def build(): Scan = new V1Scan {
-    override def readSchema(): StructType = prunedSchema
-
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      // pushed filters feed the table's ZONE MAPS: parts whose committed
-      // min/max ranges cannot satisfy them are never opened (readWhere
-      // also applies the condition as the row filter)
-      val cond = pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _)
-      val df0 = (asOfVersion, cond) match {
-        case (None, None) => vt.read
-        case (Some(v), None) => vt.readVersion(v)
-        case (None, Some(c)) => vt.readWhere(c)
-        case (Some(v), Some(c)) => vt.readVersionWhere(v, c)
-      }
-      val filtered = df0
-      val relation = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = prunedSchema
-        override def buildScan(): RDD[Row] =
-          if (prunedSchema.fields.isEmpty)
-            // COUNT(*)-style scan: read no data columns, emit empty rows
-            filtered.select(lit(1)).rdd.map(_ => Row.empty)
-          else if (prunedSchema.fieldNames.sameElements(df0.columns))
-            filtered.rdd
-          else
-            filtered.select(prunedSchema.fieldNames.map(col).toSeq: _*).rdd
-      }
-      relation.asInstanceOf[T]
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val targets = plan.collectWithSubqueries {
+      case w: V2WriteCommand => w.table
+      case m: MergeIntoTable => m.targetTable
+      case u: UpdateTable => u.table
+      case d: DeleteFromTable => d.table
+    }.flatMap(_.collectLeaves())
+    plan.transformUpWithSubqueries {
+      case r @ DataSourceV2Relation(t: GraftReadable, _, _, _, _, _)
+          if !targets.exists(_ eq r) =>
+        val read = t.readChecked().queryExecution.analyzed
+        Project(r.output.map { a =>
+          val c = read.output.find(_.name == a.name).getOrElse(
+            throw new IllegalStateException(
+              s"${t.name()}: read plan has no column ${a.name}"))
+          Alias(c, a.name)(exprId = a.exprId)
+        }, read)
     }
-  }
-}
-
-object GraftScanBuilder {
-  /** sources.Filter → Column for the standard predicate set; None means
-    * "can't push — let Spark evaluate it above the scan".
-    */
-  def toColumn(f: Filter): Option[Column] = f match {
-    case sources.EqualTo(a, v)            => Some(col(a) === lit(v))
-    case sources.EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case sources.GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case sources.LessThan(a, v)           => Some(col(a) < lit(v))
-    case sources.LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case sources.In(a, vs)                => Some(col(a).isin(vs.toSeq: _*))
-    case sources.IsNull(a)                => Some(col(a).isNull)
-    case sources.IsNotNull(a)             => Some(col(a).isNotNull)
-    case sources.StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case sources.StringEndsWith(a, v)     => Some(col(a).endsWith(v))
-    case sources.StringContains(a, v)     => Some(col(a).contains(v))
-    case sources.And(l, r) =>
-      for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-    case sources.Or(l, r) =>
-      for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-    case sources.Not(c)                   => toColumn(c).map(not)
-    case sources.AlwaysTrue()             => Some(lit(true))
-    case sources.AlwaysFalse()            => Some(lit(false))
-    case _                                => None
   }
 }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.storage.VersionedTable
 
-/** SQL `MERGE INTO` for graft catalog tables.
+/** SQL `MERGE INTO`, `UPDATE` and `DELETE` for graft catalog tables.
   *
   * Spark's built-in MERGE planning requires `SupportsRowLevelOperations`
   * (a full v2 BatchWrite); graft's versioned-commit protocol instead wants
@@ -18,7 +18,8 @@ import graft.storage.VersionedTable
   * implements atomically. So, Delta-style, a post-hoc resolution rule
   * rewrites a RESOLVED `MergeIntoTable` over a [[GraftSqlTable]] target
   * into a runnable command (eagerly executed like any SQL command) before
-  * the planner rejects the v2 relation. Non-graft targets are untouched.
+  * the planner rejects the v2 relation. `UPDATE` and `DELETE` become
+  * zone-map-pruned rewrites the same way. Non-graft targets are untouched.
   *
   * Supported shape (the reference's merge, co2_harmonized_sp/
   * function.py:146-153): equality-conjunction ON over same-named columns,
@@ -52,6 +53,12 @@ case class GraftMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
           "(only plain columns can be assigned)")
       }
       GraftUpdateCommand(vt, name, sets, condition.map(e => ExprBox(unresolve(e))))
+
+    case d @ DeleteFromTable(target, condition)
+        if d.resolved && graftTable(target).isDefined =>
+      val (vt, name) = graftTable(target).get
+      sqlTable(target).foreach(_.requirePriv("DELETE"))
+      GraftDeleteCommand(vt, name, ExprBox(unresolve(condition)))
   }
 
   /** Rebind a resolved expression by NAME so it can re-resolve against a
@@ -203,4 +210,22 @@ case class GraftUpdateCommand(@transient vt: VersionedTable, tableName: String,
 
   override def simpleString(maxFields: Int): String =
     s"GraftUpdateCommand $tableName sets=${sets.map(_._1).mkString(",")}"
+}
+
+/** SQL `DELETE FROM <graft table> [WHERE cond]`: rows where the condition
+  * is TRUE are removed in one versioned commit (NULL keeps the row, per
+  * SQL); parts that provably hold no matching row carry over by reference
+  * ([[VersionedTable.deleteWhere]]).
+  */
+case class GraftDeleteCommand(@transient vt: VersionedTable, tableName: String,
+                              condition: ExprBox)
+    extends LeafRunnableCommand {
+
+  override def run(session: SparkSession): Seq[Row] = {
+    vt.deleteWhere(org.apache.spark.sql.graft.ColumnBridge.column(condition.e))
+    Seq.empty
+  }
+
+  override def simpleString(maxFields: Int): String =
+    s"GraftDeleteCommand $tableName"
 }

@@ -251,7 +251,7 @@ object Procedures {
     },
     proc("zonemaps",
       "per-part (column, min, max) zone-map stats of a graft table - the " +
-        "skipping metadata readWhere and pruned DELETE/UPDATE consult; " +
+        "skipping metadata filtered reads and pruned DELETE/UPDATE consult; " +
         "metadata-only",
       table("table")) { a =>
       local("part STRING NOT NULL, column STRING NOT NULL, " +

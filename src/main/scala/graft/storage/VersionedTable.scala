@@ -5,7 +5,10 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.catalyst.expressions.PredicateHelper
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, not, struct, when}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
@@ -51,24 +54,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
                            collectStats: Boolean = true,
                            bloomCols: Seq[String] = Nil) {
 
-  /** One committed data directory. `vals` = the partition values this part
-    * contains, as raw hive-escaped `_pt=` directory names (empty for
-    * unpartitioned full/append parts); a later part's vals shadow the same
-    * values in every earlier part. `stats` = zone-map (min, max) per
-    * column, harvested from the part's parquet footers at commit time
-    * (empty for `collectStats = false` and stat-less columns — absent stats
-    * simply mean "never skip this part"). `files` = the part's data files
-    * as written.
-    */
-  case class Part(dir: String, vals: Seq[String],
-                  stats: Map[String, (String, String)],
-                  files: Seq[VersionedTable.DataFile])
-
-  case class State(version: Long, partitionCol: Option[String],
-                   parts: Seq[Part], offsets: Map[String, Long],
-                   schemaDdl: String) {
-    def schema: StructType = StructType.fromDDL(schemaDdl)
-  }
+  import VersionedTable.{Part, Slice, SliceIndex, State}
 
   /** Hive-default-safe encoding of a partition value (NULLs included). */
   private val NULL_PT = "__GRAFT_NULL__"
@@ -102,13 +88,15 @@ final class VersionedTable(spark: SparkSession, val root: String,
     commitLog.lastOption.map { case (_, st) => readCommitFile(st.getPath) }
 
   def read: DataFrame = state match {
-    case Some(s) => readCommitted(s)
+    case Some(s) => readState(s)
     case _ =>
       throw new IllegalStateException(s"table at $root has no committed data")
   }
 
-  private def readCommitted(s: State): DataFrame =
-    if (s.parts.nonEmpty) readState(s) else emptyRelation(s)
+  /** Table contents exactly as the state `s` left them: a read pinned to
+    * one snapshot, with no further commit-log read.
+    */
+  def readState(s: State): DataFrame = readLive(s, _ => true)
 
   /** All committed versions, ascending. */
   def versions: Seq[Long] = commitLog.map(_._1)
@@ -155,7 +143,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     * valid until [[vacuum]] reclaims it.
     */
   def readVersion(version: Long): DataFrame = stateAt(version) match {
-    case Some(s) => readCommitted(s)
+    case Some(s) => readState(s)
     case None =>
       val vs = versions
       throw new IllegalArgumentException(
@@ -287,29 +275,19 @@ final class VersionedTable(spark: SparkSession, val root: String,
   private def ptKey(c: Column): Column =
     coalesce(c.cast("string"), lit(NULL_PT))
 
-  /** The read schema: the COMMITTED schema, so no footer is read, with
-    * fields relaxed to nullable (an older part may hold NULLs in a column
-    * the latest batch happened to commit as NOT NULL).
+  /** One scan over slices of parts, built from the parts' committed file
+    * lists (a [[SliceIndex]]): building the DataFrame lists nothing and
+    * starts no Spark job, however many partition dirs it spans.
     */
-  private def relaxed(schema: StructType): StructType =
-    StructType(schema.map(_.copy(nullable = true)))
-
-  /** One scan over slices of parts, each a part with its live `_pt` values
-    * (None = the whole part), built from the parts' committed file lists:
-    * its file index finds every directory in a pre-filled status cache, so
-    * building the DataFrame lists nothing and starts no Spark job, however
-    * many partition dirs it spans.
-    */
-  private def listedRead(s: State,
-                         slices: Seq[(Part, Option[Seq[String]])]): DataFrame = {
+  private def listedRead(s: State, slices: Seq[Slice]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     // in slice order, and name order within a part, like a listing read
-    val leafDirs: Seq[(Path, Array[FileStatus])] = slices.flatMap { case (p, live) =>
+    val withDirs = slices.map { case sl @ (p, live) =>
       val raw = new Path(partPath(p.dir))
       val pfs = raw.getFileSystem(conf)
       val dir = pfs.makeQualified(raw)
       val blockSize = pfs.getDefaultBlockSize(dir)
-      p.files.toArray
+      sl -> p.files.toArray
         .map(f => new FileStatus(f.length, false, 1, blockSize, f.mtime,
           new Path(dir, f.path)))
         .groupBy(_.getPath.getParent)
@@ -318,17 +296,9 @@ final class VersionedTable(spark: SparkSession, val root: String,
         }
         .toSeq.sortBy(_._1.getName)
     }
-    val byDir = leafDirs.toMap
-    val cache = new FileStatusCache {
-      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
-        byDir.get(path)
-      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(spark, leafDirs.map(_._1), Map.empty,
-      None, cache, Some(PartitionSpec.emptySpec))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index,
-      PartitionSpec.emptySpec.partitionColumns, relaxed(s.schema), None,
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new SliceIndex(spark, this, withDirs),
+      PartitionSpec.emptySpec.partitionColumns, s.readSchema, None,
       new ParquetFileFormat, Map.empty)(spark))
   }
 
@@ -466,20 +436,23 @@ final class VersionedTable(spark: SparkSession, val root: String,
     }
   }
 
-  private def readState(s: State): DataFrame = readState(s, _ => true)
-
-  /** Live rows of the kept parts; `wanted` narrows partitioned parts to
-    * the `_pt` dir values it accepts (raw, hive-escaped).
+  /** Can part `p` hold a row satisfying every one of `preds`? The one
+    * part-skipping decision: zone maps, then bloom sidecars. Shared by
+    * [[VersionedTable.SkipParts]], [[pruneStats]] and [[rewriteWhere]].
     */
-  private def readState(s: State, keep: Part => Boolean,
-                        wanted: String => Boolean = _ => true): DataFrame = {
-    val kept = s.parts.filter(keep)
-    if (kept.isEmpty)
-      // every part zone-map-pruned: an empty relation with the schema
-      return emptyRelation(s)
+  private def mayHold(schema: StructType, p: Part,
+                      preds: Seq[ZoneMaps.Pred]): Boolean =
+    ZoneMaps.mayMatch(p.stats, preds, spark.sessionState.analyzer.resolver) &&
+      bloomMayMatch(schema.fields, p, preds)
+
+  /** Live rows of `s`; `wanted` narrows partitioned parts to the `_pt`
+    * dir values it accepts (raw, hive-escaped).
+    */
+  private def readLive(s: State, wanted: String => Boolean): DataFrame = {
+    if (s.parts.isEmpty) return emptyRelation(s)
     val anyPartitioned = s.parts.exists(_.vals.nonEmpty)
     if (!anyPartitioned)
-      return listedRead(s, kept.map(_ -> None))
+      return listedRead(s, s.parts.map(_ -> None))
     val pcol = s.partitionCol.getOrElse(
       throw new IllegalStateException(s"partitioned parts but no partcol at $root"))
     // Later parts shadow earlier ones. Partitioned parts are pruned by PATH
@@ -487,14 +460,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
     // the full original schema, so no partition-column inference is
     // involved); an unpartitioned part (an append after a partition-scoped
     // commit) falls back to an exact anti-filter on the real column.
-    val slices = Seq.newBuilder[(Part, Option[Seq[String]])]
+    val slices = Seq.newBuilder[Slice]
     val filtered = Seq.newBuilder[DataFrame]
     s.parts.zipWithIndex.foreach { case (p, i) =>
-      // shadowing MUST consider every later part, including zone-pruned
-      // ones — a pruned later part still overwrote these partition values
       val shadowed = s.parts.drop(i + 1).flatMap(_.vals).toSet
-      if (!keep(p)) ()
-      else if (p.vals.nonEmpty) {
+      if (p.vals.nonEmpty) {
         val live = p.vals.filterNot(shadowed).filter(wanted)
         if (live.nonEmpty) slices += p -> Some(live)
       } else if (shadowed.isEmpty) slices += p -> None
@@ -508,33 +478,22 @@ final class VersionedTable(spark: SparkSession, val root: String,
     else all.reduce(_ unionByName _)
   }
 
-  /** Zero-row relation carrying the table schema (no parts, or all pruned). */
+  /** Zero-row relation carrying the table schema (no parts, or all shadowed). */
   private def emptyRelation(s: State): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
 
-  /** Read with ZONE-MAP PART SKIPPING: part directories whose committed
-    * (min, max) column stats cannot satisfy `cond`'s top-level AND
-    * conjuncts are never opened — then `cond` is applied as a normal row
-    * filter, so the result ALWAYS equals `read.filter(cond)`. Predicates
-    * pruning can't use (ORs, expressions over columns, stat-less columns)
-    * cost nothing: they just don't skip.
+  /** `read.filter(cond)`. Like every filtered read of the table, it skips
+    * parts ([[VersionedTable.SkipParts]]): part directories whose
+    * committed (min, max) column stats or bloom sidecars cannot satisfy
+    * the optimized condition's top-level AND conjuncts are never opened.
+    * Predicates pruning can't use (ORs, expressions over columns,
+    * stat-less columns) cost nothing: they just don't skip.
     *
     * At 100 TB with time-ordered appends this is the difference between
     * "scan the table" and "open the two parts the date range touches" —
     * the same pruning Snowflake micro-partitions / Delta file stats buy.
     */
-  def readWhere(cond: Column): DataFrame = {
-    val s = state.getOrElse(
-      throw new IllegalStateException(s"table at $root has no committed data"))
-    readWhereState(s, cond)
-  }
-
-  /** [[readWhere]] against a historical version (time travel + skipping). */
-  def readVersionWhere(version: Long, cond: Column): DataFrame = {
-    val s = stateAt(version).getOrElse(
-      throw new IllegalStateException(s"no version $version at $root"))
-    readWhereState(s, cond)
-  }
+  def readWhere(cond: Column): DataFrame = read.filter(cond)
 
   /** Live rows of the partitions whose `partitionCol` value, cast to
     * string, is in `values` (non-NULL). When every part is committed
@@ -547,34 +506,22 @@ final class VersionedTable(spark: SparkSession, val root: String,
     if (s.partitionCol.contains(partitionCol) && s.parts.forall(_.vals.nonEmpty)) {
       // the dir name Spark's partitioned write gives each value
       val dirs = values.map(ExternalCatalogUtils.getPartitionValueString).toSet
-      readState(s, _ => true, dirs)
-    } else readCommitted(s).filter(ptKey(col(partitionCol)).isin(values: _*))
+      readLive(s, dirs)
+    } else readState(s).filter(ptKey(col(partitionCol)).isin(values: _*))
   }
 
-  private def readWhereState(s: State, cond: Column): DataFrame = {
-    val schema = s.schema
-    val preds = ZoneMaps.predsOf(spark, schema, cond)
-    val resolver = spark.sessionState.analyzer.resolver
-    readState(s, p => ZoneMaps.mayMatch(p.stats, preds, resolver) &&
-        bloomMayMatch(schema.fields, p, preds))
-      .filter(cond)
-  }
-
-  /** Diagnostic: how many parts a predicate's zone maps would keep/skip —
-    * `(kept, total)`. Metadata-only, no data files opened.
+  /** Diagnostic: how many parts a predicate's zone maps and blooms would
+    * keep — `(kept, total)`. Metadata-only, no data files opened.
     */
   def pruneStats(cond: Column): (Int, Int) = {
     val s = state.getOrElse(return (0, 0))
     val schema = s.schema
     val preds = ZoneMaps.predsOf(spark, schema, cond)
-    val resolver = spark.sessionState.analyzer.resolver
-    (s.parts.count(p => ZoneMaps.mayMatch(p.stats, preds, resolver) &&
-        bloomMayMatch(schema.fields, p, preds)),
-      s.parts.size)
+    (s.parts.count(mayHold(schema, _, preds)), s.parts.size)
   }
 
   def readOr(schema: StructType): DataFrame = state match {
-    case Some(s) => readCommitted(s)
+    case Some(s) => readState(s)
     case None => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
@@ -590,7 +537,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       if (s.parts.exists(_.vals.nonEmpty)) -1L
       else ZoneMaps.totalRows(spark.sparkContext.hadoopConfiguration,
         s.parts.flatMap(p => p.files.map(f => new Path(partPath(p.dir), f.path))))
-    if (fromFooters >= 0) fromFooters else readCommitted(s).count()
+    if (fromFooters >= 0) fromFooters else readState(s).count()
   }
 
   /** Metadata-only commit advancing/resetting offsets — no data job, no
@@ -731,7 +678,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
   def compactClustered(clusterCols: Seq[String], nParts: Int): Long = {
     require(clusterCols.nonEmpty, "need cluster columns")
     val s = clusterableState(nParts)
-    val ranged = readCommitted(s)
+    val ranged = readState(s)
       .repartitionByRange(nParts, clusterCols.map(col): _*)
       .sortWithinPartitions(clusterCols.map(col): _*)
     commitRanged(s, ranged)
@@ -752,7 +699,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   def compactZorder(zCols: Seq[String], nParts: Int, bits: Int = 16): Long = {
     val s = clusterableState(nParts)
-    val base = readCommitted(s)
+    val base = readState(s)
     val zkey = ZOrder.key(base, zCols, bits)
     val ranged = base.withColumn("_zkey", zkey)
       .repartitionByRange(nParts, col("_zkey"))
@@ -912,14 +859,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
       throw new IllegalStateException(s"table at $root has no committed data"))
     if (s.parts.isEmpty) return (s.version, false)
     if (s.parts.exists(_.vals.nonEmpty))
-      return (commit(transform(readCommitted(s)),
+      return (commit(transform(readState(s)),
         Commit.Rewrite(s.partitionCol), Map.empty), true)
     val rwSchema = s.schema
     val preds = ZoneMaps.predsOf(spark, rwSchema, cond)
-    val resolver = spark.sessionState.analyzer.resolver
-    val (touched, untouched) =
-      s.parts.partition(p => ZoneMaps.mayMatch(p.stats, preds, resolver) &&
-        bloomMayMatch(rwSchema.fields, p, preds))
+    val (touched, untouched) = s.parts.partition(mayHold(rwSchema, _, preds))
     if (touched.isEmpty) return (s.version, false)
     val version = s.version + 1
     val attempt = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
@@ -1034,7 +978,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
       newParts.forall(_.vals.isEmpty)
     if (pureAppend) {
       if (newParts.isEmpty)
-        readCommitted(s2).limit(0).withColumn(ACTION, lit("INSERT"))
+        readState(s2).limit(0).withColumn(ACTION, lit("INSERT"))
       else
         listedRead(s2, newParts.map(_ -> None))
           .withColumn(ACTION, lit("INSERT"))
@@ -1043,8 +987,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
       // ADD_COLUMNS commit inside the window otherwise makes exceptAll
       // throw on column-count mismatch. Old rows read NULL for columns
       // they predate, exactly as a post-evolution table read does.
-      val d2 = readCommitted(s2)
-      val d1raw = readCommitted(s1)
+      val d2 = readState(s2)
+      val d1raw = readState(s1)
       val resolver = spark.sessionState.analyzer.resolver
       val d1 = d2.columns.foldLeft(d1raw) { (df, c) =>
         if (df.columns.exists(resolver(_, c))) df
@@ -1071,9 +1015,8 @@ final class VersionedTable(spark: SparkSession, val root: String,
       throw new IllegalStateException(s"no table at $root"))
     val tgt = new VersionedTable(spark, targetRoot)
     require(!tgt.exists, s"clone target $targetRoot already exists")
-    val absParts = s.parts.map(p => tgt.Part(partPath(p.dir), p.vals, p.stats, p.files))
-    tgt.writeCommit(1L,
-      tgt.State(1L, s.partitionCol, absParts, s.offsets, s.schemaDdl))
+    val absParts = s.parts.map(p => p.copy(dir = partPath(p.dir)))
+    tgt.writeCommit(1L, State(1L, s.partitionCol, absParts, s.offsets, s.schemaDdl))
     tgt
   }
 
@@ -1091,11 +1034,11 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   /** Reads apply the LATEST commit's schema to ALL parts (see
-    * [[relaxed]]), so an incremental commit that drops a column would
-    * silently hide it in every older part, and one that changes a column's
-    * type can make the vectorized reader throw on old files. Reject both at
-    * commit time; ADDING a column is fine (parquet reads it as NULL from
-    * parts that lack it).
+    * [[VersionedTable.State.readSchema]]), so an incremental commit that
+    * drops a column would silently hide it in every older part, and one
+    * that changes a column's type can make the vectorized reader throw on
+    * old files. Reject both at commit time; ADDING a column is fine
+    * (parquet reads it as NULL from parts that lack it).
     */
   private def requireCompatibleSchema(prev: State, df: DataFrame): Unit = {
     if (prev.parts.isEmpty) return
@@ -1357,6 +1300,84 @@ final class VersionedTable(spark: SparkSession, val root: String,
 object VersionedTable {
   /** One data file of a part: `path` relative to the part dir. */
   case class DataFile(path: String, length: Long, mtime: Long)
+
+  /** One committed data directory. `vals` = the partition values this part
+    * contains, as raw hive-escaped `_pt=` directory names (empty for
+    * unpartitioned full/append parts); a later part's vals shadow the same
+    * values in every earlier part. `stats` = zone-map (min, max) per
+    * column, harvested from the part's parquet footers at commit time
+    * (empty for `collectStats = false` and stat-less columns — absent stats
+    * simply mean "never skip this part"). `files` = the part's data files
+    * as written.
+    */
+  case class Part(dir: String, vals: Seq[String],
+                  stats: Map[String, (String, String)],
+                  files: Seq[DataFile])
+
+  /** One committed version: a snapshot a read can be pinned to. */
+  case class State(version: Long, partitionCol: Option[String],
+                   parts: Seq[Part], offsets: Map[String, Long],
+                   schemaDdl: String) {
+    def schema: StructType = StructType.fromDDL(schemaDdl)
+
+    /** The schema a read returns: the COMMITTED schema, so no footer is
+      * read, with fields relaxed to nullable (an older part may hold NULLs
+      * in a column the latest batch happened to commit as NOT NULL).
+      */
+    def readSchema: StructType = StructType(schema.map(_.copy(nullable = true)))
+  }
+
+  /** A part with its live `_pt` values (None = the whole part). */
+  type Slice = (Part, Option[Seq[String]])
+
+  /** The file index of one table scan: the slices it reads, each with its
+    * leaf dirs' files as the commit lists them. Every dir is found in a
+    * pre-filled status cache, so building the index lists nothing and
+    * starts no Spark job. [[SkipParts]] narrows it to the slices a filter
+    * may match.
+    */
+  private[graft] final class SliceIndex(
+      spark: SparkSession, val table: VersionedTable,
+      val slices: Seq[(Slice, Seq[(Path, Array[FileStatus])])])
+    extends InMemoryFileIndex(spark, slices.flatMap(_._2.map(_._1)), Map.empty,
+      None, SliceIndex.cacheOf(slices.flatMap(_._2).toMap),
+      Some(PartitionSpec.emptySpec)) {
+
+    def narrowed(keep: Slice => Boolean): SliceIndex =
+      new SliceIndex(spark, table, slices.filter(s => keep(s._1)))
+  }
+
+  private object SliceIndex {
+    def cacheOf(byDir: Map[Path, Array[FileStatus]]): FileStatusCache =
+      new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+          byDir.get(path)
+        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+  }
+
+  /** Part skipping, one optimizer rule for every read: a deterministic
+    * `Filter` over a table scan keeps only the slices whose parts may hold
+    * a matching row ([[VersionedTable.mayHold]]: zone maps, then bloom
+    * sidecars). Pruning runs on the scan's slices, after shadowing was
+    * resolved, so a skipped part never changes which values another part
+    * shows. The rule rewrites only when the kept set strictly shrinks, so
+    * the optimizer's fixed point ends.
+    */
+  object SkipParts extends Rule[LogicalPlan] with PredicateHelper {
+    override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
+      case f @ Filter(cond, l @ LogicalRelation(r @ HadoopFsRelation(
+          idx: SliceIndex, _, _, _, _, _), _, _, _, _)) if cond.deterministic =>
+        val preds = ZoneMaps.predsOf(splitConjunctivePredicates(cond))
+        val kept =
+          if (preds.isEmpty) idx
+          else idx.narrowed(s => idx.table.mayHold(r.dataSchema, s._1, preds))
+        if (kept.slices.size == idx.slices.size) f
+        else if (kept.slices.isEmpty) f.copy(child = LocalRelation(l.output))
+        else f.copy(child = l.copy(relation = r.copy(location = kept)(r.sparkSession)))
+    }
+  }
 
   /** The one JSON codec of storage metadata: commit records and the
     * catalog's `_table_meta.json`. Control characters are accepted

@@ -6,19 +6,18 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet => CInSet, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{sources => sf}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Zone maps (data skipping): per-part min/max column statistics,
   * harvested from the parquet FOOTERS the write already produced — no
   * extra Spark job at commit time, just driver-side footer reads of the
   * new part's files. Stored in the commit log, consulted by
-  * [[VersionedTable.readWhere]] (and the SQL catalog's pushed filters) to
-  * skip whole part directories whose value ranges cannot satisfy a
-  * predicate.
+  * [[VersionedTable.SkipParts]] (every filtered read: DataFrame, SQL and
+  * `readWhere` alike) to skip whole part directories whose value ranges
+  * cannot satisfy a predicate.
   *
   * This is the Snowflake micro-partition-pruning / Delta file-stats idea
   * at part granularity: at 100 TB, a time-ordered append stream gives
@@ -319,10 +318,13 @@ object ZoneMaps {
           case e if e.foldable && !e.isInstanceOf[Literal] && e.deterministic =>
             Literal.create(e.eval(org.apache.spark.sql.catalyst.InternalRow.empty), e.dataType)
         }
-        conjuncts(folded).flatMap(predOf)
+        predsOf(conjuncts(folded))
       }
     } catch { case scala.util.control.NonFatal(_) => Seq.empty }
   }
+
+  /** The pruning-usable ones among resolved AND conjuncts. */
+  def predsOf(conjuncts: Seq[Expression]): Seq[Pred] = conjuncts.flatMap(predOf)
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -349,12 +351,19 @@ object ZoneMaps {
     case LessThanOrEqual(a, l: Literal) => attrName(a).flatMap(n => litVal(l).map(Cmp(n, "<=", _)))
     case LessThanOrEqual(l: Literal, a) => attrName(a).flatMap(n => litVal(l).map(Cmp(n, ">=", _)))
     case In(a, ls) if ls.nonEmpty && ls.forall(_.isInstanceOf[Literal]) =>
-      attrName(a).flatMap { n =>
-        val vs = ls.map(l => litVal(l.asInstanceOf[Literal]))
-        if (vs.forall(_.isDefined)) Some(InSet(n, vs.flatten)) else None
-      }
+      inSet(a, ls.map(_.asInstanceOf[Literal]))
+    // the optimizer's form of an IN list longer than
+    // spark.sql.optimizer.inSetConversionThreshold (OptimizeIn)
+    case CInSet(a, vs) if vs.nonEmpty =>
+      inSet(a, vs.toSeq.map(v => Literal(v, a.dataType)))
     case _ => None
   }
+
+  private def inSet(a: Expression, ls: Seq[Literal]): Option[Pred] =
+    attrName(a).flatMap { n =>
+      val vs = ls.map(litVal)
+      if (vs.forall(_.isDefined)) Some(InSet(n, vs.flatten)) else None
+    }
 
   /** Catalyst literal → domain value. Catalyst internals already match
     * parquet physical forms (DATE = epoch days int, TIMESTAMP = micros).
@@ -369,42 +378,6 @@ object ZoneMaps {
     case (FloatType, v) => Some(v.asInstanceOf[Float].toDouble)
     case (DoubleType, v) => Some(v.asInstanceOf[Double])
     case (StringType, v) => Some(v.asInstanceOf[UTF8String].getBytes)
-    case _ => None
-  }
-
-  /** V2 pushed filters → pruning conjuncts (external value types). */
-  def predsOf(filters: Seq[sf.Filter]): Seq[Pred] = filters.flatMap {
-    case sf.EqualTo(a, v) => extVal(v).map(Cmp(a, "=", _))
-    case sf.EqualNullSafe(a, v) if v != null => extVal(v).map(Cmp(a, "=", _))
-    case sf.GreaterThan(a, v) => extVal(v).map(Cmp(a, ">", _))
-    case sf.GreaterThanOrEqual(a, v) => extVal(v).map(Cmp(a, ">=", _))
-    case sf.LessThan(a, v) => extVal(v).map(Cmp(a, "<", _))
-    case sf.LessThanOrEqual(a, v) => extVal(v).map(Cmp(a, "<=", _))
-    case sf.In(a, vs) if vs.nonEmpty =>
-      val conv = vs.toSeq.map(extVal)
-      if (conv.forall(_.isDefined)) Some(InSet(a, conv.flatten)) else None
-    case sf.And(l, r) =>
-      // both sides must hold: each usable side prunes independently
-      predsOf(Seq(l)) ++ predsOf(Seq(r))
-    case _ => None
-  }
-
-  private def extVal(v: Any): Option[Any] = v match {
-    case null => None
-    case n: Byte => Some(n.toLong)
-    case n: Short => Some(n.toLong)
-    case n: Int => Some(n.toLong)
-    case n: Long => Some(n)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => Some(d.toEpochDay)
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
-    case t: java.time.Instant =>
-      Some(t.getEpochSecond * 1000000L + t.getNano / 1000L)
-    case f: Float => Some(f.toDouble)
-    case d: Double => Some(d)
-    case s: String => Some(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    case u: UTF8String => Some(u.getBytes)
     case _ => None
   }
 

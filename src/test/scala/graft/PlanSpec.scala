@@ -196,7 +196,7 @@ class PlanSpec extends AnyFunSuite {
     val q = spark.sql("SELECT v FROM plancat.NS.T WHERE k = 2")
     val p = q.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") && p.contains("EqualTo(k,2)"), p)
-    assert(p.contains("ReadSchema: struct<v:double>"), p)
+    assert(p.contains("ReadSchema: struct<k:int,v:double>"), p)
     assert(q.collect().map(_.getDouble(0)).toSeq == Seq(2.0))
   }
 
