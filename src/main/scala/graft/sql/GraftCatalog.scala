@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException, UpdateAttributeNullability}
+import org.apache.spark.sql.catalyst.expressions.{Alias, KnownNotNull}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.procedures
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.sources.InsertableRelation
@@ -576,7 +577,7 @@ final class GraftStreamTable(feed: ChangeFeed, pinned: State, ident: Identifier,
     extends GraftReadable {
 
   override def name(): String = (ident.namespace.toSeq :+ ident.name).mkString(".")
-  override def schema(): StructType = pinned.readSchema
+  override def schema(): StructType = pinned.schema
   override def properties(): util.Map[String, String] = props.asJava
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
@@ -612,7 +613,7 @@ final class GraftSqlTable(vt: VersionedTable, pinned: State, ident: Identifier,
       ident.namespace.toSeq, ident.name))
 
   override def name(): String = (ident.namespace.toSeq :+ ident.name).mkString(".")
-  override def schema(): StructType = pinned.readSchema
+  override def schema(): StructType = pinned.schema
   override def properties(): util.Map[String, String] = props.asJava
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
@@ -657,12 +658,21 @@ object GraftReadRule extends Rule[LogicalPlan] {
     plan.transformUpWithSubqueries {
       case r @ DataSourceV2Relation(t: GraftReadable, _, _, _, _, _)
           if !targets.exists(_ eq r) =>
-        val read = t.readChecked().queryExecution.analyzed
+        // a column committed NOT NULL reads as NOT NULL, as the relation
+        // reports it: marked on the scan itself, so filters on it still
+        // push down, and trusted above a computed column (a stream's net)
+        val notNull = r.output.filterNot(_.nullable).map(_.name).toSet
+        val read = UpdateAttributeNullability(
+          t.readChecked().queryExecution.analyzed transform {
+            case l: LogicalRelation => l.copy(output = l.output.map(a =>
+              if (notNull(a.name)) a.withNullability(false) else a))
+          })
         Project(r.output.map { a =>
           val c = read.output.find(_.name == a.name).getOrElse(
             throw new IllegalStateException(
               s"${t.name()}: read plan has no column ${a.name}"))
-          Alias(c, a.name)(exprId = a.exprId)
+          Alias(if (c.nullable && !a.nullable) KnownNotNull(c) else c,
+            a.name)(exprId = a.exprId)
         }, read)
     }
   }

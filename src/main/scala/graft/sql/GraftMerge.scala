@@ -1,7 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -58,6 +58,13 @@ case class GraftMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
         if d.resolved && graftTable(target).isDefined =>
       val (vt, name) = graftTable(target).get
       sqlTable(target).foreach(_.requirePriv("DELETE"))
+      // the command re-resolves the condition by name against a fresh
+      // read, which a subquery's outer references cannot follow
+      if (SubqueryExpression.hasSubquery(condition))
+        throw new AnalysisException(
+          errorClass = "UNSUPPORTED_FEATURE.TABLE_OPERATION",
+          messageParameters = Map("tableName" -> name,
+            "operation" -> "DELETE with a subquery in its condition"))
       GraftDeleteCommand(vt, name, ExprBox(unresolve(condition)))
   }
 

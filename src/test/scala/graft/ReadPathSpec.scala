@@ -48,7 +48,7 @@ class ReadPathSpec extends AnyFunSuite {
     val plan = spark.sql("SELECT id FROM rp1.NS.T WHERE id >= 200")
       .queryExecution.executedPlan.toString
     assert(plan.contains("FileScan parquet") &&
-      plan.contains("PushedFilters: [IsNotNull(id), GreaterThanOrEqual(id,200)]"), plan)
+      plan.contains("PushedFilters: [GreaterThanOrEqual(id,200)]"), plan)
   }
 
   test("read.filter skips parts exactly as readWhere does") {
@@ -137,6 +137,49 @@ class ReadPathSpec extends AnyFunSuite {
     assert(rows(sql) == Seq("[1,10.0,INSERT,false]", "[2,21.0,INSERT,true]"))
     assert(rows(sql) == rows(direct))
     assert(rows(spark.sql("SELECT * FROM rp3.NS.S")) == rows(feed.pending(0)))
+    // the netted columns keep the log's committed NOT NULL
+    val streamSchema = spark.table("rp3.NS.S").schema
+    assert(!streamSchema("k").nullable && !streamSchema("v").nullable, streamSchema)
+    spark.sql("CREATE TABLE rp3.NS.OUT (k INT NOT NULL, v DOUBLE NOT NULL)")
+    spark.sql("INSERT INTO rp3.NS.OUT SELECT k, v FROM rp3.NS.S")
+    assert(spark.table("rp3.NS.OUT").as[(Int, Double)].collect().sorted.toSeq ==
+      Seq((1, 10.0), (2, 21.0)))
+  }
+
+  test("a committed NOT NULL column stays enforced on SQL writes") {
+    val wh = tmp()
+    threeParts(s"$wh/NS/T")
+    GraftCatalog.register(spark, "rp4", wh)
+    spark.sql("CREATE TABLE rp4.NS.NN (id BIGINT NOT NULL, tag STRING)")
+    val nn = VersionedTable(spark, s"$wh/NS/NN")
+    val v0 = nn.state.get.version
+    intercept[Exception](spark.sql("INSERT INTO rp4.NS.NN VALUES (NULL, 'a')"))
+    assert(nn.state.get.version == v0)
+    assert(!spark.table("rp4.NS.NN").schema("id").nullable)
+    // INSERT ... SELECT from a graft table into the NOT NULL target
+    spark.sql("INSERT INTO rp4.NS.NN SELECT id, tag FROM rp4.NS.T WHERE id >= 200")
+    assert(spark.sql("SELECT id FROM rp4.NS.NN").as[Long].collect().sorted.toSeq ==
+      Seq(201L, 299L))
+    assert(!nn.schema("id").nullable)
+  }
+
+  test("SQL DELETE takes any condition but a subquery") {
+    val wh = tmp()
+    val t = threeParts(s"$wh/NS/T")
+    VersionedTable(spark, s"$wh/NS/K").overwrite(Seq(1L).toDF("id"))
+    GraftCatalog.register(spark, "rp5", wh)
+    // a condition no sources.Filter expresses
+    spark.sql("DELETE FROM rp5.NS.T WHERE id % 100 = 99 AND length(tag) = 2")
+    assert(spark.sql("SELECT id FROM rp5.NS.T").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 101L, 199L, 201L, 299L))
+    val v = t.state.get.version
+    val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      "DELETE FROM rp5.NS.T WHERE id IN (SELECT id FROM rp5.NS.K)"))
+    assert(e.getMessage.contains("subquery"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      """DELETE FROM rp5.NS.T o
+        |WHERE EXISTS (SELECT 1 FROM rp5.NS.K k WHERE k.id = o.id)""".stripMargin))
+    assert(t.state.get.version == v)
   }
 
   test("pending opens only the unconsumed parts of the stream log") {
