@@ -31,7 +31,10 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
 
   import ChangeFeed._
 
-  def lastBatchId: Long = log.offsets.getOrElse(PRODUCER_KEY, 0L)
+  def lastBatchId: Long = log.state.fold(0L)(lastBatchIn)
+
+  /** The last batch id published as of the log state `s`. */
+  def lastBatchIn(s: VersionedTable.State): Long = s.offsets.getOrElse(PRODUCER_KEY, 0L)
 
   /** Highest batch id containing a non-INSERT (DELETE / update) row —
     * O(1) off the commit offsets. 0 when the log is pure appends.
@@ -172,6 +175,13 @@ final class ChangeFeed(spark: SparkSession, val name: String, root: String) {
                         s: VersionedTable.State = published): DataFrame =
     log.readState(s)
       .filter(col(BATCH_ID) > consumedBatchId && col(ACTION) === "INSERT")
+
+  /** The log parts a [[pending]] read of `s` opens: those whose zone maps
+    * may hold a batch after `consumedBatchId`. Metadata-only.
+    */
+  def pendingParts(consumedBatchId: Long,
+                   s: VersionedTable.State = published): Seq[VersionedTable.Part] =
+    log.partsWhere(s, col(BATCH_ID) > consumedBatchId)
 
   /** The log's latest state: one commit-log read for a whole pending read. */
   private def published: VersionedTable.State = log.state.getOrElse(

@@ -1,15 +1,18 @@
 package graft.co2
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.changefeed.ChangeFeed
 import graft.functions.Co2Functions
 import graft.operators.{MergeInto, OrderedLag}
 import graft.plans.expressions.runTimestamp
 import graft.sql.{TaskDag, TaskDef}
-import graft.storage.VersionedTable
+import graft.storage.{VersionedTable, ZoneMaps}
+import graft.storage.VersionedTable.State
 import java.sql.Date
-import java.time.LocalDate
+import java.time.{DayOfWeek, LocalDate}
+import java.time.temporal.TemporalAdjusters
 
 /** The full incremental pipeline — raw → harmonized → analytics — with the
   * same layer semantics as the reference's three stored procedures and task
@@ -20,19 +23,32 @@ import java.time.LocalDate
   *   RAW_CO2/CO2_DATA, RAW_CO2/CO2_DATA_STREAM (change log),
   *   HARMONIZED_CO2/HARMONIZED_CO2, ANALYTICS_CO2/{DAILY_CO2_STATS,
   *   WEEKLY_CO2_STATS,_CO2_MINMAX}.
+  *
+  * A one-row day is delta-sized: harmonize takes the touched YEARs from the
+  * stream parts' zone maps and merges that one-partition slice in one
+  * Spark job; CO2_PPM's min/max is folded from harmonized's per-file zone
+  * maps; and analytics recomputes only the rows from 1 January of the
+  * earliest changed YEAR on ([[analytics]]).
   */
 final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
   import Co2Pipeline._
 
-  // collectStats = false: these layer tables hold ~19k rows in a handful
-  // of scan tasks — zone maps have nothing to skip, while the per-commit
-  // footer harvest is a real cost on this 34-commit-per-run pipeline
+  // collectStats = false where no reader uses the zone maps: raw and the
+  // analytics tables hold ~19k rows in a handful of scan tasks, so they
+  // have nothing to skip. Harmonized keeps each YEAR file's stats (its
+  // CO2_PPM min/max and DATE range, read by analytics), _CO2_MINMAX its
+  // one row's value, and the stream log its parts' YEAR and _BATCH_ID
+  // ranges (the touched YEARs). A one-row day makes up to 7 commits:
+  // raw, stream, harmonized, _CO2_MINMAX when its value moves, DAILY,
+  // WEEKLY and the task history.
   val raw         = VersionedTable(spark, s"$warehouseRoot/RAW_CO2/CO2_DATA", collectStats = false)
   val feed        = ChangeFeed(spark, STREAM_NAME, s"$warehouseRoot/RAW_CO2/CO2_DATA_STREAM")
-  val harmonized  = VersionedTable(spark, s"$warehouseRoot/HARMONIZED_CO2/HARMONIZED_CO2", collectStats = false)
+  val harmonized  = VersionedTable(spark, s"$warehouseRoot/HARMONIZED_CO2/HARMONIZED_CO2")
   val dailyStats  = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/DAILY_CO2_STATS", collectStats = false)
   val weeklyStats = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/WEEKLY_CO2_STATS", collectStats = false)
-  val minMax      = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/_CO2_MINMAX", collectStats = false)
+  val minMax      = VersionedTable(spark, s"$warehouseRoot/ANALYTICS_CO2/_CO2_MINMAX")
+
+  private def resolver = spark.sessionState.analyzer.resolver
 
   // ---------------------------------------------------------------- load --
 
@@ -110,16 +126,16 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
   /** Consume pending stream rows, derive DATE, upsert into harmonized, and
     * refresh the 1-row _CO2_MINMAX table. Offset commits atomically with
     * the merge (exactly-once). Returns "no data" / merge summary string,
-    * mirroring the SP's string return.
+    * mirroring the SP's string return. One read of the stream log's state
+    * gives the offset, the pending rows and the parts they come from.
     */
   def harmonize(): String = {
     val consumed = harmonized.offsets.getOrElse(STREAM_NAME, 0L)
-    if (!feed.hasData(consumed)) return "No data in stream - nothing to harmonize"
-
-    val latestBatch = feed.lastBatchId
+    val log = feed.log.state.filter(feed.lastBatchIn(_) > consumed)
+      .getOrElse(return "No data in stream - nothing to harmonize")
     val r = mergeHarmonized(
-      feed.pending(consumed).filter(col(ChangeFeed.ACTION) === "INSERT"),
-      Map(STREAM_NAME -> latestBatch))
+      feed.pending(consumed, log).filter(col(ChangeFeed.ACTION) === "INSERT"),
+      Map(STREAM_NAME -> feed.lastBatchIn(log)), Some(feed.pendingParts(consumed, log)))
     s"Harmonized: ${r.updated} updated, ${r.inserted} inserted (v${r.version})"
   }
 
@@ -127,10 +143,14 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     * and refresh the 1-row _CO2_MINMAX table: the one harmonize step of
     * the batch consumer ([[harmonize]]) and the streaming one
     * ([[graft.streaming.Streaming.harmonizeAvailableNow]]).
-    * `consumeOffsets` commit atomically with the merge.
+    * `consumeOffsets` commit atomically with the merge. `sourceParts`, the
+    * stream parts `inserts` is read from, give the merge its touched YEARs
+    * from their zone maps; without them the merge collects them.
     */
   private[graft] def mergeHarmonized(inserts: DataFrame,
-                                     consumeOffsets: Map[String, Long]): MergeInto.MergeResult = {
+                                     consumeOffsets: Map[String, Long],
+                                     sourceParts: Option[Seq[VersionedTable.Part]] = None
+                                    ): MergeInto.MergeResult = {
     val batchTs = runTimestamp() // one instant per merge batch
     val source = inserts
       .drop(ChangeFeed.metaColumns: _*)
@@ -153,16 +173,41 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
       // rewrites only the touched years — never the full history snapshot.
       val r = MergeInto(spark, harmonized, source, Seq("DATE"),
         consumeOffsets = consumeOffsets, dedupeSource = true,
-        partitionBy = Some("YEAR"))
+        partitionBy = Some("YEAR"), sourceStats = sourceParts.map(_.map(_.stats)))
 
-      // CTAS _CO2_MINMAX (co2_harmonized_sp/function.py:74-91)
-      val mm = harmonized.read.agg(
-        min(col("CO2_PPM")).as("MIN_CO2"),
-        max(col("CO2_PPM")).as("MAX_CO2"))
-      minMax.overwrite(mm)
+      // CTAS _CO2_MINMAX (co2_harmonized_sp/function.py:74-91), committed
+      // only when its value differs from harmonized's
+      val mm = co2Range(harmonized.state.get)
+      if (!minMax.state.flatMap(committedMinMax).contains(mm))
+        minMax.overwrite(spark.createDataFrame(java.util.List.of(mm), Co2Schemas.minMax))
       r
     }
   }
+
+  /** (min, max) of column `c` over the live files of `t` at `s`, folded
+    * from their zone maps: no Spark job. None when a file has no stats on
+    * `c` (no stats kept, or no non-null value).
+    */
+  private def statsRange(t: VersionedTable, s: State, c: String): Option[(Double, Double)] =
+    t.liveFiles(s).flatMap(fs => ZoneMaps.range(fs.map(_.stats), c, resolver)).collect {
+      case (mn: Double, mx: Double) => (mn, mx)
+    }
+
+  /** Harmonized's CO2_PPM (min, max) at `s`: from its files' zone maps,
+    * else from one aggregate job (NULLs when no value is known).
+    */
+  private def co2Range(s: State): Row =
+    statsRange(harmonized, s, "CO2_PPM").fold(
+      harmonized.readState(s).agg(min(col("CO2_PPM")), max(col("CO2_PPM"))).head()) {
+      case (mn, mx) => Row(mn, mx)
+    }
+
+  /** The one row _CO2_MINMAX holds at `s`, from its zone maps and footer. */
+  private def committedMinMax(s: State): Option[Row] = for {
+    (mn, mn2) <- statsRange(minMax, s, "MIN_CO2") if mn == mn2
+    (mx, mx2) <- statsRange(minMax, s, "MAX_CO2") if mx == mx2
+    if minMax.rowCount(s) == 1L
+  } yield Row(mn, mx)
 
   // ----------------------------------------------------------- analytics --
 
@@ -174,35 +219,41 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     * thus a function of harmonized alone: a date deleted from harmonized
     * leaves DAILY too, and rows written to them by other means are
     * replaced.
+    *
+    * Each commit records the harmonized version it was computed from and
+    * its own version. When harmonized has since only gained
+    * partition-scoped parts, its min/max is unchanged and neither table was
+    * written by anyone else, only the rows from 1 January of the earliest
+    * changed YEAR on are recomputed ([[changedSince]]), as one partition,
+    * and written with the kept rows in one job per table. Rows outside
+    * that slice keep their META_UPDATED_AT.
     */
   def analytics(): String = {
-    if (!harmonized.exists) return "No harmonized data - nothing to analyze"
-    val harm = harmonized.read
+    val h = harmonized.state.getOrElse(return "No harmonized data - nothing to analyze")
 
-    // minmax injected as literals — the reference's collect-to-lit pattern
-    val mmRow = (if (minMax.exists) minMax.read else harm.agg(
-      min(col("CO2_PPM")).as("MIN_CO2"), max(col("CO2_PPM")).as("MAX_CO2")))
-      .collect().head
-    val minCo2 = mmRow.getDouble(0)
-    val maxCo2 = mmRow.getDouble(1)
+    // minmax injected as literals — the reference's collect-to-lit pattern,
+    // folded from harmonized's own file stats
+    val mm = co2Range(h)
+    val minCo2 = mm.getDouble(0)
+    val maxCo2 = mm.getDouble(1)
     val batchTs = runTimestamp()
 
-    // daily: lag over date order (partitioned+stitched, exact global result)
-    val daily = OrderedLag.byDate(
-        harm.select(col("DATE"), col("CO2_PPM")), "DATE", "CO2_PPM", "PREV_DAY_CO2")
-      .select(
-        col("DATE"), col("CO2_PPM"), col("PREV_DAY_CO2"),
-        Co2Functions.co2PercentChange(col("PREV_DAY_CO2"), col("CO2_PPM")).as("DAILY_CHANGE"),
-        Co2Functions.co2Volatility(col("CO2_PPM"), col("PREV_DAY_CO2")).as("DAILY_VOLATILITY"),
-        Co2Functions.normalizeCo2(col("CO2_PPM"), lit(minCo2), lit(maxCo2)).as("NORMALIZED_CO2"),
-        batchTs.as("META_UPDATED_AT"))
-    // weekly: Monday-truncated buckets; the reference labels the weekly
-    // MIN/MAX as WEEK_START_CO2/WEEK_END_CO2 — replicated faithfully, and
-    // weekly change/volatility compare that min and max (not adjacent weeks).
-    val weekly = harm
+    // daily: lag over date order; weekly: Monday-truncated buckets. The
+    // reference labels the weekly MIN/MAX as WEEK_START_CO2/WEEK_END_CO2 —
+    // replicated faithfully, and weekly change/volatility compare that min
+    // and max (not adjacent weeks). The weekly average sums exactly, in
+    // DECIMAL, so a week is the same however its rows split across scan
+    // partitions: a kept row equals a recompute's.
+    def daily(lagged: DataFrame) = lagged.select(
+      col("DATE"), col("CO2_PPM"), col("PREV_DAY_CO2"),
+      Co2Functions.co2PercentChange(col("PREV_DAY_CO2"), col("CO2_PPM")).as("DAILY_CHANGE"),
+      Co2Functions.co2Volatility(col("CO2_PPM"), col("PREV_DAY_CO2")).as("DAILY_VOLATILITY"),
+      Co2Functions.normalizeCo2(col("CO2_PPM"), lit(minCo2), lit(maxCo2)).as("NORMALIZED_CO2"),
+      batchTs.as("META_UPDATED_AT"))
+    def weekly(rows: DataFrame) = rows
       .groupBy(date_trunc("week", col("DATE")).cast("date").as("WEEK_START"))
       .agg(
-        avg(col("CO2_PPM")).as("AVG_WEEKLY_CO2"),
+        avg(col("CO2_PPM").cast("decimal(38,12)")).cast("double").as("AVG_WEEKLY_CO2"),
         min(col("CO2_PPM")).as("WEEK_START_CO2"),
         max(col("CO2_PPM")).as("WEEK_END_CO2"))
       .select(
@@ -212,6 +263,48 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
         Co2Functions.co2Volatility(col("WEEK_END_CO2"), col("WEEK_START_CO2")).as("WEEKLY_VOLATILITY"),
         Co2Functions.normalizeCo2(col("AVG_WEEKLY_CO2"), lit(minCo2), lit(maxCo2)).as("NORMALIZED_WEEKLY_CO2"),
         batchTs.as("META_UPDATED_AT"))
+    def lagged(rows: DataFrame, lag: (DataFrame, String, String, String) => DataFrame) =
+      lag(rows.select(col("DATE"), col("CO2_PPM")), "DATE", "CO2_PPM", "PREV_DAY_CO2")
+
+    // the plans are built in the commit threads, after the schema check
+    val (prevDaily, prevWeekly) = (dailyStats.state, weeklyStats.state)
+    val (dailyRows, weeklyRows): (() => DataFrame, () => DataFrame) =
+      changedSince(h, prevDaily, prevWeekly) match {
+        case Some((year, years)) =>
+          // the prior year gives 1 January its lag and the straddling week
+          // its December days; a NULL DATE never reaches the slice and is
+          // kept with the earlier rows, all of which a MERGE matches
+          val from = LocalDate.of(year, 1, 1)
+          val weekFrom = from.`with`(TemporalAdjusters.previousOrSame(DayOfWeek.MONDAY))
+          val rows = harmonized.readPartitions(h, "YEAR", years)
+            .filter(col("DATE") >= lit(Date.valueOf(from.minusYears(1)))).coalesce(1)
+          def slice(t: VersionedTable, s: State, fresh: DataFrame, key: String,
+                    upTo: LocalDate) = {
+            val prev = t.readState(s)
+            val since = col(key) >= lit(Date.valueOf(upTo))
+            // a MERGE matches every kept row, and a recomputed one whose key
+            // a previous row has: a join of two single partitions, no exchange
+            val old = prev.filter(since).select(col(key).as("_old_key")).coalesce(1).distinct()
+            fresh.filter(since)
+              .join(old.withColumn(Matched, lit(true)).hint("merge"), col(key) === col("_old_key"), "left")
+              .drop("_old_key")
+              .unionByName(prev.filter(!since || col(key).isNull).withColumn(Matched, lit(true)))
+              .coalesce(1)
+          }
+          (() => slice(dailyStats, prevDaily.get, daily(lagged(rows, OrderedLag.inPartition)),
+             "DATE", from),
+           () => slice(weeklyStats, prevWeekly.get,
+             weekly(rows.filter(col("DATE") >= lit(Date.valueOf(weekFrom)))), "WEEK_START", weekFrom))
+        case None =>
+          // lag partitioned + stitched, exact global result; a MERGE
+          // matches a row whose key a previous row has
+          val harm = harmonized.readState(h)
+          def flagged(rows: DataFrame, prev: Option[DataFrame], key: String) =
+            rows.withColumn(Matched, prev.fold(lit(false))(old => col(key).isin(old.select(key))))
+          (() => flagged(daily(lagged(harm, OrderedLag.byDate)),
+             prevDaily.map(dailyStats.readState), "DATE"),
+           () => flagged(weekly(harm), prevWeekly.map(weeklyStats.readState), "WEEK_START"))
+      }
 
     // Reference scales to LARGE around the analytics merges
     // (co2_analytical_sp/function.py:91,151). The two commits target
@@ -226,8 +319,10 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val (dT, wT) = try {
-      val dF = Future(withScaledResources("LARGE")(replace(dailyStats, daily)))
-      val wF = Future(withScaledResources("LARGE")(replace(weeklyStats, weekly)))
+      val dF = Future(withScaledResources("LARGE")(
+        replace(dailyStats, prevDaily, Co2Schemas.dailyStats, dailyRows(), h.version)))
+      val wF = Future(withScaledResources("LARGE")(
+        replace(weeklyStats, prevWeekly, Co2Schemas.weeklyStats, weeklyRows(), h.version)))
       // await BOTH before surfacing a failure, so no commit is still in
       // flight once this method has thrown
       (Await.ready(dF, Duration.Inf).value.get, Await.ready(wF, Duration.Inf).value.get)
@@ -238,25 +333,61 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     s"Analytics: daily ${du}u/${di}i, weekly ${wu}u/${wi}i"
   }
 
-  /** Commit `rows`, a full recompute, over `target`, and return the
-    * (updated, inserted) counts the reference's MERGE reports, without a
-    * job of their own: every previous row's key is recomputed, so the
-    * previous row count (from footers) is the updated count, capped at the
-    * rows written (observed on the write); the rest are inserted. Like the
-    * MERGE, it refuses a target of another column set.
+  /** The earliest harmonized YEAR changed since DAILY and WEEKLY were
+    * computed (from harmonized at `h`), and the live YEAR partitions from
+    * the year before it on, when recomputing from 1 January of that YEAR
+    * yields the full recompute's rows. That holds when both tables were
+    * last written by [[analytics]] from one harmonized version; harmonized
+    * has since only added partition-scoped parts, of YEAR values, with the
+    * same columns and types; its CO2_PPM min/max is unchanged; the year
+    * before holds a dated row; and no changed YEAR file, shadowed or new,
+    * holds a NULL DATE. Commit metadata and parquet footers only; None
+    * otherwise.
     */
-  private def replace(target: VersionedTable, rows: DataFrame): (Long, Long) = {
-    val prev = target.state
+  private def changedSince(h: State, daily: Option[State],
+                           weekly: Option[State]): Option[(Int, Seq[String])] = {
+    def own(s: State) = s.offsets.get(OwnVersion).contains(s.version)
+    for {
+      d <- daily; w <- weekly if own(d) && own(w)
+      hv <- d.offsets.get(AnalyzedVersion)
+      if w.offsets.get(AnalyzedVersion).contains(hv) && hv < h.version
+      old <- harmonized.stateAt(hv)
+      added = h.parts.drop(old.parts.size)
+      if h.parts.startsWith(old.parts) && added.nonEmpty && added.forall(_.vals.nonEmpty) &&
+        org.apache.spark.sql.types.DataType.equalsIgnoreNullability(h.schema, old.schema) &&
+        h.partitionCol.contains("YEAR")
+      touched = added.flatMap(_.vals).toSet
+      years = touched.flatMap(_.toIntOption) if years.size == touched.size
+      year = years.min
+      mm <- statsRange(harmonized, h, "CO2_PPM") if statsRange(harmonized, old, "CO2_PPM").contains(mm)
+      now <- harmonized.liveFiles(h)
+      before <- harmonized.liveFiles(old)
+      if now.exists(f => f.value == (year - 1).toString && f.stats.keys.exists(resolver(_, "DATE")))
+      changed = (now ++ before).filter(f => f.value != null && touched(f.value))
+      if ZoneMaps.nullCount(spark.sparkContext.hadoopConfiguration, changed.map(_.path),
+        "DATE", resolver).contains(0L)
+    } yield (year, now.map(_.value).filter(v => v != null && v.toIntOption.exists(_ >= year - 1)).distinct)
+  }
+
+  /** Commit `rows`, of columns `schema` plus [[Matched]], over `target`,
+    * whose state was `prev`, recording the harmonized version `analyzed`
+    * they come from, and return the (updated, inserted) counts the
+    * reference's MERGE of them reports: the rows flagged [[Matched]] and
+    * the rest, observed on the write itself. Like the MERGE, it refuses a
+    * target of another column set, before `rows` is built.
+    */
+  private def replace(target: VersionedTable, prev: Option[State], schema: StructType,
+                      rows: => DataFrame, analyzed: Long): (Long, Long) = {
     prev.foreach { s =>
-      require(s.schema.fieldNames.sorted.sameElements(rows.columns.sorted),
+      require(s.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
         s"merge schema mismatch: target ${s.schema.fieldNames.mkString(",")} " +
-          s"vs source ${rows.columns.mkString(",")}")
+          s"vs source ${schema.fieldNames.mkString(",")}")
     }
-    val before = prev.fold(0L)(target.rowCount)
     val obs = new org.apache.spark.sql.Observation()
-    target.overwrite(rows.observe(obs, count(lit(1)).as("n")))
-    val written = obs.get("n").asInstanceOf[Long]
-    val updated = math.min(before, written)
+    target.overwrite(
+      rows.observe(obs, count(lit(1)).as("n"), count(when(col(Matched), 1)).as("u")).drop(Matched),
+      Map(AnalyzedVersion -> analyzed, OwnVersion -> (prev.fold(0L)(_.version) + 1)))
+    val (written, updated) = (obs.get("n").asInstanceOf[Long], obs.get("u").asInstanceOf[Long])
     (updated, written - updated)
   }
 
@@ -366,6 +497,13 @@ object Co2Pipeline {
     */
   private val WatermarkDay = "RAW_CO2.WATERMARK_EPOCH_DAY"
   private val WatermarkVersion = "RAW_CO2.WATERMARK_VERSION"
+  /** DAILY's and WEEKLY's commit offsets: the harmonized version they were
+    * computed from, and the version the commit itself claimed.
+    */
+  private val AnalyzedVersion = "ANALYTICS_CO2.HARMONIZED_VERSION"
+  private val OwnVersion = "ANALYTICS_CO2.OWN_VERSION"
+  /** Analytics' flag column: the row's key matches a previous row's. */
+  private val Matched = "_MERGE_MATCHED"
   private val DefaultSchedule = "USING CRON 0 10 * * * UTC"
 
   def apply(spark: SparkSession, warehouseRoot: String): Co2Pipeline =

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.storage.VersionedTable
+import graft.storage.{VersionedTable, ZoneMaps}
 
 /** Join-based MERGE (upsert) into a [[VersionedTable]] — the Spark-native
   * re-expression of the reference's Snowpark
@@ -23,7 +23,11 @@ import graft.storage.VersionedTable
   * sources automatically). With `partitionBy` set, the write is a
   * partition-scoped commit (`replaceWhere`-style): only the partitions the
   * source touches are joined and rewritten — a daily merge of a few
-  * thousand rows rewrites one partition, not the 100 TB snapshot.
+  * thousand rows rewrites one partition, not the 100 TB snapshot. When the
+  * caller passes the zone maps of the parts the source is read from, the
+  * touched partitions come from the commit metadata, and a touched slice
+  * that fits one scan split merges and writes as one partition: one Spark
+  * job, no exchange.
   */
 object MergeInto {
 
@@ -60,10 +64,18 @@ object MergeInto {
   }
 
   /** Merge `source` into `target`. With `partitionBy = Some(col)`, only the
-    * target partitions whose value appears in the source are joined and
-    * rewritten (the touched-value set is a bounded collect — one value per
-    * touched partition, e.g. a handful of years); untouched partition data
-    * directories are not even opened.
+    * target partitions the source may touch are joined and rewritten;
+    * untouched partition data directories are not even opened. The touched
+    * set is read from metadata when `sourceStats` holds the zone maps of
+    * every part the source's rows come from, with `col` passed through
+    * unchanged ([[VersionedTable.partitionsMatching]]: the live partitions
+    * whose value those (min, max) may contain, and the NULL partition).
+    * Otherwise, or when a part lacks stats on `col`, it is a bounded
+    * collect of the source's distinct values — one per touched partition,
+    * e.g. a handful of years. With the metadata set, a touched slice and
+    * source whose estimated size (from their files' lengths) fits one scan
+    * split (`spark.sql.files.maxPartitionBytes`) merge in one partition: the
+    * dedupe, join and partitioned write then need no exchange.
     *
     * PARTITION CONTRACT: the partition column must be functionally
     * determined by the merge keys (e.g. partition year derived from a DATE
@@ -86,12 +98,45 @@ object MergeInto {
       dedupeSource: Boolean = false,
       partitionBy: Option[String] = None,
       validatePartitionKeys: Boolean = false,
-      maxTouchedPartitions: Int = 10000
+      maxTouchedPartitions: Int = 10000,
+      sourceStats: Option[Seq[ZoneMaps.Stats]] = None
   ): MergeResult = {
     require(keys.nonEmpty, "merge requires at least one key column")
 
+    val known = for {
+      p <- partitionBy if !validatePartitionKeys
+      stats <- sourceStats
+      s <- target.state
+      touched <- target.partitionsMatching(s, p, stats)
+    } yield (s, p, touched)
+    known match {
+      case Some((s, p, touched)) =>
+        val slice = target.readPartitions(s, p, touched)
+        val oneTask = Seq(slice, source)
+          .map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <=
+          spark.sessionState.conf.filesMaxPartitionBytes
+        def one(df: DataFrame) = if (oneTask) df.coalesce(1) else df
+        mergeSlice(target, one(slice), checkedSource(one(source), keys, dedupeSource),
+          keys, consumeOffsets, partitionBy, onePartition = oneTask)
+      case None =>
+        // the source feeds several jobs inside this (eager) merge — touched-
+        // partition collect, counters, write; a merge source is the
+        // incremental batch, small by definition, so cache it for the call
+        val src0 = checkedSource(source, keys, dedupeSource)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try mergeImpl(spark, target, src0, keys, consumeOffsets, partitionBy,
+          validatePartitionKeys, maxTouchedPartitions)
+        finally src0.unpersist()
+    }
+  }
+
+  /** `source` with one row per key: deduplicated deterministically, or
+    * checked to be so (a job of its own).
+    */
+  private def checkedSource(source: DataFrame, keys: Seq[String],
+                            dedupeSource: Boolean): DataFrame = {
     val srcCols = source.columns.toSeq
-    val src1 = if (dedupeSource) {
+    if (dedupeSource) {
       // deterministic survivor per key: max over all non-key columns' struct
       val nonKey = srcCols.filterNot(keys.contains)
       source.groupBy(keys.map(col): _*)
@@ -106,13 +151,6 @@ object MergeInto {
             "(Snowflake raises on nondeterministic MERGE); pass dedupeSource=true")
       source
     }
-    // the source feeds several jobs inside this (eager) merge — touched-
-    // partition collect, counters, write; a merge source is the incremental
-    // batch, small by definition, so cache it for the call's duration
-    val src0 = src1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeImpl(spark, target, src0, keys, consumeOffsets, partitionBy,
-      validatePartitionKeys, maxTouchedPartitions)
-    finally src0.unpersist()
   }
 
   private def mergeImpl(
@@ -133,9 +171,9 @@ object MergeInto {
       return MergeResult(0L, src0.count(), v)
     }
 
-    // Partition-scoped merge: join ONLY the touched slice of the target.
-    // The touched-value collect is bounded by the number of partitions the
-    // source spans (the reference's daily load touches one year).
+    // Partition-scoped merge without source stats: join ONLY the touched
+    // slice of the target. The touched-value collect is bounded by the
+    // number of partitions the source spans.
     val tgt = partitionBy match {
       case Some(p) =>
         // the LIMIT bounds the driver transfer even when the cap is blown:
@@ -170,12 +208,28 @@ object MergeInto {
                 "the partition column is not functionally determined by the " +
                 "merge keys; merging would duplicate these keys")
         }
-        if (validatePartitionKeys || touched.exists(_ == null))
-          target.read.filter(touchedFilter)
+        if (validatePartitionKeys) target.read.filter(touchedFilter)
         else // only the touched partitions' files are opened
           target.readPartitions(p, touchedRows.map(_.getString(1)).toSeq)
       case None => target.read
     }
+    mergeSlice(target, tgt, src0, keys, consumeOffsets, partitionBy)
+  }
+
+  /** Join the target slice `tgt` with `src0` and commit the result. With
+    * `onePartition`, both inputs are single partitions, and the merged
+    * rows are committed as one, which the partitioned write clusters
+    * without an exchange.
+    */
+  private def mergeSlice(
+      target: VersionedTable,
+      tgt: DataFrame,
+      src0: DataFrame,
+      keys: Seq[String],
+      consumeOffsets: Map[String, Long],
+      partitionBy: Option[String],
+      onePartition: Boolean = false
+  ): MergeResult = {
     require(tgt.columns.sorted.sameElements(src0.columns.sorted),
       s"merge schema mismatch: target ${tgt.columns.mkString(",")} vs source ${src0.columns.mkString(",")}")
 
@@ -192,9 +246,10 @@ object MergeInto {
         when(sOn && tOn, 1L).otherwise(0L).as("_merge_upd"),
         when(sOn && !tOn, 1L).otherwise(0L).as("_merge_ins")): _*)
     val obs = new org.apache.spark.sql.Observation()
-    val observed = flagged
+    val merged = flagged
       .observe(obs, sum(col("_merge_upd")).as("upd"), sum(col("_merge_ins")).as("ins"))
       .drop("_merge_upd", "_merge_ins")
+    val observed = if (onePartition) merged.coalesce(1) else merged
 
     val v = partitionBy match {
       case Some(p) => target.overwritePartitions(observed, p, consumeOffsets)

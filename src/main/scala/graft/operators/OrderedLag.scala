@@ -58,6 +58,16 @@ object OrderedLag {
       .drop(B, "_is_first", "_prev_last")
   }
 
+  /** [[withLag]] over rows already in ONE partition (a `coalesce(1)`
+    * input): a single window, with no exchange and no stitch. The window
+    * is keyed on a constant derived from `orderCol`, as in [[withLag]]'s
+    * bucket chain, so Spark keeps it and does not warn.
+    */
+  def inPartition(df: DataFrame, orderCol: String, valueCol: String,
+                  outputCol: String): DataFrame =
+    df.withColumn(outputCol, lag(col(valueCol), 1).over(
+      Window.partitionBy(pmod(xxhash64(col(orderCol)), lit(1L))).orderBy(col(orderCol))))
+
   /** Date-ordered convenience: bucket by year(date). */
   def byDate(df: DataFrame, dateCol: String, valueCol: String,
              outputCol: String): DataFrame =

@@ -47,6 +47,15 @@ case class GraftMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
         if u.resolved && graftTable(target).isDefined =>
       val (vt, name) = graftTable(target).get
       sqlTable(target).foreach(_.requirePriv("UPDATE"))
+      // the command re-resolves by name against a fresh read, which a
+      // correlated subquery's outer references cannot follow; an
+      // uncorrelated one re-resolves whole
+      if ((condition.toSeq ++ assignments.map(_.value))
+          .exists(SubqueryExpression.hasCorrelatedSubquery))
+        throw new AnalysisException(
+          errorClass = "UNSUPPORTED_FEATURE.TABLE_OPERATION",
+          messageParameters = Map("tableName" -> name,
+            "operation" -> "UPDATE with a correlated subquery"))
       val sets = assignments.map {
         case Assignment(k: AttributeReference, v) => k.name -> ExprBox(unresolve(v))
         case a => unsupported(name, s"unsupported UPDATE assignment '${a.sql}' " +

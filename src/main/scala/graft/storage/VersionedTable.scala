@@ -319,17 +319,22 @@ final class VersionedTable(spark: SparkSession, val root: String,
   /** A freshly written part with its bloom sidecars and zone maps, both
     * built from `files`, the part's one listing: driver-side parquet footer
     * reads only (the write already produced the stats); failures degrade
-    * to "no stats", never block the commit.
+    * to "no stats", never block the commit. A part of several files also
+    * records each file's zone maps ([[Part.fileStats]]).
     */
   private def writtenPart(dirName: String, vals: Seq[String],
                           files: Seq[VersionedTable.DataFile]): Part = {
     val dataDir = s"$root/$dirName"
     val paths = files.map(f => new Path(dataDir, f.path))
     writeBlooms(dataDir, paths)
-    val stats =
-      if (!collectStats) Map.empty[String, (String, String)]
-      else ZoneMaps.collect(spark.sparkContext.hadoopConfiguration, paths)
-    Part(dirName, vals, stats, files)
+    if (!collectStats) Part(dirName, vals, Map.empty, files)
+    else {
+      val (stats, perFile) =
+        ZoneMaps.collect(spark.sparkContext.hadoopConfiguration, paths)
+      Part(dirName, vals, stats,
+        if (files.size < 2) files
+        else files.zip(perFile).map { case (f, st) => f.copy(stats = st) })
+    }
   }
 
   // -------------------------------------------------------- bloom sidecars
@@ -480,7 +485,7 @@ final class VersionedTable(spark: SparkSession, val root: String,
 
   /** Zero-row relation carrying the table schema (no parts, or all shadowed). */
   private def emptyRelation(s: State): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s.schema)
 
   /** `read.filter(cond)`. Like every filtered read of the table, it skips
     * parts ([[VersionedTable.SkipParts]]): part directories whose
@@ -496,18 +501,69 @@ final class VersionedTable(spark: SparkSession, val root: String,
   def readWhere(cond: Column): DataFrame = read.filter(cond)
 
   /** Live rows of the partitions whose `partitionCol` value, cast to
-    * string, is in `values` (non-NULL). When every part is committed
-    * partition-scoped on that column, only those partitions' files are
-    * read; otherwise this is a filtered full read.
+    * string, is in `values` (a null element: the NULL partition). When
+    * every part is committed partition-scoped on that column, only those
+    * partitions' files are read; otherwise this is a filtered full read.
     */
-  def readPartitions(partitionCol: String, values: Seq[String]): DataFrame = {
-    val s = state.getOrElse(
-      throw new IllegalStateException(s"table at $root has no committed data"))
+  def readPartitions(partitionCol: String, values: Seq[String]): DataFrame =
+    readPartitions(state.getOrElse(
+      throw new IllegalStateException(s"table at $root has no committed data")),
+      partitionCol, values)
+
+  /** [[readPartitions]] of the state `s`. */
+  def readPartitions(s: State, partitionCol: String, values: Seq[String]): DataFrame = {
+    val keys = values.map(v => if (v == null) NULL_PT else v)
     if (s.partitionCol.contains(partitionCol) && s.parts.forall(_.vals.nonEmpty)) {
       // the dir name Spark's partitioned write gives each value
-      val dirs = values.map(ExternalCatalogUtils.getPartitionValueString).toSet
+      val dirs = keys.map(ExternalCatalogUtils.getPartitionValueString).toSet
       readLive(s, dirs)
-    } else readState(s).filter(ptKey(col(partitionCol)).isin(values: _*))
+    } else readState(s).filter(ptKey(col(partitionCol)).isin(keys: _*))
+  }
+
+  /** Each live data file of `s` with its `_pt` value (unescaped; null for
+    * the NULL partition and for an unpartitioned part) and its zone maps,
+    * from the commit alone. None when some part's live rows are not whole
+    * files: an unpartitioned part that a later partition-scoped part
+    * shadows rows of.
+    */
+  def liveFiles(s: State): Option[Seq[VersionedTable.LiveFile]] = {
+    val out = Seq.newBuilder[VersionedTable.LiveFile]
+    s.parts.zipWithIndex.foreach { case (p, i) =>
+      val shadowed = s.parts.drop(i + 1).flatMap(_.vals).toSet
+      if (p.vals.isEmpty && shadowed.nonEmpty) return None
+      p.fileStats.foreach { case (f, st) =>
+        val dir = f.path.takeWhile(_ != '/')
+        val value = Option.when(p.vals.nonEmpty && dir.startsWith(s"$PT="))(dir.stripPrefix(s"$PT="))
+        if (value.forall(v => !shadowed(v)))
+          out += VersionedTable.LiveFile(new Path(partPath(p.dir), f.path),
+            value.filter(_ != NULL_PT).map(ExternalCatalogUtils.unescapePathName).orNull, st)
+      }
+    }
+    Some(out.result())
+  }
+
+  /** The live `partitionCol` values of `s` (as [[readPartitions]] takes
+    * them) that may hold a row of a source read from parts with zone maps
+    * `sourceStats`, from metadata alone: each value their (min, max) on the
+    * column may contain, and the NULL partition, which min/max cannot rule
+    * out. None when a source part has no stats on the column or some part
+    * of `s` is not partition-scoped on it.
+    */
+  def partitionsMatching(s: State, partitionCol: String,
+                         sourceStats: Seq[ZoneMaps.Stats]): Option[Seq[String]] = {
+    val resolver = spark.sessionState.analyzer.resolver
+    if (!s.partitionCol.contains(partitionCol) || s.parts.exists(_.vals.isEmpty) ||
+        sourceStats.exists(!_.keys.exists(resolver(_, partitionCol)))) return None
+    val dt = s.schema.find(f => resolver(f.name, partitionCol)).map(_.dataType)
+      .getOrElse(return None)
+    Some(s.parts.flatMap(_.vals).distinct.flatMap { v =>
+      if (v == NULL_PT) Some(null)
+      else {
+        val value = ExternalCatalogUtils.unescapePathName(v)
+        Option.when(sourceStats.exists(
+          ZoneMaps.mayContain(_, partitionCol, dt, value, resolver)))(value)
+      }
+    })
   }
 
   /** Diagnostic: how many parts a predicate's zone maps and blooms would
@@ -515,9 +571,16 @@ final class VersionedTable(spark: SparkSession, val root: String,
     */
   def pruneStats(cond: Column): (Int, Int) = {
     val s = state.getOrElse(return (0, 0))
+    (partsWhere(s, cond).size, s.parts.size)
+  }
+
+  /** The parts of `s` whose zone maps and blooms may hold a row matching
+    * `cond`: the parts a `read.filter(cond)` of `s` opens. Metadata-only.
+    */
+  def partsWhere(s: State, cond: Column): Seq[Part] = {
     val schema = s.schema
     val preds = ZoneMaps.predsOf(spark, schema, cond)
-    (s.parts.count(mayHold(schema, _, preds)), s.parts.size)
+    s.parts.filter(mayHold(schema, _, preds))
   }
 
   def readOr(schema: StructType): DataFrame = state match {
@@ -1091,9 +1154,15 @@ final class VersionedTable(spark: SparkSession, val root: String,
       require(df.columns.contains(pcol), s"missing partition column $pcol")
       // cluster rows by partition value before the dynamic-partition
       // write: each value lands in one task → one file per partition
-      // instead of (tasks × values) small files
-      df.withColumn(PT, ptKey(col(pcol)))
-        .repartition(col(PT))
+      // instead of (tasks × values) small files. Input already brought to
+      // one partition (`coalesce(1)`/`repartition(1)`) is clustered as it
+      // is, and writes with no exchange.
+      val onePartition = df.queryExecution.logical match {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions == 1
+        case _ => false
+      }
+      val tagged = df.withColumn(PT, ptKey(col(pcol)))
+      (if (onePartition) tagged else tagged.repartition(col(PT)))
         .write.partitionBy(PT).mode("overwrite").parquet(dataDir)
       // the values this part contains = the hive dirs it produced (an FS
       // listing, no extra Spark job). Stored RAW (hive-escaped) so read
@@ -1250,9 +1319,16 @@ final class VersionedTable(spark: SparkSession, val root: String,
   }
 
   // The commit record is JSON through Jackson's tree model (jackson-databind
-  // ships with Spark). Every field but `partcol` and a part's `stats` is
-  // required: a record missing one fails [[readCommitFile]] as malformed.
+  // ships with Spark). Every field but `partcol` and a part's or file's
+  // `stats` is required: a record missing one fails [[readCommitFile]] as
+  // malformed. A file's stats are the optional fourth element of its array.
   private def renderState(s: State): String = {
+    type ObjectNode = com.fasterxml.jackson.databind.node.ObjectNode
+    def putStats(st: ZoneMaps.Stats, node: => ObjectNode): Unit =
+      if (st.nonEmpty) {
+        val o = node
+        st.toSeq.sortBy(_._1).foreach { case (n, (mn, mx)) => o.putArray(n).add(mn).add(mx) }
+      }
     val o = VersionedTable.json.createObjectNode().put("version", s.version)
     s.partitionCol.foreach(c => o.put("partcol", c))
     val parts = o.putArray("parts")
@@ -1260,14 +1336,12 @@ final class VersionedTable(spark: SparkSession, val root: String,
       val po = parts.addObject().put("dir", p.dir)
       val vals = po.putArray("vals")
       p.vals.foreach(v => vals.add(v))
-      if (p.stats.nonEmpty) {
-        val st = po.putObject("stats")
-        p.stats.toSeq.sortBy(_._1).foreach { case (n, (mn, mx)) =>
-          st.putArray(n).add(mn).add(mx)
-        }
-      }
+      putStats(p.stats, po.putObject("stats"))
       val fa = po.putArray("files")
-      p.files.foreach(f => fa.addArray().add(f.path).add(f.length).add(f.mtime))
+      p.files.foreach { f =>
+        val fo = fa.addArray().add(f.path).add(f.length).add(f.mtime)
+        putStats(f.stats, fo.addObject())
+      }
     }
     val offs = o.putObject("offsets")
     s.offsets.toSeq.sortBy(_._1).foreach { case (k, v) => offs.put(k, v) }
@@ -1283,12 +1357,13 @@ final class VersionedTable(spark: SparkSession, val root: String,
     def elems(n: Node) = n.elements.asScala.toSeq
     val o = VersionedTable.json.readTree(json)
     val parts = elems(field(o, "parts")).map { p =>
+      def stats(n: Node): ZoneMaps.Stats = Option(n).map(_.properties.asScala.map { e =>
+        e.getKey -> (e.getValue.get(0).asText, e.getValue.get(1).asText)
+      }.toMap).getOrElse(Map.empty)
       Part(field(p, "dir").asText, elems(field(p, "vals")).map(_.asText),
-        Option(p.get("stats")).map(_.properties.asScala.map { e =>
-          e.getKey -> (e.getValue.get(0).asText, e.getValue.get(1).asText)
-        }.toMap).getOrElse(Map.empty),
-        elems(field(p, "files")).map(f =>
-          VersionedTable.DataFile(f.get(0).asText, f.get(1).asLong, f.get(2).asLong)))
+        stats(p.get("stats")),
+        elems(field(p, "files")).map(f => VersionedTable.DataFile(
+          f.get(0).asText, f.get(1).asLong, f.get(2).asLong, stats(f.get(3)))))
     }
     val offsets = field(o, "offsets").properties.asScala
       .map(e => e.getKey -> e.getValue.asLong).toMap
@@ -1298,8 +1373,14 @@ final class VersionedTable(spark: SparkSession, val root: String,
 }
 
 object VersionedTable {
-  /** One data file of a part: `path` relative to the part dir. */
-  case class DataFile(path: String, length: Long, mtime: Long)
+  /** One data file of a part: `path` relative to the part dir; `stats`
+    * its own zone maps, recorded when its part has several files.
+    */
+  case class DataFile(path: String, length: Long, mtime: Long,
+                      stats: ZoneMaps.Stats = Map.empty)
+
+  /** One live data file of a state ([[VersionedTable.liveFiles]]). */
+  case class LiveFile(path: Path, value: String, stats: ZoneMaps.Stats)
 
   /** One committed data directory. `vals` = the partition values this part
     * contains, as raw hive-escaped `_pt=` directory names (empty for
@@ -1312,7 +1393,11 @@ object VersionedTable {
     */
   case class Part(dir: String, vals: Seq[String],
                   stats: Map[String, (String, String)],
-                  files: Seq[DataFile])
+                  files: Seq[DataFile]) {
+    /** Each file's zone maps: a one-file part's are the part's own. */
+    def fileStats: Seq[(DataFile, ZoneMaps.Stats)] =
+      if (files.size == 1) Seq(files.head -> stats) else files.map(f => f -> f.stats)
+  }
 
   /** One committed version: a snapshot a read can be pinned to. */
   case class State(version: Long, partitionCol: Option[String],

@@ -47,16 +47,18 @@ object ZoneMaps {
 
   /** Harvest per-column (min, max) over the parquet files among `paths`
     * (a freshly written part's data files, as its commit lists them: no
-    * second listing). A column survives only if EVERY chunk holding
-    * non-null values reports usable stats; all-null chunks are fine (they
-    * contribute no values). Returns empty on any
-    * footer failure — stats are an optimization, never a commit blocker.
+    * second listing), and each file's own, aligned with `paths` (empty for
+    * a path that is not a parquet file). A column survives only if EVERY
+    * chunk holding non-null values reports usable stats; all-null chunks
+    * are fine (they contribute no values). Returns empty on any footer
+    * failure — stats are an optimization, never a commit blocker.
     */
   def collect(conf: Configuration, paths: Seq[Path],
-              maxCols: Int = 32): Stats = {
+              maxCols: Int = 32): (Stats, Seq[Stats]) = {
+    val none = (Map.empty: Stats, paths.map(_ => Map.empty: Stats))
     try {
       val files = paths.filter(_.getName.endsWith(".parquet"))
-      if (files.isEmpty) return Map.empty
+      if (files.isEmpty) return none
       // footers are independent: read them on a small driver pool (the
       // per-commit harvest is pure metadata I/O, latency-bound)
       val perFile: Seq[(Seq[(String, (Char, Any, Any))], Set[String])] =
@@ -92,20 +94,25 @@ object ZoneMaps {
         }
       }
       dead.foreach(acc.remove)
-      // stat VALUES are percent-encoded and column NAMES are kept plain:
-      // names carrying JSON-structural or control bytes (which once broke
-      // the regex-parsed commit log) get no stats. Same policy as
-      // requireValidOffsetKey; stats are an optimization, so skipping is
-      // always safe.
-      acc.filterInPlace((n, _) =>
-        n.nonEmpty && !n.exists(c =>
-          c == '"' || c == '\\' || c == '{' || c == '}' ||
-            c == ':' || c == ',' || c.isControl))
-      acc.take(maxCols).map { case (n, (d, mn, mx)) =>
-        n -> (encode(d, mn), encode(d, mx))
-      }.toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val byFile = files.zip(perFile.map { case (cols, _) => encoded(cols, maxCols) }).toMap
+      (encoded(acc.toSeq, maxCols), paths.map(byFile.getOrElse(_, Map.empty)))
+    } catch { case scala.util.control.NonFatal(_) => none }
   }
+
+  /** Live columns' (min, max) in the commit encoding. Stat VALUES are
+    * percent-encoded and column NAMES are kept plain: names carrying
+    * JSON-structural or control bytes (which once broke the regex-parsed
+    * commit log) get no stats. Same policy as requireValidOffsetKey; stats
+    * are an optimization, so skipping is always safe.
+    */
+  private def encoded(cols: Seq[(String, (Char, Any, Any))], maxCols: Int): Stats =
+    cols.filter { case (n, _) =>
+      n.nonEmpty && !n.exists(c =>
+        c == '"' || c == '\\' || c == '{' || c == '}' ||
+          c == ':' || c == ',' || c.isControl)
+    }.take(maxCols).map { case (n, (d, mn, mx)) =>
+      n -> (encode(d, mn), encode(d, mx))
+    }.toMap
 
   /** Total row count of the parquet files among `paths` from their
     * footers alone (driver-side metadata reads; -1 if any footer fails —
@@ -122,6 +129,27 @@ object ZoneMaps {
       total
     } catch { case scala.util.control.NonFatal(_) => -1L }
   }
+
+  /** Null count of top-level column `colName` over the parquet files
+    * among `paths`, from their footers alone; None if a footer fails, a
+    * file lacks the column or a chunk does not record its nulls.
+    */
+  def nullCount(conf: Configuration, paths: Seq[Path], colName: String,
+                resolve: (String, String) => Boolean): Option[Long] =
+    try {
+      import scala.jdk.CollectionConverters._
+      val perChunk = paths.filter(_.getName.endsWith(".parquet")).flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+          b.getColumns.asScala.find { cc =>
+            val pp = cc.getPath.toArray
+            pp.length == 1 && resolve(pp(0), colName)
+          }.map(_.getStatistics).filter(st => st != null && st.isNumNullsSet)
+            .map(_.getNumNulls)
+        } finally reader.close()
+      }
+      if (perChunk.forall(_.isDefined)) Some(perChunk.flatten.sum) else None
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** One file's footer → per-column (domain, min, max) + dead columns. */
   private def harvestFile(conf: Configuration, f: Path)
@@ -224,6 +252,21 @@ object ZoneMaps {
       i += 1
     }
     a.length - b.length
+  }
+
+  /** (min, max) of `colName` over every stats map in `all`, decoded: a
+    * Long, Double or UTF-8 byte array. None when `all` is empty, one map
+    * lacks the column (no stats, or no non-null value) or domains differ.
+    */
+  def range(all: Seq[Stats], colName: String,
+            resolve: (String, String) => Boolean): Option[(Any, Any)] = {
+    val each = all.map(_.collectFirst { case (n, mm) if resolve(n, colName) => mm })
+    if (each.isEmpty || each.exists(_.isEmpty)) return None
+    val decoded = each.flatten.map { case (mn, mx) => (decode(mn), decode(mx)) }
+    val dom = decoded.head._1._1
+    if (decoded.exists { case ((d1, _), (d2, _)) => d1 != dom || d2 != dom }) None
+    else Some(decoded.map(_._1._2).reduce((a, b) => if (cmp(dom, a, b) <= 0) a else b) ->
+      decoded.map(_._2._2).reduce((a, b) => if (cmp(dom, a, b) >= 0) a else b))
   }
 
   // ---------------------------------------------------------------------
@@ -394,6 +437,20 @@ object ZoneMaps {
       case Cmp(c, op, v) => cmpMayMatch(stats, c, op, v, resolve)
       case InSet(c, vs) => vs.exists(v => cmpMayMatch(stats, c, "=", v, resolve))
     }
+
+  /** Can a part with `stats` hold the value whose string form (a
+    * partition directory's value) is `value`, in column `colName` of type
+    * `dt`? The string is cast back to `dt` as Spark casts it; anything
+    * that does not cast keeps the part.
+    */
+  def mayContain(stats: Stats, colName: String, dt: DataType, value: String,
+                 resolve: (String, String) => Boolean): Boolean =
+    try {
+      import org.apache.spark.sql.catalyst.expressions.Cast
+      val v = Cast(Literal(value), dt,
+        Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)).eval()
+      litVal(Literal(v, dt)).forall(cmpMayMatch(stats, colName, "=", _, resolve))
+    } catch { case scala.util.control.NonFatal(_) => true }
 
   private def cmpMayMatch(stats: Stats, colName: String, op: String, v: Any,
                           resolve: (String, String) => Boolean): Boolean = {

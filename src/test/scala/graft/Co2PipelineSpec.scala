@@ -474,4 +474,129 @@ class Co2PipelineSpec extends AnyFunSuite {
     assert(loadJobs <= 5 && analyticsJobs <= 8,
       s"load $loadJobs jobs, analytics $analyticsJobs jobs")
   }
+
+  /** Distinct META_UPDATED_AT stamps in DAILY: one after a full recompute,
+    * more when earlier rows were kept.
+    */
+  private def dailyStamps(p: Co2Pipeline): Long =
+    p.dailyStats.read.select("META_UPDATED_AT").distinct().count()
+
+  /** _CO2_MINMAX holds harmonized's CO2_PPM (min, max), as one row. */
+  private def assertMinMaxCurrent(p: Co2Pipeline): Unit = {
+    val want = p.harmonized.read.agg(min("CO2_PPM"), max("CO2_PPM")).head()
+    val got = p.minMax.read.collect()
+    assert(got.length == 1 && got.head.toSeq == want.toSeq, s"${got.toSeq} vs $want")
+  }
+
+  test("a one-row day: harmonize takes at most 3 Spark jobs, analytics at most 2") {
+    val dir = Files.createTempDirectory("co2_day_budget_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val start = LocalDate.of(2019, 1, 1)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    writeFeed(feed, start, LocalDate.of(2021, 1, 2))
+    p.runPipeline(feed.toString) // warm-up day
+    writeFeed(feed, start, LocalDate.of(2021, 1, 3))
+    assert(p.load(feed.toString) == 1)
+    val harmonizeJobs = TestSpark.jobsStartedBy(p.harmonize())
+    val analyticsJobs = TestSpark.jobsStartedBy(p.analytics())
+    assert(harmonizeJobs <= 3 && analyticsJobs <= 2,
+      s"harmonize $harmonizeJobs jobs, analytics $analyticsJobs jobs")
+    // only 2021 was recomputed: the earlier rows kept their stamp
+    assert(dailyStamps(p) > 1)
+    assertMinMaxCurrent(p)
+    assertEqualsRecompute(p, dir.resolve("scratch1").toString)
+
+    // a day that moves MAX recomputes every row, and still matches
+    appendFeed(feed, "2021 1 3 2021.007 999.0")
+    p.runPipeline(feed.toString)
+    assert(dailyStamps(p) == 1)
+    assertMinMaxCurrent(p)
+    assertEqualsRecompute(p, dir.resolve("scratch2").toString)
+  }
+
+  test("slice or full, analytics equals a recompute after every kind of day, with the MERGE's counts") {
+    val dir = Files.createTempDirectory("co2_slice_days_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    writeFeed(feed, LocalDate.of(2018, 1, 1), LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    p.registerCatalog("co2slice")
+    def redeliver(y: Int, m: Int, d: Int, co2: Double): Unit =
+      p.feed.publish(Seq((y, m, d, y + 0.5, co2))
+        .toDF("YEAR", "MONTH", "DAY", "DECIMAL_DATE", "CO2_PPM"))
+    // (what the day does, whether analytics may keep earlier rows, the day)
+    val days: Seq[(String, Boolean, () => Unit)] = Seq(
+      ("a new day", true, () => appendFeed(feed, "2021 1 1 2021.001 375.25")),
+      ("a new day", true, () => appendFeed(feed, "2021 1 2 2021.004 375.5")),
+      ("a re-delivered old day", true, () => redeliver(2019, 6, 15, 377.5)),
+      ("a day that moves MAX", false, () => appendFeed(feed, "2021 1 3 2021.007 999.0")),
+      ("a new day", true, () => appendFeed(feed, "2021 1 4 2021.010 376.0")),
+      ("a day that moves MIN", false, () => {
+        appendFeed(feed, "2021 1 5 2021.012 376.5"); redeliver(2018, 3, 4, 100.0) }),
+      ("a SQL DELETE on harmonized", false, () => {
+        spark.sql("DELETE FROM co2slice.HARMONIZED_CO2.HARMONIZED_CO2 WHERE DATE = DATE'2020-03-04'")
+        appendFeed(feed, "2021 1 6 2021.015 377.0") }),
+      ("a new day", true, () => appendFeed(feed, "2021 1 7 2021.018 377.25")),
+      ("a foreign INSERT into DAILY", false, () => {
+        spark.sql("INSERT INTO co2slice.ANALYTICS_CO2.DAILY_CO2_STATS VALUES " +
+          "(DATE'1999-01-01', 1.0, 1.0, 0.0, 0.0, 0.0, TIMESTAMP'1999-01-01 00:00:00')")
+        appendFeed(feed, "2021 1 8 2021.021 377.5") }),
+      ("two new days", true, () =>
+        appendFeed(feed, "2021 1 9 2021.023 377.75", "2021 1 10 2021.026 378.0")),
+      ("the first day of a year", true, () => appendFeed(feed, "2022 1 1 2022.001 378.25")),
+      ("a new day", true, () => appendFeed(feed, "2022 1 2 2022.004 378.5")))
+    days.zipWithIndex.foreach { case ((what, slice, day), i) =>
+      day()
+      val before = (p.dailyStats.read.select("DATE").as[java.sql.Date].collect().toSet,
+        p.weeklyStats.read.select("WEEK_START").as[java.sql.Date].collect().toSet)
+      val ret = p.runPipeline(feed.toString).toMap
+      val harm = p.harmonized.read
+      val dailyKeys = harm.select("DATE").as[java.sql.Date].collect().toSet
+      val weeklyKeys = harm.select(date_trunc("week", $"DATE").cast("date"))
+        .as[java.sql.Date].collect().toSet
+      val want = Seq(before._1 -> dailyKeys, before._2 -> weeklyKeys).map {
+        case (old, now) => ((old & now).size.toLong, (now -- old).size.toLong)
+      }
+      val at = s"day ${i + 1}, $what: $ret"
+      assert(analyticsCounts(ret("CO2_ANALYTICS_TASK")) == want, at)
+      assert((dailyStamps(p) > 1) == slice, at)
+      assertMinMaxCurrent(p)
+      assertEqualsRecompute(p, dir.resolve(s"scratch$i").toString)
+    }
+    assert(p.dailyStats.read.filter($"DATE" === java.sql.Date.valueOf("2020-03-04") ||
+      $"DATE" < java.sql.Date.valueOf("2000-01-01")).isEmpty)
+  }
+
+  test("a stale _CO2_MINMAX is ignored by analytics and rewritten by the next harmonize") {
+    val dir = Files.createTempDirectory("co2_stale_minmax_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    writeFeed(feed, LocalDate.of(2020, 1, 1), LocalDate.of(2021, 1, 1))
+    p.runPipeline(feed.toString)
+    // a crash after the harmonized commit: a day that moves MAX is merged,
+    // and _CO2_MINMAX still holds the previous run's value
+    val stale = p.minMax.read.collect().toList
+    appendFeed(feed, "2021 1 1 2021.001 999.0")
+    p.load(feed.toString)
+    p.harmonize()
+    p.minMax.overwrite(spark.createDataFrame(java.util.List.of(stale: _*), p.minMax.schema))
+    assert(p.minMax.read.head().getDouble(1) < 999.0)
+
+    p.analytics()
+    val (lo, hi) = {
+      val r = p.harmonized.read.agg(min("CO2_PPM"), max("CO2_PPM")).head()
+      (r.getDouble(0), r.getDouble(1))
+    }
+    assert(hi == 999.0)
+    val daily = p.dailyStats.read.select("CO2_PPM", "NORMALIZED_CO2").as[(Double, Double)].collect()
+    assert(daily.forall { case (c, n) =>
+      n == BigDecimal((c - lo) / (hi - lo)).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble })
+    assertEqualsRecompute(p, dir.resolve("scratch").toString)
+
+    appendFeed(feed, "2021 1 2 2021.004 380.0")
+    p.runPipeline(feed.toString)
+    assertMinMaxCurrent(p)
+  }
 }

@@ -182,6 +182,27 @@ class ReadPathSpec extends AnyFunSuite {
     assert(t.state.get.version == v)
   }
 
+  test("SQL UPDATE rejects a correlated subquery and runs an uncorrelated one") {
+    val wh = tmp()
+    val t = threeParts(s"$wh/NS/T")
+    VersionedTable(spark, s"$wh/NS/K").overwrite(Seq(1L, 299L).toDF("id"))
+    GraftCatalog.register(spark, "rp6", wh)
+    def tags = spark.sql("SELECT id, tag FROM rp6.NS.T").as[(Long, String)].collect().toMap
+    val before = tags
+    val v = t.state.get.version
+    val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      """UPDATE rp6.NS.T o SET tag = 'k'
+        |WHERE EXISTS (SELECT 1 FROM rp6.NS.K k WHERE k.id = o.id)""".stripMargin))
+    assert(e.getCondition == "UNSUPPORTED_FEATURE.TABLE_OPERATION" &&
+      e.getMessage.contains("correlated subquery"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+      """UPDATE rp6.NS.T o SET tag = (SELECT max(CAST(k.id AS STRING))
+        |  FROM rp6.NS.K k WHERE k.id = o.id)""".stripMargin))
+    assert(t.state.get.version == v && tags == before)
+    spark.sql("UPDATE rp6.NS.T SET tag = 'k' WHERE id IN (SELECT id FROM rp6.NS.K)")
+    assert(tags == before ++ Map(1L -> "k", 299L -> "k"))
+  }
+
   test("pending opens only the unconsumed parts of the stream log") {
     val feed = ChangeFeed(spark, "s", tmp() + "/log")
     (1 to 3).foreach(i => feed.publish(Seq((i, i * 1.0)).toDF("k", "v")))

@@ -484,6 +484,32 @@ class StorageSpec extends AnyFunSuite {
     assert(m == Map(1 -> (2022, 1.0), 2 -> (2022, 2.0), 3 -> (2023, 3.5), 4 -> (2023, 4.0)))
   }
 
+  test("MergeInto with source stats: touched partitions from metadata, merged in one job") {
+    val t = VersionedTable(spark, tmp() + "/pt7")
+    MergeInto(spark, t, Seq((Some(2021), 1, 1.0), (Some(2022), 2, 2.0), (None, 3, 3.0))
+      .toDF("year", "k", "v"), Seq("k"), partitionBy = Some("year"))
+    // a part of several files records each file's zone maps
+    val live = t.liveFiles(t.state.get).get
+    assert(live.map(_.value).toSet == Set("2021", "2022", null))
+    assert(live.find(_.value == "2022").get.stats("v") == ("D:2.0" -> "D:2.0"))
+
+    val feed = ChangeFeed(spark, "s", tmp() + "/pt7log")
+    feed.publish(Seq((2022, 2, 2.5), (2022, 4, 4.0)).toDF("year", "k", "v"))
+    val stats = feed.pendingParts(0).map(_.stats)
+    // the year the source's zone maps span, and the NULL partition
+    assert(t.partitionsMatching(t.state.get, "year", stats).get.toSet == Set("2022", null))
+    var r: MergeInto.MergeResult = null
+    val jobs = jobsStartedBy {
+      r = MergeInto(spark, t, feed.pending(0).drop(ChangeFeed.metaColumns: _*), Seq("k"),
+        dedupeSource = true, partitionBy = Some("year"), sourceStats = Some(stats))
+    }
+    assert(jobs == 1 && r.updated == 1 && r.inserted == 1, s"$jobs jobs, $r")
+    assert(t.read.as[(Option[Int], Int, Double)].collect().toSet == Set(
+      (Some(2021), 1, 1.0), (Some(2022), 2, 2.5), (None, 3, 3.0), (Some(2022), 4, 4.0)))
+    // a source part without stats on the column: the merge collects instead
+    assert(t.partitionsMatching(t.state.get, "year", Seq(Map.empty)).isEmpty)
+  }
+
   test("MergeInto maxTouchedPartitions: an over-wide source fails loudly, not slowly") {
     val root = tmp() + "/pt6"
     val t = VersionedTable(spark, root)
