@@ -57,13 +57,13 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     * (loading_co2_data_sp semantics: loading_data_sp/function.py:171-377.)
     */
   def load(feedPath: String): Long =
-    ingest(NoaaIngest.parseText(spark, feedPath))
+    ingest(NoaaIngest.parsePath(spark, feedPath, _))
 
   /** Ingest through a pluggable [[FeedSource]] (HTTP in production — the
     * reference's lambda fetch — a local file in tests/replays).
     */
   def load(source: FeedSource): Long =
-    ingest(NoaaIngest.parseFeed(spark, source))
+    ingest(NoaaIngest.parseSource(source, _))
 
   /** Warehouse-scaling parity hook (SURVEY §4): the reference brackets every
     * heavy statement with `ALTER WAREHOUSE … SET WAREHOUSE_SIZE = XLARGE …
@@ -98,27 +98,26 @@ final class Co2Pipeline(spark: SparkSession, warehouseRoot: String) {
     * version its append lands in. It is trusted only while that version is
     * still raw's latest; after any other commit to raw (a SQL INSERT, a
     * compaction) the next ingest scans raw once, as it always did.
+    * `parseAfter` parses the feed keeping the rows newer than the
+    * watermark; raw and the stream then write them from one local
+    * relation in one partition, so each write is one job and one file.
     */
-  private def ingest(parsed: DataFrame): Long = {
+  private def ingest(parseAfter: Option[LocalDate] => NoaaIngest.Parsed): Long = {
     val prev = raw.state
     val recorded = prev
       .filter(s => s.offsets.get(WatermarkVersion).contains(s.version))
       .flatMap(_.offsets.get(WatermarkDay))
-      .map(d => Date.valueOf(LocalDate.ofEpochDay(d)))
-    val wm = recorded.orElse(prev.flatMap(_ => NoaaIngest.watermark(raw.read)))
-    val fresh = NoaaIngest.newerThan(parsed, wm).cache()
-    val agg = fresh.agg(count(lit(1)), max(NoaaIngest.rowDate)).head()
-    val n = agg.getLong(0)
-    if (n > 0) {
-      val newWm = (wm.toSeq ++ Option(agg.getDate(1)))
-        .map(_.toLocalDate.toEpochDay).maxOption
-      raw.append(fresh, newWm.fold(Map.empty[String, Long])(d => Map(
-        WatermarkDay -> d,
-        WatermarkVersion -> (prev.fold(0L)(_.version) + 1))))
-      feed.publish(fresh) // stream records the INSERT delta
+      .map(LocalDate.ofEpochDay)
+    val wm = recorded.orElse(prev.flatMap(_ => NoaaIngest.watermark(raw.read)).map(_.toLocalDate))
+    val fresh = parseAfter(wm)
+    fresh.newest.foreach { newWm =>
+      val rows = NoaaIngest.frame(spark, fresh.rows)
+      raw.append(rows, Map(
+        WatermarkDay -> newWm.toEpochDay,
+        WatermarkVersion -> (prev.fold(0L)(_.version) + 1)))
+      feed.publish(rows) // stream records the INSERT delta
     }
-    fresh.unpersist()
-    n
+    fresh.rows.size
   }
 
   // ----------------------------------------------------------- harmonize --

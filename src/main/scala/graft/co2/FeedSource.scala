@@ -3,9 +3,10 @@ package graft.co2
 /** Pluggable feed fetcher — the reference's loader pulls the NOAA text feed
   * over HTTP (loading_data_sp/function.py:60-106, lambda_package/
   * lambda_function.py:8-15); tests and replays feed from local files. The
-  * feed is a small driver-side text document (the reference materializes it
-  * in one `requests.get().text` too); the parse itself is distributed —
-  * see [[NoaaIngest.parseFeed]].
+  * feed is one small text document (the reference materializes it in one
+  * `requests.get().text` too), parsed on the driver in the same pass that
+  * applies the watermark ([[NoaaIngest.parse]]). A malformed line's error
+  * names the source by its `toString`.
   */
 trait FeedSource extends Serializable {
   /** The raw feed text. */

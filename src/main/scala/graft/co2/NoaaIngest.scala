@@ -1,53 +1,120 @@
 package graft.co2
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import java.io.{BufferedReader, InputStreamReader, Reader, StringReader}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Date
+import java.time.{DateTimeException, LocalDate}
+import java.util.Locale
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
-/** NOAA Mauna Loa feed ingestion — distributed re-expression of the
-  * reference's loader (/root/reference/udfs_and_spoc/loading_co2_data_sp/
-  * loading_data_sp/function.py:109-193 and scripts/raw data loading and
-  * stream creation/raw_co2_data.py:77-95).
+/** NOAA Mauna Loa feed ingestion: the reference's loader
+  * (/root/reference/udfs_and_spoc/loading_co2_data_sp/loading_data_sp/
+  * function.py:109-193 and scripts/raw data loading and stream creation/
+  * raw_co2_data.py:77-95).
   *
-  * The parse runs on executors (spark.read.text + column expressions), not
-  * driver-side pandas — the 100 TB-safe shape of the same semantics.
+  * The feed is one small text document, which the reference parses in one
+  * pandas process. It is parsed here on the driver, in one pass that also
+  * applies the watermark, so a day's load hands Spark only its new rows as
+  * one local relation and no Spark job reads the whole feed.
   */
 object NoaaIngest {
 
-  /** Parse the raw whitespace-delimited text feed. Comment (`#`) and blank
-    * lines dropped; 5 leading columns Year Month Day Decimal_Date CO2_ppm;
-    * an optional 6th column is tolerated and ignored; malformed numerics
-    * coerce to null (pandas errors="coerce" parity).
-    */
-  def parseText(spark: SparkSession, path: String): DataFrame =
-    parseLines(spark.read.text(path))
+  /** The feed rows dated after a watermark, and the newest of their dates. */
+  final case class Parsed(rows: Seq[Row], newest: Option[LocalDate])
 
-  /** Parse a feed delivered by any [[FeedSource]] (HTTP in production,
-    * local file in tests). The text arrives driver-side — same as the
-    * reference's `requests.get().text` — and parsing/typing still runs as
-    * distributed column expressions.
+  /** Parse the whitespace-delimited feed text `in`, keeping the rows dated
+    * after `after` (every row when None). Comment (`#`) and blank lines,
+    * and lines of fewer than 5 fields, are dropped. The 5 leading fields
+    * are Year Month Day Decimal_Date CO2_ppm; a 6th or later field is
+    * ignored. The numbers read as Spark's string casts read them, and a
+    * textual NaN becomes null (pandas errors="coerce" parity). Any other
+    * field that is not a number, a date that does not exist and a YEAR
+    * outside 1..9999 fail, naming `feed` and the 1-based line number.
     */
-  def parseFeed(spark: SparkSession, source: FeedSource): DataFrame = {
-    import spark.implicits._
-    parseLines(source.fetchText().split("\n", -1).toSeq.toDF("value"))
+  def parse(in: Reader, feed: String, after: Option[LocalDate] = None): Parsed = {
+    val lines = new BufferedReader(in)
+    val rows = Seq.newBuilder[Row]
+    var newest = Option.empty[LocalDate]
+    var n = 0
+    var line = lines.readLine()
+    while (line != null) {
+      n += 1
+      val f = line.trim.split("\\s+")
+      if (f.length >= 5 && !f(0).startsWith("#")) {
+        val (date, row) = try fields(f) catch {
+          case e @ (_: IllegalArgumentException | _: DateTimeException) =>
+            throw new IllegalArgumentException(
+              s"malformed line $n of feed $feed: ${e.getMessage}: '$line'", e)
+        }
+        if (after.forall(date.isAfter)) {
+          rows += row
+          if (newest.forall(date.isAfter)) newest = Some(date)
+        }
+      }
+      line = lines.readLine()
+    }
+    Parsed(rows.result(), newest)
   }
 
-  private def parseLines(lines: DataFrame): DataFrame = {
-    val t = trim(col("value"))
-    val parts = split(t, "\\s+")
-    // cast failures and textual NaN coerce to null (pandas errors="coerce")
-    def num(c: org.apache.spark.sql.Column) =
-      when(isnan(c.cast("double")), lit(null)).otherwise(c.cast("double"))
-    lines
-      .filter(t =!= "" && !t.startsWith("#"))
-      .filter(size(parts) >= 5)
-      .select(
-        parts.getItem(0).cast("int").as("YEAR"),
-        parts.getItem(1).cast("int").as("MONTH"),
-        parts.getItem(2).cast("int").as("DAY"),
-        num(parts.getItem(3)).as("DECIMAL_DATE"),
-        num(parts.getItem(4)).as("CO2_PPM")
-      )
+  /** [[parse]] of the feed at `path`, any Hadoop path, read as UTF-8. */
+  def parsePath(spark: SparkSession, path: String, after: Option[LocalDate]): Parsed = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Using.resource(new InputStreamReader(fs.open(p), UTF_8))(parse(_, path, after))
+  }
+
+  /** [[parse]] of the text a [[FeedSource]] fetches. */
+  def parseSource(source: FeedSource, after: Option[LocalDate]): Parsed =
+    parse(new StringReader(source.fetchText()), source.toString, after)
+
+  /** `rows` as one local relation of [[Co2Schemas.raw]] in one partition,
+    * so that each write of it makes one data file.
+    */
+  def frame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, Co2Schemas.raw).coalesce(1)
+
+  /** Every row of the feed file at `path`, as a DataFrame ([[parse]]). */
+  def parseText(spark: SparkSession, path: String): DataFrame =
+    frame(spark, parsePath(spark, path, None).rows)
+
+  /** Every row of a feed delivered by any [[FeedSource]] (HTTP in
+    * production, a local file in tests), as a DataFrame ([[parse]]).
+    */
+  def parseFeed(spark: SparkSession, source: FeedSource): DataFrame =
+    frame(spark, parseSource(source, None).rows)
+
+  private val IntField = "[+-]?[0-9]+".r
+
+  /** One line's date and raw row from its first 5 fields. */
+  private def fields(f: Array[String]): (LocalDate, Row) = {
+    def int(i: Int, name: String): Int =
+      Some(f(i)).filter(IntField.matches).flatMap(_.toIntOption).getOrElse(
+        throw new IllegalArgumentException(s"$name '${f(i)}' is not an integer"))
+    val year = int(0, "YEAR")
+    if (year < 1 || year > 9999)
+      throw new IllegalArgumentException(s"YEAR $year is outside 1..9999")
+    val date = LocalDate.of(year, int(1, "MONTH"), int(2, "DAY"))
+    (date, Row(year, date.getMonthValue, date.getDayOfMonth,
+      num(f(3), "DECIMAL_DATE"), num(f(4), "CO2_PPM")))
+  }
+
+  /** Spark's string-to-double cast: Java's syntax, else its special
+    * literals; NaN becomes null.
+    */
+  private def num(s: String, name: String): java.lang.Double = {
+    val d = try java.lang.Double.parseDouble(s) catch {
+      case _: NumberFormatException => s.toLowerCase(Locale.ROOT) match {
+        case "inf" | "+inf" | "infinity" | "+infinity" => Double.PositiveInfinity
+        case "-inf" | "-infinity" => Double.NegativeInfinity
+        case "nan" | "+nan" | "-nan" => Double.NaN
+        case _ => throw new IllegalArgumentException(s"$name '$s' is not a number")
+      }
+    }
+    if (d.isNaN) null else d
   }
 
   /** Regex-extraction fallback mirroring the reference's
@@ -128,14 +195,5 @@ object NoaaIngest {
   def watermark(raw: DataFrame): Option[Date] = {
     val d = raw.agg(max(rowDate).as("wm")).collect().head
     if (d.isNullAt(0)) None else Some(d.getDate(0))
-  }
-
-  /** Keep only rows strictly newer than the watermark (reference filters in
-    * pandas at loading_data_sp/function.py:187-193; here it's a pushed-down
-    * predicate).
-    */
-  def newerThan(df: DataFrame, wm: Option[Date]): DataFrame = wm match {
-    case None => df
-    case Some(d) => df.filter(rowDate > lit(d))
   }
 }

@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
@@ -114,6 +115,13 @@ object ZoneMaps {
       n -> (encode(d, mn), encode(d, mx))
     }.toMap
 
+  /** A reader of parquet file `f`'s footer. Its read options come from
+    * `conf`: the options' default builder would load a fresh Hadoop
+    * configuration, parsing the default and site XML files, on every open.
+    */
+  private def openFooter(conf: Configuration, f: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf), HadoopReadOptions.builder(conf).build())
+
   /** Total row count of the parquet files among `paths` from their
     * footers alone (driver-side metadata reads; -1 if any footer fails —
     * callers treat unknown as non-empty).
@@ -122,7 +130,7 @@ object ZoneMaps {
     try {
       var total = 0L
       paths.filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val reader = openFooter(conf, f)
         try reader.getFooter.getBlocks.forEach(b => total += b.getRowCount)
         finally reader.close()
       }
@@ -139,7 +147,7 @@ object ZoneMaps {
     try {
       import scala.jdk.CollectionConverters._
       val perChunk = paths.filter(_.getName.endsWith(".parquet")).flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val reader = openFooter(conf, f)
         try reader.getFooter.getBlocks.asScala.toSeq.map { b =>
           b.getColumns.asScala.find { cc =>
             val pp = cc.getPath.toArray
@@ -156,7 +164,7 @@ object ZoneMaps {
       : (Seq[(String, (Char, Any, Any))], Set[String]) = {
     val acc = scala.collection.mutable.LinkedHashMap[String, (Char, Any, Any)]()
     val dead = scala.collection.mutable.Set[String]()
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    val reader = openFooter(conf, f)
     try {
       reader.getFooter.getBlocks.forEach { block =>
         block.getColumns.forEach { cc =>

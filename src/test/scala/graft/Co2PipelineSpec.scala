@@ -599,4 +599,20 @@ class Co2PipelineSpec extends AnyFunSuite {
     p.runPipeline(feed.toString)
     assertMinMaxCurrent(p)
   }
+
+  test("a one-row day's load starts at most 2 Spark jobs, and each raw and stream part is one file") {
+    val dir = Files.createTempDirectory("co2_load_jobs_")
+    val p = Co2Pipeline(spark, dir.resolve("warehouse").toString)
+    val feed = dir.resolve("feed.txt")
+    val rows = writeFeed(feed, LocalDate.of(2019, 1, 1), LocalDate.of(2021, 1, 1))
+    assert(p.load(feed.toString) == rows) // the backfill
+    appendFeed(feed, "2021 1 1 2021.001 401.25")
+    var loaded = -1L
+    val jobs = TestSpark.jobsStartedBy { loaded = p.load(feed.toString) }
+    assert(loaded == 1 && jobs <= 2, s"$loaded rows in $jobs jobs")
+    Seq(p.raw, p.feed.log).foreach { t =>
+      val parts = t.state.get.parts
+      assert(parts.length == 2 && parts.forall(_.files.length == 1), s"${t.root}: $parts")
+    }
+  }
 }
