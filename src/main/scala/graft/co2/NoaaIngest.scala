@@ -12,9 +12,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** NOAA Mauna Loa feed ingestion: the reference's loader
-  * (/root/reference/udfs_and_spoc/loading_co2_data_sp/loading_data_sp/
-  * function.py:109-193 and scripts/raw data loading and stream creation/
-  * raw_co2_data.py:77-95).
+  * (udfs_and_spoc/loading_co2_data_sp/loading_data_sp/function.py:109-193
+  * and scripts/raw data loading and stream creation/raw_co2_data.py:77-95).
   *
   * The feed is one small text document, which the reference parses in one
   * pandas process. It is parsed here on the driver, in one pass that also
